@@ -51,22 +51,24 @@ def agg_state(
     )
 
 
+def merge_aggs() -> list:
+    """The merge step's aggregates over ``prev ∪ delta`` grouped by the
+    state keys (also the ``aggs`` of a streaming ``apply_delta`` fold)."""
+    return [
+        F.sum("n_rows").cast("long").alias("n_rows"),
+        F.sum("sum_cents").cast("long").alias("sum_cents"),
+        F.min("min_value").alias("min_value"),
+        F.max("max_value").alias("max_value"),
+    ]
+
+
 def merge_agg_state(
     prev: DataFrame, delta: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
     """Fold a delta state into the previous state — the algebra's merge
     step. Both inputs must share the state schema; new keys appear,
     existing keys combine."""
-    return (
-        prev.unionByName(delta)
-        .groupBy(*keys)
-        .agg(
-            F.sum("n_rows").cast("long").alias("n_rows"),
-            F.sum("sum_cents").cast("long").alias("sum_cents"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
-    )
+    return prev.unionByName(delta).groupBy(*keys).agg(*merge_aggs())
 
 
 def finalize(state: DataFrame) -> DataFrame:

@@ -34,6 +34,10 @@ def get_spark(app_name: str = "ifds-spark", master: str | None = None) -> SparkS
     ``spark.sql.shuffle.partitions`` defaults to the local core count —
     on a real cluster leave AQE's coalescing to right-size post-shuffle
     partitions instead of hand-tuning.
+
+    ANSI mode is pinned on, not assumed from the Spark default: integer
+    overflow must fail loudly (``betweenness_sampled``'s BIGINT σ/δ
+    path counts rely on it), never wrap around.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -45,6 +49,7 @@ def get_spark(app_name: str = "ifds-spark", master: str | None = None) -> SparkS
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

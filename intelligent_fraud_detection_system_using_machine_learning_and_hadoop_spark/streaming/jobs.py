@@ -29,22 +29,436 @@ from ..session import enable_nanos_reads
 _sink_ids = count()
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming source over the events parquet, with ``ts`` normalized
-    to session-timezone TIMESTAMP by the same rules as the batch reader
-    (bigint nanos → µs; TIMESTAMP_NTZ → TIMESTAMP, value-identical under
-    the UTC session tz) so batch and stream plans are interchangeable
-    and ``withWatermark`` is always legal."""
+# ---------------------------------------------------------------------------
+# The drain kit. Every availableNow job below is a source
+# (:func:`_table_stream` or :func:`_split_stream`), one :func:`_drain`,
+# and — for the foreachBatch folds — one :class:`_ParquetFoldState`.
+# ---------------------------------------------------------------------------
+
+
+def _drain(
+    stream: DataFrame, label: str = "drain", mode: str = "append", fold=None
+) -> DataFrame | None:
+    """Run ``stream`` under an availableNow trigger and block until every
+    available input is processed. With ``fold``, each micro-batch goes
+    to ``foreachBatch(fold)`` and nothing is returned. Otherwise the
+    rows land in a fresh memory sink ``{label}_sink_{n}`` written in
+    output ``mode``, and that sink's table is returned."""
+    w, name = stream.writeStream, None
+    if fold is None:
+        name = f"{label}_sink_{next(_sink_ids)}"
+        w = w.format("memory").queryName(name).outputMode(mode)
+    else:
+        w = w.foreachBatch(fold)
+    w.trigger(availableNow=True).start().awaitTermination()
+    return stream.sparkSession.table(name) if name else None
+
+
+def _table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One testdata table's parquet file as a stream (a single
+    micro-batch under availableNow). The source is declared with the
+    file's raw schema; events' ``ts`` is then normalized by the batch
+    reader's rules (bigint nanos → µs; TIMESTAMP_NTZ → TIMESTAMP,
+    value-identical under the UTC session tz), so batch and stream
+    plans are interchangeable and ``withWatermark`` is always legal."""
     from ..sources.readers import normalize_event_ts
 
     enable_nanos_reads(spark)
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).schema
     stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
+        spark.readStream.schema(raw)
+        .option("pathGlobFilter", f"{table}.parquet")
         .parquet(sf_dir)
     )
-    return normalize_event_ts(stream)
+    return normalize_event_ts(stream) if table == "events" else stream
+
+
+def _src_fingerprint(path: str) -> str:
+    """Content fingerprint of a stream-split source (cache.py::
+    dataset_fingerprint with an existence fallback). Every split cache
+    key mixes it in: a fixture regenerated in place at the same path
+    must invalidate its cached split, or the stream would read the old
+    generation's rows while the batch twin reads the new ones."""
+    from ..cache import dataset_fingerprint
+
+    try:
+        return dataset_fingerprint(path)
+    except OSError:
+        return "nofp"
+
+
+def _split_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    n_files: int,
+    by: str | None = None,
+    ordered: bool = False,
+    where: str | None = None,
+    cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """A testdata table (``read_table`` rows, optionally filtered by the
+    SQL predicate ``where`` and projected to ``cols``) split into
+    ``n_files`` parquet files and streamed one file per micro-batch
+    (``maxFilesPerTrigger=1``), so fold state must survive across
+    genuine batches, not just within one.
+
+    Layouts:
+
+    * ``by=None`` — round-robin split;
+    * ``by=col`` — hash split on ``col``: every row of a key lands in
+      one file, so a per-key expansion (an order's co-order pairs) is
+      complete within the one micro-batch that carries it;
+    * ``by=col, ordered=True`` — range split on ``col``, sorted within
+      each file, with file mtimes staggered in range order. The file
+      source schedules oldest-mtime-first, so micro-batches arrive in
+      ``col`` order (a real feed's ingestion order), and
+      ``repartitionByRange`` assigns equal keys to one partition, so a
+      same-second (same-day) tie group never splits across
+      micro-batches — the property the trailing-window and lag folds
+      need to reproduce their batch RANGE frames exactly.
+
+    The split is cached under ``tempfile.gettempdir()``, keyed by every
+    layout argument plus the source's content fingerprint, and reused
+    only once Spark's ``_SUCCESS`` marker has committed it."""
+    import hashlib
+    import tempfile
+    import time
+
+    from ..sources.readers import read_table
+
+    src = read_table(spark, sf_dir, table)
+    if where is not None:
+        src = src.where(where)
+    if cols:
+        src = src.select(*cols)
+    fp = _src_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
+    sig = f"{sf_dir}:{table}:{n_files}:{by}:{ordered}:{where}:{cols}:{fp}"
+    kind = "ordered" if ordered else "stream"
+    out = os.path.join(
+        tempfile.gettempdir(),
+        f"ifds_{table}_{kind}_{hashlib.md5(sig.encode()).hexdigest()[:10]}",
+    )
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        if ordered:
+            parts = src.repartitionByRange(n_files, by).sortWithinPartitions(by)
+        elif by is not None:
+            parts = src.repartition(n_files, by)
+        else:
+            parts = src.repartition(n_files)
+        parts.write.mode("overwrite").parquet(out)
+        if ordered:
+            # part-00000 holds the lowest range under an ascending
+            # repartitionByRange
+            base = time.time() - 3600
+            names = sorted(f for f in os.listdir(out) if f.startswith("part-"))
+            for i, f in enumerate(names):
+                os.utime(os.path.join(out, f), (base + i * 60, base + i * 60))
+    return (
+        spark.readStream.schema(src.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(out)
+    )
+
+
+class _ParquetFoldState:
+    """Executor/disk-resident state store for the foreachBatch folds.
+    The running state is a PARQUET SNAPSHOT, one versioned directory
+    per applied batch id, committed by Spark's own ``_SUCCESS`` marker,
+    so per-batch merges are distributed DataFrame work end-to-end and
+    NO per-entity row ever transits the driver (the spy test in
+    tests/test_ml_streaming.py asserts exactly that). This is the
+    plain-parquet form of the Delta/state-table pattern; the folds are
+    keyed merges, for which snapshot-out = groupBy(prev ∪ delta) is
+    the exact algebra.
+
+    Exactly-once under foreachBatch's at-least-once retries: the last
+    applied batch id IS the latest committed snapshot version, so
+    (a) a replay of an applied batch sees ``last_batch() >= batch_id``
+    and no-ops, (b) a crash mid-write leaves a version directory
+    without ``_SUCCESS`` that ``last_batch()`` ignores — the same-id
+    retry redoes the work against the previous committed snapshot —
+    and (c) guard and state survive QUERY restarts within one driver
+    process always, and a full driver restart only when constructed
+    with a stable ``path`` (the default tempdir is per-construction).
+    Superseded snapshots are pruned after each commit, so disk holds
+    ≤ 2 versions (current + the uncommitted scratch of a writing
+    batch).
+
+    100 TB shape: state is |entities| rows in parquet. Keyed folds go
+    through :meth:`apply_delta`, which hash-buckets the snapshot on the
+    fold key so a micro-batch reads and rewrites ONLY the buckets its
+    keys land in — O(|delta| + touched-buckets) per batch, not
+    O(|state|). The whole-snapshot :meth:`write` remains for folds
+    whose merge is NOT per-key (the incremental-CC fold: component
+    merging is a global closure over prev ∪ delta, so no key bucketing
+    can confine it).
+
+    Folds that also EMIT rows per batch (the hits of the duplicate-
+    charge and impossible-velocity screens) commit them through the
+    per-batch output log (:meth:`log` / :meth:`read_log`): one
+    ``v{batch_id}`` directory per batch, committed by ``_SUCCESS``.
+    The log is committed BEFORE the batch's state fold, so a replay
+    after a crash between the two skips the committed output and
+    re-applies only the state buckets the per-bucket guard left open
+    — no double emission, no stale read.
+
+    With the default ``path=None`` the state lives in a fresh
+    ``ifds_fold_state_{prefix}_*`` tempdir and the log in
+    ``ifds_{prefix}_hits_*``, both removed at interpreter exit, so
+    drained-and-abandoned invocations don't leak one dir each. A
+    stable ``path`` holds the state and, under ``hits/``, the log. The
+    layout is plain parquet + _SUCCESS markers, so a cluster
+    deployment points ``path`` at shared storage."""
+
+    #: buckets for apply_delta's keyed layout. Sized by DELTA LOCALITY,
+    #: not raw key count (measured, SCALING.md): more buckets pay off
+    #: only when a micro-batch's key footprint is a small fraction of
+    #: state (narrow live feeds over a large entity universe) — a
+    #: drain-everything batch touches every bucket per batch, making
+    #: extra buckets pure snapshot-commit overhead (8→64 was 2.6×
+    #: SLOWER at sf3). Keep small for availableNow drains; raise only
+    #: when touched-buckets ≪ n_buckets holds in production.
+    DEFAULT_BUCKETS = 8
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        prefix: str,
+        path: str | None = None,
+        n_buckets: int = DEFAULT_BUCKETS,
+    ):
+        self._spark = spark
+        self._prefix = prefix
+        self.n_buckets = n_buckets
+        if path is not None:
+            os.makedirs(path, exist_ok=True)
+            self.dir = path
+            self._log_dir = os.path.join(path, "hits")
+        else:
+            self.dir = self._tempdir(f"ifds_fold_state_{prefix}_")
+            self._log_dir = None
+
+    @staticmethod
+    def _tempdir(prefix: str) -> str:
+        import atexit
+        import shutil
+        import tempfile
+
+        d = tempfile.mkdtemp(prefix=prefix)
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        return d
+
+    @staticmethod
+    def _versions(d: str) -> list[int]:
+        if not os.path.isdir(d):
+            return []
+        return sorted(
+            int(name[1:])
+            for name in os.listdir(d)
+            if name.startswith("v")
+            and os.path.exists(os.path.join(d, name, "_SUCCESS"))
+        )
+
+    def _committed(self) -> list[int]:
+        return self._versions(self.dir)
+
+    def _bucket_dir(self, k: int) -> str:
+        return os.path.join(self.dir, f"b{k}")
+
+    def _bucket_last(self, k: int) -> int:
+        vs = self._versions(self._bucket_dir(k))
+        return vs[-1] if vs else -1
+
+    def last_batch(self) -> int:
+        """Highest applied batch id across both layouts. For bucketed
+        folds this is a PROGRESS indicator, not a replay guard — a
+        crash mid-commit leaves buckets at mixed versions, which is
+        exactly why :meth:`apply_delta` guards PER BUCKET."""
+        whole = self._committed()
+        per_bucket = [self._bucket_last(k) for k in range(self.n_buckets)]
+        return max([whole[-1] if whole else -1, *per_bucket])
+
+    def read(self) -> DataFrame | None:
+        """Latest committed state, or None before the first commit —
+        the whole snapshot for write()-mode folds, the union of every
+        bucket's latest committed version for apply_delta()-mode."""
+        whole = self._committed()
+        if whole:
+            return self._spark.read.parquet(
+                os.path.join(self.dir, f"v{whole[-1]}")
+            )
+        paths = [
+            os.path.join(self._bucket_dir(k), f"v{self._bucket_last(k)}")
+            for k in range(self.n_buckets)
+            if self._bucket_last(k) >= 0
+        ]
+        if not paths:
+            return None
+        return self._spark.read.parquet(*paths)
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        """Commit ``df`` as the post-``batch_id`` WHOLE snapshot, then
+        prune superseded versions (best-effort; stale dirs are
+        harmless). O(|state|) per batch — only for folds whose merge
+        is not keyed (incremental CC); keyed folds use
+        :meth:`apply_delta`."""
+        import shutil
+
+        df.write.mode("overwrite").parquet(
+            os.path.join(self.dir, f"v{batch_id}")
+        )
+        for v in self._committed():
+            if v < batch_id:
+                shutil.rmtree(
+                    os.path.join(self.dir, f"v{v}"), ignore_errors=True
+                )
+
+    def apply_delta(
+        self, delta: DataFrame, batch_id: int, key_cols, aggs
+    ) -> None:
+        """Fold one batch's ``delta`` into the bucketed state. The merge
+        is ``prev.unionByName(delta).groupBy(*key_cols).agg(*aggs)``, or
+        the key-set union ``prev.unionByName(delta).distinct()`` when
+        ``aggs`` is empty (then ``delta`` carries only the key columns);
+        a bucket without previous state takes the delta as is. It runs
+        over ONLY the buckets the delta's keys hash to — per-batch cost
+        O(|delta| + touched-buckets), never O(|state|). Group keys never
+        span buckets, so the bucket-restricted merge ≡ the global merge
+        restricted to those buckets.
+
+        Mechanics: the delta is written hash-partitioned by
+        ``_kb = pmod(xxhash64(keys), n_buckets)`` (one extra O(|delta|)
+        write; its directory listing names the touched buckets WITHOUT
+        any driver collect — the fold spy test stays strict); previous
+        state is read from exactly the touched buckets' latest
+        committed dirs; the merged result lands per-bucket as
+        ``b{k}/v{batch_id}`` with its own _SUCCESS marker. Exactly-once
+        under foreachBatch's at-least-once retries is PER BUCKET: a
+        replayed batch skips buckets already committed at ≥ batch_id
+        and redoes only the ones a crash left behind, against their
+        previous committed versions."""
+        import shutil
+
+        kb = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(self.n_buckets)).cast(
+            "int"
+        )
+        scratch = os.path.join(self.dir, f"_delta_v{batch_id}")
+        delta.withColumn("_kb", kb).write.mode("overwrite").partitionBy(
+            "_kb"
+        ).parquet(scratch)
+        # NULL fold keys are SAFE here, by construction: xxhash64
+        # skips null inputs and returns its seed (42), so _kb is never
+        # null and no __HIVE_DEFAULT_PARTITION__ dir can appear
+        # (pinned by tests/test_ml_streaming.py null-key fold test).
+        # The parse guard below turns any future violation of that
+        # invariant into a named error instead of an opaque int().
+        touched = []
+        for name in os.listdir(scratch):
+            if not name.startswith("_kb="):
+                continue
+            try:
+                touched.append(int(name.split("=")[1]))
+            except ValueError:
+                raise ValueError(
+                    f"_ParquetFoldState.apply_delta: non-integer bucket "
+                    f"partition {name!r} under {scratch} — the _kb "
+                    f"expression must never be null/non-int"
+                ) from None
+        touched.sort()
+        todo = [k for k in touched if self._bucket_last(k) < batch_id]
+        if todo:
+            delta_todo = self._spark.read.option("basePath", scratch).parquet(
+                *[os.path.join(scratch, f"_kb={k}") for k in todo]
+            ).drop("_kb")
+            prev_paths = [
+                os.path.join(self._bucket_dir(k), f"v{self._bucket_last(k)}")
+                for k in todo
+                if self._bucket_last(k) >= 0
+            ]
+            merged = delta_todo
+            if prev_paths:
+                both = self._spark.read.parquet(*prev_paths).unionByName(delta_todo)
+                merged = both.groupBy(*key_cols).agg(*aggs) if aggs else both.distinct()
+            out = os.path.join(self.dir, f"_merge_v{batch_id}")
+            merged.withColumn("_kb", kb).write.mode("overwrite").partitionBy("_kb").parquet(out)
+            for k in todo:
+                part = os.path.join(out, f"_kb={k}")
+                if not os.path.isdir(part):
+                    # a keyed merge of a non-empty bucket delta can't
+                    # produce zero rows; should it ever, leaving the
+                    # old version is the additive-identity behavior
+                    continue
+                dest = os.path.join(self._bucket_dir(k), f"v{batch_id}")
+                os.makedirs(self._bucket_dir(k), exist_ok=True)
+                # crash window: a crash BETWEEN the move and the
+                # _SUCCESS touch leaves an uncommitted dest;
+                # _bucket_last ignores it (no marker) so the retry
+                # re-merges — but a bare move would then nest the fresh
+                # files INSIDE the stale dir as a spurious '_kb='
+                # subdir. Replace, never nest.
+                shutil.rmtree(dest, ignore_errors=True)
+                shutil.move(part, dest)
+                open(os.path.join(dest, "_SUCCESS"), "w").close()
+                for v in self._versions(self._bucket_dir(k)):
+                    if v < batch_id:
+                        shutil.rmtree(
+                            os.path.join(self._bucket_dir(k), f"v{v}"),
+                            ignore_errors=True,
+                        )
+            shutil.rmtree(out, ignore_errors=True)
+        shutil.rmtree(scratch, ignore_errors=True)
+
+    def read_or_empty(self, schema: str) -> DataFrame:
+        """Latest committed snapshot, or an empty frame with the fold's
+        state schema — for drains where no batch carried state-changing
+        rows (e.g. a conversion-free attribution stream)."""
+        df = self.read()
+        return df if df is not None else self._spark.createDataFrame([], schema)
+
+    def _log_path(self) -> str:
+        if self._log_dir is None:
+            self._log_dir = self._tempdir(f"ifds_{self._prefix}_hits_")
+        return self._log_dir
+
+    def log(self, batch_id: int, rows) -> None:
+        """Commit ``rows()`` as batch ``batch_id``'s output unless that
+        version is already committed (a replay then builds nothing).
+        ``overwrite`` replaces an uncommitted leftover of a crashed
+        attempt rather than nesting inside it."""
+        path = os.path.join(self._log_path(), f"v{batch_id}")
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            rows().write.mode("overwrite").parquet(path)
+
+    def read_log(self, schema: str) -> DataFrame:
+        """Union of every committed batch output, or an empty frame of
+        ``schema`` when none is committed; uncommitted versions are
+        ignored."""
+        d = self._log_path()
+        paths = [os.path.join(d, f"v{v}") for v in self._versions(d)]
+        if not paths:
+            return self._spark.createDataFrame([], schema)
+        return self._spark.read.parquet(*paths)
+
+
+def _fold_drain(
+    stream: DataFrame, prefix: str, keys, aggs, delta, schema: str
+) -> DataFrame:
+    """Drain ``stream`` through one keyed fold: each micro-batch's
+    ``delta(batch_df)`` merges into a fresh ``_ParquetFoldState`` via
+    ``apply_delta(…, keys, aggs)``. Returns the drained state, or an
+    empty frame of ``schema`` when no batch committed any."""
+    state = _ParquetFoldState(stream.sparkSession, prefix)
+    _drain(stream, fold=lambda b, i: state.apply_delta(delta(b), i, keys, aggs))
+    return state.read_or_empty(schema)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming source over the events parquet, with ``ts`` normalized
+    to session-timezone TIMESTAMP by the batch reader's rules (see
+    :func:`_table_stream`)."""
+    return _table_stream(spark, sf_dir, "events")
 
 
 def stream_events_hourly(
@@ -72,16 +486,7 @@ def stream_events_hourly(
             F.sum(F.col("value").cast("decimal(12,2)")).alias("sum_value_dec"),
         )
     )
-    name = f"events_hourly_sink_{next(_sink_ids)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(agg, "events_hourly", "complete").select(
         F.col("w.start").alias("hour_ts"),
         "event_type",
         "n",
@@ -114,50 +519,7 @@ def stream_score_claims(
         scored = score_claims(batch_df, cfg)
         scored.write.mode("append").parquet(output_dir)
 
-    q = stream.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
-
-
-def _src_fingerprint(path: str) -> str:
-    """Content fingerprint of a stream-split source (cache.py::
-    dataset_fingerprint with an existence fallback), mixed into every
-    split cache key: a fixture REGENERATED IN PLACE (tools/gen_sf.py —
-    the r18 value-domain rebuild) must invalidate the cached split, or
-    the stream reads last generation's data while the batch twin reads
-    this one's (caught live in the r18 scaling run: the drained twin
-    returned the r17 fixture's saturated 48105 rows against a batch
-    count of 242220)."""
-    from ..cache import dataset_fingerprint
-
-    try:
-        return dataset_fingerprint(path)
-    except OSError:
-        return "nofp"
-
-
-def _events_multifile_dir(spark: SparkSession, sf_dir: str, n_files: int = 8) -> str:
-    """Materialize the events table as n parquet files in a temp dir so
-    maxFilesPerTrigger=1 yields a genuine multi-micro-batch stream
-    (state must survive across batches, not just within one)."""
-    import hashlib
-    import tempfile
-
-    # v2: ts normalized to TIMESTAMP before the rewrite (invalidates
-    # caches written from raw bigint/NTZ encodings); the fingerprint
-    # invalidates on fixture regeneration
-    fp = _src_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.md5(f"{sf_dir}:{n_files}:v2:{fp}".encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ifds_events_stream_{key}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        from ..sources.readers import normalize_event_ts
-
-        enable_nanos_reads(spark)
-        df = normalize_event_ts(
-            spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        )
-        df.repartition(n_files).write.mode("overwrite").parquet(out)
-    return out
+    _drain(stream, fold=handle)
 
 
 def stream_user_stats_stateful(
@@ -183,15 +545,7 @@ def stream_user_stats_stateful(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql import types as T
 
-    from ..sources.readers import normalize_event_ts
-
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _split_stream(spark, sf_dir, "events", n_files)
 
     out_type = T.StructType(
         [
@@ -229,20 +583,11 @@ def stream_user_stats_stateful(
     emitted = stream.groupBy("user_id").applyInPandasWithState(
         update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"user_stats_sink_{next(_sink_ids)}"
-    q = (
-        emitted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    all_rows = _drain(emitted, "user_stats", "update")
     # keep, per user, the emission with the highest cumulative count —
     # that is the final state (counts are strictly monotone per batch)
     from pyspark.sql import Window as W
 
-    all_rows = spark.table(name)
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         all_rows.withColumn("_rn", F.row_number().over(w))
@@ -260,16 +605,7 @@ def stream_distinct_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct = events.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    name = f"distinct_sink_{next(_sink_ids)}"
-    q = (
-        distinct.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(distinct, "distinct")
 
 
 def stream_sessionize(
@@ -288,71 +624,10 @@ def stream_sessionize(
         .groupBy(F.session_window("ts", gap).alias("sw"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"session_sink_{next(_sink_ids)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(agg, "session").select(
         "user_id",
         F.col("sw.start").alias("session_start"),
         "n_events",
-    )
-
-
-def _ordered_events_source(
-    spark: SparkSession, sf_dir: str, n_files: int
-) -> DataFrame:
-    """TIME-ORDERED multi-file streaming source over the events table:
-    the parquet is split by ts range into ``n_files`` parts with
-    staggered mtimes so the file source's oldest-first scheduling
-    delivers micro-batches in event-time order (the ingestion pattern
-    of a real feed). ``repartitionByRange`` assigns EQUAL ts keys to
-    one partition, so a same-second tie group never splits across
-    micro-batches — the property the stateful trailing-window jobs
-    (velocity, rolling anomaly) rely on to reproduce their batch RANGE
-    frames exactly. Cached per (sf_dir, n_files); shared by every
-    ordered-ingestion job."""
-    from ..sources.readers import normalize_event_ts
-
-    enable_nanos_reads(spark)
-    raw = normalize_event_ts(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    )
-
-    import hashlib
-    import tempfile
-
-    fp = _src_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.md5(
-        f"{sf_dir}:ordered:{n_files}:v2:{fp}".encode()
-    ).hexdigest()[:10]
-    src = os.path.join(tempfile.gettempdir(), f"ifds_events_ordered_{key}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        raw.repartitionByRange(n_files, "ts").sortWithinPartitions(
-            "ts"
-        ).write.mode("overwrite").parquet(src)
-        # the file source schedules micro-batches oldest-mtime-first;
-        # stagger mtimes so arrival order == ts-range order (part-00000
-        # holds the lowest ts range under repartitionByRange asc)
-        import time as _time
-
-        base = _time.time() - 3600
-        parts = sorted(
-            f for f in os.listdir(src) if f.startswith("part-")
-        )
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(src, f), (base + i * 60, base + i * 60))
-
-    return (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
     )
 
 
@@ -384,7 +659,9 @@ def stream_split_transactions(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql import types as T
 
-    stream = _ordered_orders_source(spark, sf_dir, n_files).select(
+    stream = _split_stream(
+        spark, sf_dir, "orders", n_files, by="o_orderdate", ordered=True
+    ).select(
         "o_orderkey",
         "o_custkey",
         F.unix_date(F.col("o_orderdate").cast("date")).alias("day"),
@@ -476,16 +753,7 @@ def stream_split_transactions(
     emitted = stream.groupBy("o_custkey").applyInPandasWithState(
         update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"split_tx_sink_{next(_sink_ids)}"
-    q = (
-        emitted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(emitted, "split_tx", "update")
 
 
 def stream_rolling_anomaly(
@@ -511,7 +779,7 @@ def stream_rolling_anomaly(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql import types as T
 
-    stream = _ordered_events_source(spark, sf_dir, n_files)
+    stream = _split_stream(spark, sf_dir, "events", n_files, by="ts", ordered=True)
 
     out_type = T.StructType(
         [
@@ -540,7 +808,7 @@ def stream_rolling_anomaly(
         # concat the whole iterator before ONE sort — >10k rows per key
         # per batch arrive as multiple arbitrary-order pandas chunks
         # (arrow.maxRecordsPerBatch), and per-chunk sorting would break
-        # the walk across chunk boundaries (ADVICE r12 pattern)
+        # the walk across chunk boundaries
         chunks = [pdf for pdf in pdf_iter if len(pdf)]
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True).sort_values(
@@ -568,16 +836,7 @@ def stream_rolling_anomaly(
     emitted = stream.groupBy("user_id").applyInPandasWithState(
         update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"rolling_anomaly_sink_{next(_sink_ids)}"
-    q = (
-        emitted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(emitted, "rolling_anomaly", "update")
 
 
 def stream_velocity_flags(
@@ -588,7 +847,7 @@ def stream_velocity_flags(
     count_threshold: int = 3,
     cents_threshold: int = 200_00,
 ) -> DataFrame:
-    """STREAMING trailing-window velocity screen (VERDICT r11 item 4):
+    """STREAMING trailing-window velocity screen:
     the live-deployment form of fraud_stats.py::velocity_flags — the
     screen the reference's scoring loop would run as a real feed. Per
     user, ``applyInPandasWithState`` keeps exactly the trailing-hour
@@ -619,7 +878,9 @@ def stream_velocity_flags(
     # epoch/cents become exact longs JVM-side (ts.cast(long) truncates
     # = floor for >=1970, the batch/oracle convention) so the Python
     # state fn never touches tz-aware timestamps or floats
-    stream = _ordered_events_source(spark, sf_dir, n_files).select(
+    stream = _split_stream(
+        spark, sf_dir, "events", n_files, by="ts", ordered=True
+    ).select(
         "event_id",
         "user_id",
         F.col("ts").cast("long").alias("epoch_s"),
@@ -654,14 +915,13 @@ def stream_velocity_flags(
             epochs, cents = deque(), deque()
         # running window total: O(state) ONCE per batch at restore,
         # then O(1) amortized per event (popleft on evict, add on
-        # append) — the old per-tie-group sum(cents) + list slice was
-        # O(window-state) per tie group (VERDICT r12/r13 carried item)
+        # append), never O(window-state) per tie group
         total = sum(cents)
         uid = int(key_[0])
         out = {k: [] for k in ("eid", "s", "n", "c")}
         # concat before the one sort — a tie-second split across
         # arrow chunks would otherwise fracture its peer group
-        # (ADVICE r12 pattern; see stream_dormancy_flags)
+        # (see stream_dormancy_flags)
         chunks = [pdf for pdf in pdf_iter if len(pdf)]
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True).sort_values(
@@ -710,16 +970,7 @@ def stream_velocity_flags(
     emitted = stream.groupBy("user_id").applyInPandasWithState(
         update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"velocity_sink_{next(_sink_ids)}"
-    q = (
-        emitted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(emitted, "velocity", "update")
 
 
 # ---------------------------------------------------------------------------
@@ -933,16 +1184,7 @@ def stream_stream_click_purchase(
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
         "inner",
     ).select("click_id", "purchase_id")
-    name = f"ss_join_sink_{next(_sink_ids)}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain(joined, "ss_join")
 
 
 def _sentinel_staged_dir(
@@ -964,12 +1206,7 @@ def _sentinel_staged_dir(
     import shutil
     import tempfile
 
-    from ..cache import dataset_fingerprint
-
-    try:
-        fp = dataset_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        fp = "nofp"
+    fp = _src_fingerprint(os.path.join(sf_dir, "events.parquet"))
     sig = hashlib.md5(
         f"{sf_dir}:{side}:{sentinel_ts}:{fp}:v1".encode()
     ).hexdigest()[:10]
@@ -1102,19 +1339,10 @@ def stream_stream_click_purchase_left_outer(
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
         how,
     ).select("click_id", "purchase_id")
-    name = f"ss_louter_sink_{next(_sink_ids)}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # drop sentinel artifacts on EITHER side, null-safely: real outer
     # rows carry NULL on exactly one side; sentinels carry negative ids
     # (incl. sentinel-sentinel self-matches, whose timestamps coincide)
-    return spark.table(name).where(
+    return _drain(joined, "ss_louter").where(
         (F.col("click_id").isNull() | (F.col("click_id") >= 0))
         & (F.col("purchase_id").isNull() | (F.col("purchase_id") >= 0))
     )
@@ -1159,16 +1387,7 @@ def stream_static_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
     )
     joined = ev.join(F.broadcast(cust), "user_id", "left")
-    name = f"static_enrich_sink_{next(_sink_ids)}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(joined, "static_enrich").select(
         "event_id", "user_id", "event_type", "c_name", "c_mktsegment"
     )
 
@@ -1199,21 +1418,12 @@ def stream_topk_trending(
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"topk_trending_sink_{next(_sink_ids)}"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    sink = _drain(counts, "topk_trending", "complete")
     rank_w = W.partitionBy("hour_ts").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )
     return (
-        spark.table(name)
-        .select(F.col("w.start").alias("hour_ts"), "event_type", "n_events")
+        sink.select(F.col("w.start").alias("hour_ts"), "event_type", "n_events")
         .withColumn("rnk", F.row_number().over(rank_w).cast("long"))
         .where(F.col("rnk") <= k)
     )
@@ -1230,23 +1440,8 @@ def stream_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, so the query shares the batch oracle byte-for-byte."""
     from ..plans.data_ops import pii_scan_frame
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    out = pii_scan_frame(stream)
-    name = f"pii_redact_sink_{next(_sink_ids)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    stream = _table_stream(spark, sf_dir, "documents")
+    return _drain(pii_scan_frame(stream), "pii_redact")
 
 
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1271,12 +1466,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     idx = snapshot_digest_index(d.where(F.col("doc_id") % 10 != 3))
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _table_stream(spark, sf_dir, "documents")
     delta = stream.where(F.col("doc_id") % 10 == 3).select(
         "doc_id",
         F.md5(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")).alias(
@@ -1288,264 +1478,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id", "content_md5", F.coalesce(F.col("_hit"), F.lit(False)).alias("in_snapshot")
     )
-    name = f"incr_dedup_sink_{next(_sink_ids)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-class _ParquetFoldState:
-    """Executor/disk-resident state store for foreachBatch additive
-    folds (VERDICT r12 item 3: state residence). Replaces the
-    driver-resident ``delta.collect()`` dict the MV / attribution /
-    structuring / peer-outlier / incremental-CC folds used to carry:
-    the running state is a PARQUET SNAPSHOT, one versioned directory
-    per applied batch id, committed by Spark's own ``_SUCCESS`` marker
-    — so per-batch merges are distributed DataFrame work end-to-end
-    and NO per-entity row ever transits the driver (the pytest at
-    tests/test_ml_streaming.py asserts exactly that). This is the
-    plain-parquet form of the Delta/state-table pattern the verdict
-    prescribes; ``merge_upsert`` is the right tool for keyed upserts,
-    but these folds are pure additive groupBy merges, for which
-    snapshot-out = groupBy(prev ∪ delta) is the exact algebra.
-
-    Exactly-once under foreachBatch's at-least-once retries comes out
-    STRONGER than the in-memory guard it replaces: the last applied
-    batch id IS the latest committed snapshot version, so (a) a replay
-    of an applied batch sees ``last_batch() >= batch_id`` and no-ops,
-    (b) a crash mid-write leaves a version directory without
-    ``_SUCCESS`` that ``last_batch()`` ignores — the same-id retry
-    redoes the work against the previous committed snapshot, and (c)
-    guard and state survive QUERY restarts within one driver process
-    always, and a full driver restart when constructed with a stable
-    ``path`` (ADVICE r13: the default tempdir is per-construction, so
-    only the explicit-path form can truthfully claim restart
-    survival). Superseded snapshots are pruned after each commit, so
-    disk holds ≤ 2 versions (current + the uncommitted scratch of a
-    writing batch).
-
-    100 TB shape: state is |entities| rows in parquet. Keyed-additive
-    folds go through :meth:`apply_delta` (VERDICT r13 item 5), which
-    hash-buckets the snapshot on the fold key so a micro-batch reads
-    and rewrites ONLY the buckets its keys land in —
-    O(|delta| + touched-buckets) per batch, not O(|state|). The
-    whole-snapshot :meth:`write` remains for folds whose merge is NOT
-    per-key (the incremental-CC fold: component merging is a global
-    closure over prev ∪ delta, so no key bucketing can confine it).
-
-    Durability (ADVICE r13): pass a stable ``path`` to make state and
-    the replay guard survive a DRIVER RESTART for real — a restarted
-    driver pointed at the same path resumes from the last committed
-    version. With the default ``path=None`` the store is a fresh
-    tempdir: state survives query restarts WITHIN one driver process
-    only, and the directory is removed at interpreter exit (atexit),
-    so drained-and-abandoned invocations don't leak one dir each. The
-    path is driver-visible local FS in this single-box harness; a
-    cluster deployment points it at shared storage (the layout is
-    plain parquet + _SUCCESS markers, nothing driver-local in the
-    format)."""
-
-    #: buckets for apply_delta's keyed layout. Sized by DELTA LOCALITY,
-    #: not raw key count (measured, SCALING r18e): more buckets pay off
-    #: only when a micro-batch's key footprint is a small fraction of
-    #: state (narrow live feeds over a large entity universe) — a
-    #: drain-everything batch touches every bucket per batch, making
-    #: extra buckets pure snapshot-commit overhead (8→64 was 2.6×
-    #: SLOWER at sf3). Keep small for availableNow drains; raise only
-    #: when touched-buckets ≪ n_buckets holds in production.
-    DEFAULT_BUCKETS = 8
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        prefix: str,
-        path: str | None = None,
-        n_buckets: int = DEFAULT_BUCKETS,
-    ):
-        import atexit
-        import shutil
-        import tempfile
-
-        self._spark = spark
-        self.n_buckets = n_buckets
-        if path is not None:
-            os.makedirs(path, exist_ok=True)
-            self.dir = path
-        else:
-            self.dir = tempfile.mkdtemp(prefix=f"ifds_fold_state_{prefix}_")
-            atexit.register(shutil.rmtree, self.dir, ignore_errors=True)
-
-    @staticmethod
-    def _versions(d: str) -> list[int]:
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(name[1:])
-            for name in os.listdir(d)
-            if name.startswith("v")
-            and os.path.exists(os.path.join(d, name, "_SUCCESS"))
-        )
-
-    def _committed(self) -> list[int]:
-        return self._versions(self.dir)
-
-    def _bucket_dir(self, k: int) -> str:
-        return os.path.join(self.dir, f"b{k}")
-
-    def _bucket_last(self, k: int) -> int:
-        vs = self._versions(self._bucket_dir(k))
-        return vs[-1] if vs else -1
-
-    def last_batch(self) -> int:
-        """Highest applied batch id across both layouts. For bucketed
-        folds this is a PROGRESS indicator, not a replay guard — a
-        crash mid-commit leaves buckets at mixed versions, which is
-        exactly why :meth:`apply_delta` guards PER BUCKET."""
-        whole = self._committed()
-        per_bucket = [self._bucket_last(k) for k in range(self.n_buckets)]
-        return max([whole[-1] if whole else -1, *per_bucket])
-
-    def read(self) -> DataFrame | None:
-        """Latest committed state, or None before the first commit —
-        the whole snapshot for write()-mode folds, the union of every
-        bucket's latest committed version for apply_delta()-mode."""
-        whole = self._committed()
-        if whole:
-            return self._spark.read.parquet(
-                os.path.join(self.dir, f"v{whole[-1]}")
-            )
-        paths = [
-            os.path.join(self._bucket_dir(k), f"v{self._bucket_last(k)}")
-            for k in range(self.n_buckets)
-            if self._bucket_last(k) >= 0
-        ]
-        if not paths:
-            return None
-        return self._spark.read.parquet(*paths)
-
-    def write(self, df: DataFrame, batch_id: int) -> None:
-        """Commit ``df`` as the post-``batch_id`` WHOLE snapshot, then
-        prune superseded versions (best-effort; stale dirs are
-        harmless). O(|state|) per batch — only for folds whose merge
-        is not keyed-additive (incremental CC); keyed folds use
-        :meth:`apply_delta`."""
-        import shutil
-
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.dir, f"v{batch_id}")
-        )
-        for v in self._committed():
-            if v < batch_id:
-                shutil.rmtree(
-                    os.path.join(self.dir, f"v{v}"), ignore_errors=True
-                )
-
-    def apply_delta(self, delta: DataFrame, batch_id: int, key_cols, merge) -> None:
-        """Fold one batch's ``delta`` into the bucketed state:
-        ``merge(prev_or_None, delta)`` runs over ONLY the buckets the
-        delta's keys hash to — per-batch cost O(|delta| +
-        touched-buckets), never O(|state|) (VERDICT r13 item 5). Valid
-        whenever the merge is per-key (groupBy on ``key_cols``): group
-        keys never span buckets, so bucket-restricted merge ≡ global
-        merge restricted to those buckets.
-
-        Mechanics: the delta is written hash-partitioned by
-        ``_kb = pmod(xxhash64(keys), n_buckets)`` (one extra O(|delta|)
-        write; its directory listing names the touched buckets WITHOUT
-        any driver collect — the fold spy test stays strict); previous
-        state is read from exactly the touched buckets' latest
-        committed dirs; the merged result lands per-bucket as
-        ``b{k}/v{batch_id}`` with its own _SUCCESS marker. Exactly-once
-        under foreachBatch's at-least-once retries is PER BUCKET: a
-        replayed batch skips buckets already committed at ≥ batch_id
-        and redoes only the ones a crash left behind, against their
-        previous committed versions."""
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        kb = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(self.n_buckets)).cast(
-            "int"
-        )
-        scratch = os.path.join(self.dir, f"_delta_v{batch_id}")
-        delta.withColumn("_kb", kb).write.mode("overwrite").partitionBy(
-            "_kb"
-        ).parquet(scratch)
-        # NULL fold keys are SAFE here, by construction: xxhash64
-        # skips null inputs and returns its seed (42), so _kb is never
-        # null and no __HIVE_DEFAULT_PARTITION__ dir can appear
-        # (pinned by tests/test_ml_streaming.py null-key fold test).
-        # The parse guard below turns any future violation of that
-        # invariant into a named error instead of an opaque int().
-        touched = []
-        for name in os.listdir(scratch):
-            if not name.startswith("_kb="):
-                continue
-            try:
-                touched.append(int(name.split("=")[1]))
-            except ValueError:
-                raise ValueError(
-                    f"_ParquetFoldState.apply_delta: non-integer bucket "
-                    f"partition {name!r} under {scratch} — the _kb "
-                    f"expression must never be null/non-int"
-                ) from None
-        touched.sort()
-        todo = [k for k in touched if self._bucket_last(k) < batch_id]
-        if todo:
-            delta_todo = self._spark.read.option("basePath", scratch).parquet(
-                *[os.path.join(scratch, f"_kb={k}") for k in todo]
-            ).drop("_kb")
-            prev_paths = [
-                os.path.join(self._bucket_dir(k), f"v{self._bucket_last(k)}")
-                for k in todo
-                if self._bucket_last(k) >= 0
-            ]
-            prev = (
-                self._spark.read.parquet(*prev_paths) if prev_paths else None
-            )
-            merged = merge(prev, delta_todo).withColumn("_kb", kb)
-            out = os.path.join(self.dir, f"_merge_v{batch_id}")
-            merged.write.mode("overwrite").partitionBy("_kb").parquet(out)
-            for k in todo:
-                part = os.path.join(out, f"_kb={k}")
-                if not os.path.isdir(part):
-                    # a keyed-additive merge of a non-empty bucket delta
-                    # can't produce zero rows; if a custom merge filters
-                    # everything out, leaving the old version is the
-                    # additive-identity behavior
-                    continue
-                dest = os.path.join(self._bucket_dir(k), f"v{batch_id}")
-                os.makedirs(self._bucket_dir(k), exist_ok=True)
-                # crash-window repair (ADVICE r14): a crash BETWEEN the
-                # move and the _SUCCESS touch leaves an uncommitted
-                # dest; _bucket_last ignores it (no marker) so the
-                # retry re-merges — but a bare move would then nest the
-                # fresh files INSIDE the stale dir as a spurious
-                # '_kb=' subdir. Replace, never nest.
-                shutil.rmtree(dest, ignore_errors=True)
-                shutil.move(part, dest)
-                open(os.path.join(dest, "_SUCCESS"), "w").close()
-                for v in self._versions(self._bucket_dir(k)):
-                    if v < batch_id:
-                        shutil.rmtree(
-                            os.path.join(self._bucket_dir(k), f"v{v}"),
-                            ignore_errors=True,
-                        )
-            shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(scratch, ignore_errors=True)
-
-    def read_or_empty(self, schema: str) -> DataFrame:
-        """Latest committed snapshot, or an empty frame with the fold's
-        state schema — for drains where no batch carried state-changing
-        rows (e.g. a conversion-free attribution stream)."""
-        df = self.read()
-        return df if df is not None else self._spark.createDataFrame([], schema)
+    return _drain(out, "incr_dedup")
 
 
 def _make_incremental_agg_fold(spark: SparkSession, state: _ParquetFoldState):
@@ -1561,24 +1494,16 @@ def _make_incremental_agg_fold(spark: SparkSession, state: _ParquetFoldState):
     residence contract: the |keys|-row running aggregate lives as a
     parquet snapshot merged by a distributed groupBy — the driver
     never collects a state row."""
-    from ..operators.incremental_agg import agg_state, merge_agg_state
+    from ..operators.incremental_agg import agg_state, merge_aggs
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         delta = agg_state(batch_df, ["event_type"], "value")
-        # Bucketed O(|delta| + touched-buckets) merge (VERDICT r13
-        # item 5); the per-bucket _SUCCESS commit IS the replay guard —
-        # a same-id re-invocation skips committed buckets and retries
-        # only what a crash left behind.
-        state.apply_delta(
-            delta,
-            batch_id,
-            ["event_type"],
-            lambda prev, d: d
-            if prev is None
-            else merge_agg_state(prev, d, ["event_type"]),
-        )
+        # the per-bucket _SUCCESS commit IS the replay guard — a
+        # same-id re-invocation skips committed buckets and retries
+        # only what a crash left behind
+        state.apply_delta(delta, batch_id, ["event_type"], merge_aggs())
 
     return fold
 
@@ -1594,7 +1519,7 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str, n_files: int = 8) -
     foreachBatch's at-least-once retry contract via the last-applied
     batch_id guard (``_make_incremental_agg_fold``).
 
-    State residence (VERDICT r12 item 3): the |keys|-row running
+    State residence: the |keys|-row running
     aggregate lives as a committed parquet snapshot
     (``_ParquetFoldState``), merged per batch by a distributed
     groupBy — no driver collect of state, and both the state and the
@@ -1603,21 +1528,10 @@ def stream_incremental_agg(spark: SparkSession, sf_dir: str, n_files: int = 8) -
     aggregation EXACTLY (the algebra's merge property, which the
     integer-cent sums make bit-true) — the oracle attests that."""
     from ..operators.incremental_agg import finalize
-    from ..sources.readers import normalize_event_ts
 
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
+    stream = _split_stream(spark, sf_dir, "events", n_files)
     state = _ParquetFoldState(spark, "mv")
-    fold = _make_incremental_agg_fold(spark, state)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _drain(stream, fold=_make_incremental_agg_fold(spark, state))
     final = state.read_or_empty(
         "event_type string, n_rows long, sum_cents long, "
         "min_value double, max_value double"
@@ -1639,6 +1553,11 @@ def _make_attribution_fold(
 
     from ..operators.funnel import linear_attribution
 
+    aggs = [
+        F.sum(c).cast("long").alias(c)
+        for c in ("n_touches", "n_conversions", "_cv_q", "_cc_q")
+    ]
+
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         convs = batch_df.where(F.col("event_type") == "purchase")
         if convs.isEmpty():
@@ -1649,25 +1568,10 @@ def _make_attribution_fold(
             ["view", "click"],
             raw=True,
         )
-
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("touch_type")
-                .agg(
-                    F.sum("n_touches").cast("long").alias("n_touches"),
-                    F.sum("n_conversions").cast("long").alias("n_conversions"),
-                    F.sum("_cv_q").cast("long").alias("_cv_q"),
-                    F.sum("_cc_q").cast("long").alias("_cc_q"),
-                )
-            )
-
-        # Bucketed merge; per-bucket _SUCCESS commits are the replay
-        # guard — a mid-batch failure is retried on the same-id
-        # re-invocation, never skipped (VERDICT r13 item 5).
-        state.apply_delta(delta, batch_id, ["touch_type"], merge)
+        # per-bucket _SUCCESS commits are the replay guard — a
+        # mid-batch failure is retried on the same-id re-invocation,
+        # never skipped
+        state.apply_delta(delta, batch_id, ["touch_type"], aggs)
 
     return fold
 
@@ -1683,9 +1587,9 @@ def stream_attribution(
     batch that carries it), and the per-touch-type integer credit rows
     fold additively into running state inside ``foreachBatch`` (the
     stream_incremental_agg discipline: state is |touch types| rows,
-    history never re-scanned, and — VERDICT r12 item 3 — the state
-    lives as a committed parquet snapshot merged distributedly, never
-    collected to the driver).
+    history never re-scanned, and the state lives as a committed
+    parquet snapshot merged distributedly, never collected to the
+    driver).
 
     Every state column is an exact BIGINT that ADDS across the disjoint
     conversion partition — so over a drained availableNow stream the
@@ -1696,24 +1600,13 @@ def stream_attribution(
     (``_make_attribution_fold``)."""
     from pyspark.sql import functions as F
 
-    from ..sources.readers import normalize_event_ts, read_table
+    from ..sources.readers import read_table
 
     ev = read_table(spark, sf_dir, "events")
     touches = ev.where(F.col("event_type").isin("view", "click"))
-
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
+    stream = _split_stream(spark, sf_dir, "events", n_files)
     state = _ParquetFoldState(spark, "attr")
-    fold = _make_attribution_fold(spark, state, touches)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _drain(stream, fold=_make_attribution_fold(spark, state, touches))
     # read_or_empty: a conversion-free stream must degrade to an empty
     # result like the batch twin (tests/test_empty_inputs.py)
     final = state.read_or_empty(
@@ -1765,65 +1658,8 @@ def stream_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries the batch's full value oracle."""
     from ..operators.html import html_main_content, wrap_documents_html
 
-    raw_schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    out = html_main_content(wrap_documents_html(stream))
-    name = f"html_extract_sink_{next(_sink_ids)}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
-def _lineitem_multifile_by_order_dir(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, min_qty: int = 45
-) -> str:
-    """Materialize (l_orderkey, l_partkey) of HIGH-QUANTITY lines
-    (l_quantity >= min_qty — the bulk-co-purchase graph: sparser, many
-    real components instead of one dense blob) as n parquet files
-    partitioned BY ORDER KEY (hash repartition on l_orderkey), so every
-    order's lines land in ONE file and a maxFilesPerTrigger=1 stream
-    yields micro-batches whose per-order co-order pair expansion is
-    EXACT (an order split across batches would silently lose its
-    cross-batch pairs)."""
-    import hashlib
-    import tempfile
-
-    from ..cache import dataset_fingerprint
-
-    # Content fingerprint, not just the path: a regenerated dataset at
-    # the same path must never reuse the stale stream source (ADVICE
-    # r10 — the _co_order_edges discipline, shared helper).
-    try:
-        fp = dataset_fingerprint(os.path.join(sf_dir, "lineitem.parquet"))
-    except OSError:
-        fp = "nofp"
-    key = hashlib.md5(
-        f"{sf_dir}:{n_files}:{min_qty}:{fp}:v2".encode()
-    ).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ifds_lineitem_stream_{key}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        df = (
-            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-            .where(F.col("l_quantity") >= min_qty)
-            .select("l_orderkey", "l_partkey")
-        )
-        df.repartition(n_files, "l_orderkey").write.mode("overwrite").parquet(
-            out
-        )
-    return out
+    stream = _table_stream(spark, sf_dir, "documents")
+    return _drain(html_main_content(wrap_documents_html(stream)), "html_extract")
 
 
 def _make_incremental_cc_fold(spark: SparkSession, state: _ParquetFoldState):
@@ -1836,11 +1672,10 @@ def _make_incremental_cc_fold(spark: SparkSession, state: _ParquetFoldState):
     at per-batch cost ∝ |V| + |batch|, not Σ|batches|.
 
     Exactly-once under foreachBatch's at-least-once replay AND state
-    residence (VERDICT r12 item 3) come from the ``_ParquetFoldState``
-    commit marker: the |V|-row star forest lives as a committed
-    parquet snapshot joined distributedly per batch — the driver never
-    collects a state row (the r12 form collected the labeling between
-    batches)."""
+    residence come from the ``_ParquetFoldState`` commit marker: the
+    |V|-row star forest lives as a committed parquet snapshot joined
+    distributedly per batch — the driver never collects a state
+    row."""
     from pyspark.sql import functions as F
 
     from ..operators.graph import connected_components
@@ -1849,7 +1684,7 @@ def _make_incremental_cc_fold(spark: SparkSession, state: _ParquetFoldState):
         if batch_id <= state.last_batch():
             return
         # two chained codegen'd Generates instead of the interpreted
-        # nested-lambda expansion (the _co_order_edges r18 rewrite)
+        # nested-lambda expansion (the _co_order_edges form)
         edges = (
             batch_df.groupBy("l_orderkey")
             .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
@@ -1893,17 +1728,14 @@ def stream_incremental_cc(
     attests full values — the streaming twin of the graph suite's CC,
     same discipline as stream_incremental_agg vs the batch aggregate).
     """
-    src = _lineitem_multifile_by_order_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    # high-quantity lines only: the bulk-co-purchase graph is sparser,
+    # many real components instead of one dense blob
+    stream = _split_stream(
+        spark, sf_dir, "lineitem", n_files, by="l_orderkey",
+        where="l_quantity >= 45", cols=("l_orderkey", "l_partkey"),
     )
     state = _ParquetFoldState(spark, "cc")
-    fold = _make_incremental_cc_fold(spark, state)
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
+    _drain(stream, fold=_make_incremental_cc_fold(spark, state))
     final = state.read_or_empty("id long, component long")
     return final.select("id", "component").orderBy("id")
 
@@ -1922,27 +1754,17 @@ def stream_benford(spark: SparkSession, sf_dir: str, n_files: int = 6) -> DataFr
     operator, so the drained availableNow stream equals the batch
     query bit-for-bit — which the shared oracle attests. State lives in
     the same bucketed ``_ParquetFoldState`` store as every sibling fold
-    (VERDICT r13 item 6 closed the old driver-resident dict exemption);
+    (no driver-resident state; the fold spy test covers it);
     exactly-once under foreachBatch's at-least-once retries via the
     per-bucket commit-marker guard."""
     from pyspark.sql import functions as F
 
     from ..operators.fraud_stats import benford_from_counts
-    from ..sources.readers import normalize_event_ts
 
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "benford")
-    schema = "grp string, digit int, n_obs long"
+    cents = F.round(F.col("value") * 100).cast("long")
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cents = F.round(F.col("value") * 100).cast("long")
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.where(cents > 0)
             .select(
                 F.col("event_type").alias("grp"),
@@ -1954,25 +1776,14 @@ def stream_benford(spark: SparkSession, sf_dir: str, n_files: int = 6) -> DataFr
             .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("grp", "digit")
-                .agg(F.sum("n_obs").cast("long").alias("n_obs"))
-            )
-
-        # VERDICT r13 item 6: the last driver-resident fold (the old
-        # delta.collect() dict was exempted as ≤ 9·|groups| rows but
-        # inconsistent with every sibling) now folds through the same
-        # bucketed parquet state store as the rest — the spy test
-        # covers it.
-        state.apply_delta(delta, batch_id, ["grp", "digit"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    final = state.read_or_empty(schema)
+    final = _fold_drain(
+        _split_stream(spark, sf_dir, "events", n_files),
+        "benford",
+        ["grp", "digit"],
+        [F.sum("n_obs").cast("long").alias("n_obs")],
+        delta,
+        "grp string, digit int, n_obs long",
+    )
     return benford_from_counts(final, "event_type")
 
 
@@ -1996,19 +1807,10 @@ def stream_last_digits(
 
     from ..operators.fraud_stats import last_digits_from_counts
 
-    src = _orders_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "last_digits")
-    schema = "grp string, digit int, n_obs long"
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cents = F.round(F.col("o_totalprice") * 100).cast("long")
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.where(cents >= 1000)
             .select(
                 F.col("o_orderpriority").alias("grp"),
@@ -2018,37 +1820,15 @@ def stream_last_digits(
             .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("grp", "digit")
-                .agg(F.sum("n_obs").cast("long").alias("n_obs"))
-            )
-
-        state.apply_delta(delta, batch_id, ["grp", "digit"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    final = state.read_or_empty(schema)
+    final = _fold_drain(
+        _split_stream(spark, sf_dir, "orders", n_files),
+        "last_digits",
+        ["grp", "digit"],
+        [F.sum("n_obs").cast("long").alias("n_obs")],
+        delta,
+        "grp string, digit int, n_obs long",
+    )
     return last_digits_from_counts(final, "o_orderpriority")
-
-
-def _orders_multifile_dir(spark: SparkSession, sf_dir: str, n_files: int = 6) -> str:
-    """Materialize the orders table as n parquet files (the
-    _events_multifile_dir pattern for the ledger-shaped streams)."""
-    import hashlib
-    import tempfile
-
-    fp = _src_fingerprint(os.path.join(sf_dir, "orders.parquet"))
-    key = hashlib.md5(f"{sf_dir}:{n_files}:v1:{fp}".encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"ifds_orders_stream_{key}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        df = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-        df.repartition(n_files).write.mode("overwrite").parquet(out)
-    return out
 
 
 def stream_structuring(
@@ -2064,27 +1844,18 @@ def stream_structuring(
     cross-multiplied flags compute ONCE on the drained state with the
     identical tail as the batch operator, so drained availableNow
     equals ``structuring_orders`` bit-for-bit — which the SHARED
-    oracle attests. State residence (VERDICT r12 item 3): the
+    oracle attests. State residence: the
     |entities|-row count-triple state is a committed parquet snapshot
     (``_ParquetFoldState``) merged by a distributed groupBy — no
     driver collect of per-entity state, and the commit marker doubles
     as the exactly-once replay guard."""
     from pyspark.sql import functions as F
 
-    src = _orders_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "structuring")
-    schema = "entity long, n_amounts long, band_hits long, round_hits long"
     lo, hi, mod = 45_000_00, 50_000_00, 100
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cents = F.round(F.col("o_totalprice") * 100).cast("long")
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.col("o_custkey").alias("entity"), cents.alias("c")
             )
@@ -2103,26 +1874,17 @@ def stream_structuring(
             )
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("entity")
-                .agg(
-                    F.sum("n_amounts").cast("long").alias("n_amounts"),
-                    F.sum("band_hits").cast("long").alias("band_hits"),
-                    F.sum("round_hits").cast("long").alias("round_hits"),
-                )
-            )
-
-        # O(|delta| + touched-buckets), per-bucket replay guard
-        # (VERDICT r13 item 5)
-        state.apply_delta(delta, batch_id, ["entity"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    per = state.read_or_empty(schema).where(F.col("n_amounts") >= 5)
+    per = _fold_drain(
+        _split_stream(spark, sf_dir, "orders", n_files),
+        "structuring",
+        ["entity"],
+        [
+            F.sum(c).cast("long").alias(c)
+            for c in ("n_amounts", "band_hits", "round_hits")
+        ],
+        delta,
+        "entity long, n_amounts long, band_hits long, round_hits long",
+    ).where(F.col("n_amounts") >= 5)
     # identical finish as operators/fraud_stats.py::amount_structuring:
     # |entities|-row base-rate reduce + exact cross-multiplied flags
     glob = per.agg(
@@ -2158,43 +1920,6 @@ def stream_structuring(
     )
 
 
-def _ordered_orders_source(
-    spark: SparkSession, sf_dir: str, n_files: int
-) -> DataFrame:
-    """DATE-ORDERED multi-file streaming source over the orders table
-    (the _ordered_events_source pattern for the ledger): range-
-    partitioned by o_orderdate with staggered mtimes, so micro-batches
-    arrive in date order and a same-date tie group never splits across
-    batches — the property the stateful dormancy screen needs to
-    reproduce the batch lag exactly."""
-    raw = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-
-    import hashlib
-    import tempfile
-
-    fp = _src_fingerprint(os.path.join(sf_dir, "orders.parquet"))
-    key = hashlib.md5(
-        f"{sf_dir}:oordered:{n_files}:v1:{fp}".encode()
-    ).hexdigest()[:10]
-    src = os.path.join(tempfile.gettempdir(), f"ifds_orders_ordered_{key}")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        raw.repartitionByRange(n_files, "o_orderdate").sortWithinPartitions(
-            "o_orderdate"
-        ).write.mode("overwrite").parquet(src)
-        import time as _time
-
-        base = _time.time() - 3600
-        parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(src, f), (base + i * 60, base + i * 60))
-    return (
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-
-
 def stream_dormancy_flags(
     spark: SparkSession,
     sf_dir: str,
@@ -2222,7 +1947,9 @@ def stream_dormancy_flags(
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    stream = _ordered_orders_source(spark, sf_dir, n_files).select(
+    stream = _split_stream(
+        spark, sf_dir, "orders", n_files, by="o_orderdate", ordered=True
+    ).select(
         "o_orderkey",
         "o_custkey",
         F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date"))
@@ -2254,7 +1981,7 @@ def stream_dormancy_flags(
         # they arrive as multiple pandas chunks in arbitrary order, and
         # sorting each chunk independently would break the
         # (epoch_day, o_orderkey) walk across chunk boundaries —
-        # silently diverging from the batch oracle (ADVICE r12).
+        # silently diverging from the batch oracle.
         chunks = [pdf for pdf in pdf_iter if len(pdf)]
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True).sort_values(
@@ -2290,16 +2017,7 @@ def stream_dormancy_flags(
     emitted = stream.groupBy("o_custkey").applyInPandasWithState(
         update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"dormancy_sink_{next(_sink_ids)}"
-    q = (
-        emitted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _drain(emitted, "dormancy", "update").select(
         "o_orderkey",
         "o_custkey",
         F.date_add(F.lit("1970-01-01").cast("date"), F.col("epoch_day").cast("int"))
@@ -2316,16 +2034,14 @@ def stream_duplicate_charges(
     sf_dir: str,
     n_files: int = 6,
     horizon_s: int = 604800,
-    n_buckets: int = _ParquetFoldState.DEFAULT_BUCKETS,
 ) -> DataFrame:
     """STREAMING duplicate-charge screen — the live form of
-    ``duplicate_charges_events`` (VERDICT r15 item 6), re-platformed
-    onto the JVM foreachBatch parquet-fold (VERDICT r16 item 1).
+    ``duplicate_charges_events``, on the JVM foreachBatch parquet-fold.
 
     The first shipping (applyInPandasWithState, one long per
     (entity, cents) key) carried the engine's worst scale curve: the
     key grain makes ~1M ONE-ROW Python groups per micro-batch at sf1,
-    and a measured three-variant A/B (SCALING.md r16b/r16c) proved
+    and a measured three-variant A/B (SCALING.md) proved
     the cost is per-GROUP frame construction in the Arrow/pandas
     bridge — 5.4× wall on 10× data even after the yield-only-on-hits
     fix. This version keeps the same state algebra but entirely
@@ -2339,10 +2055,10 @@ def stream_duplicate_charges(
       (epoch_s, event_id) — the batch query's own window — plus ONE
       join against the state table resolves every row's predecessor
       (``coalesce(lag, state.last_s)``); hits (gap ≤ ``horizon_s``)
-      land in a versioned, _SUCCESS-committed hits directory BEFORE
-      the state fold, so a foreachBatch replay skips committed hits
-      and the per-bucket guard skips committed state — no double
-      emission, no stale reads;
+      land in the store's per-batch output log BEFORE the state fold,
+      so a foreachBatch replay skips committed hits and the per-bucket
+      guard skips committed state — no double emission, no stale
+      reads;
     * no per-group Python anywhere — the whole batch is columnar
       whole-stage-codegen work.
 
@@ -2356,108 +2072,67 @@ def stream_duplicate_charges(
     integers end-to-end; the state join is null-safe so null-keyed
     rows (none in the gate data) would chain exactly like the batch
     window's null-keeping partitionBy."""
-    import shutil
-    import tempfile
+    from pyspark.sql import Window as W
 
-    stream = _ordered_events_source(spark, sf_dir, n_files).select(
+    from ..operators.joins import null_safe_equi_join
+
+    stream = _split_stream(
+        spark, sf_dir, "events", n_files, by="ts", ordered=True
+    ).select(
         "event_id",
         "user_id",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
         F.floor(F.unix_timestamp(F.col("ts"))).cast("long").alias("epoch_s"),
     )
+    state = _ParquetFoldState(spark, "dupcharge")
+    keys = ["user_id", "cents"]
+    last_s = [F.max("last_s").cast("long").alias("last_s")]
 
-    # n_buckets is the state-locality lever: per-batch cost is
-    # O(|delta| + touched-buckets), so raising it helps ONLY when a
-    # micro-batch touches a small key subset — the sf3 A/B (SCALING
-    # r18e) measured 8→64 as 2.6× SLOWER on availableNow drains,
-    # whose fat batches touch every bucket. See DEFAULT_BUCKETS.
-    state = _ParquetFoldState(spark, "dupcharge", n_buckets=n_buckets)
-    hits_dir = tempfile.mkdtemp(prefix="ifds_dupcharge_hits_")
-    import atexit
-
-    atexit.register(shutil.rmtree, hits_dir, ignore_errors=True)
-    hit_schema = (
-        "event_id long, user_id long, cents long, epoch_s long, "
-        "prev_s long, gap_s long"
-    )
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        hits_path = os.path.join(hits_dir, f"v{batch_id}")
-        if not os.path.exists(os.path.join(hits_path, "_SUCCESS")):
-            w = W.partitionBy("user_id", "cents").orderBy(
-                "epoch_s", "event_id"
+    def hits(batch_df: DataFrame) -> DataFrame:
+        w = W.partitionBy(*keys).orderBy("epoch_s", "event_id")
+        cur = batch_df.withColumn("_bprev", F.lag("epoch_s").over(w))
+        prev = state.read()
+        if prev is not None:
+            # null-safe keys: the batch window keeps NULL keys as
+            # their own partition, so the state join must too
+            cur = null_safe_equi_join(cur, prev, keys, "left")
+        else:
+            cur = cur.withColumn("last_s", F.lit(None).cast("long"))
+        prev_s = F.coalesce(F.col("_bprev"), F.col("last_s"))
+        return (
+            cur.withColumn("prev_s", prev_s)
+            .where(
+                F.col("prev_s").isNotNull()
+                & (F.col("epoch_s") - F.col("prev_s") <= horizon_s)
             )
-            cur = batch_df.withColumn("_bprev", F.lag("epoch_s").over(w))
-            prev = state.read()
-            if prev is not None:
-                # null-safe keys: the batch window keeps NULL keys as
-                # their own partition, so the state join must too
-                from ..operators.joins import null_safe_equi_join
-
-                cur = null_safe_equi_join(
-                    cur, prev, ["user_id", "cents"], "left"
-                )
-            else:
-                cur = cur.withColumn("last_s", F.lit(None).cast("long"))
-            prev_s = F.coalesce(F.col("_bprev"), F.col("last_s"))
-            hits = (
-                cur.withColumn("prev_s", prev_s)
-                .where(
-                    F.col("prev_s").isNotNull()
-                    & (F.col("epoch_s") - F.col("prev_s") <= horizon_s)
-                )
-                .select(
-                    "event_id",
-                    "user_id",
-                    "cents",
-                    "epoch_s",
-                    "prev_s",
-                    (F.col("epoch_s") - F.col("prev_s")).alias("gap_s"),
-                )
+            .select(
+                "event_id",
+                "user_id",
+                "cents",
+                "epoch_s",
+                "prev_s",
+                (F.col("epoch_s") - F.col("prev_s")).alias("gap_s"),
             )
-            # commit hits BEFORE the state fold: a replay after a
-            # crash between the two skips this block (marker present)
-            # and re-applies only the unguarded state buckets
-            hits.write.mode("overwrite").parquet(hits_path)
-        delta = batch_df.groupBy("user_id", "cents").agg(
-            F.max("epoch_s").cast("long").alias("last_s")
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("user_id", "cents")
-                .agg(F.max("last_s").cast("long").alias("last_s"))
-            )
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        state.log(batch_id, lambda: hits(batch_df))
+        delta = batch_df.groupBy(*keys).agg(
+            F.max("epoch_s").cast("long").alias("last_s")
+        )
+        state.apply_delta(delta, batch_id, keys, last_s)
 
-        state.apply_delta(delta, batch_id, ["user_id", "cents"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    committed = [
-        os.path.join(hits_dir, v)
-        for v in sorted(os.listdir(hits_dir))
-        if v.startswith("v")
-        and os.path.exists(os.path.join(hits_dir, v, "_SUCCESS"))
-    ]
-    if not committed:
-        return spark.createDataFrame([], hit_schema)
-    return (
-        spark.read.parquet(*committed)
-        .select("event_id", "user_id", "cents", "epoch_s", "prev_s", "gap_s")
-        .orderBy("event_id")
-    )
+    _drain(stream, fold=fold)
+    return state.read_log(
+        "event_id long, user_id long, cents long, epoch_s long, "
+        "prev_s long, gap_s long"
+    ).orderBy("event_id")
 
 
 def stream_impossible_velocity(
     spark: SparkSession,
     sf_dir: str,
     n_files: int = 6,
-    n_buckets: int = _ParquetFoldState.DEFAULT_BUCKETS,
 ) -> DataFrame:
     """STREAMING impossible-velocity screen — the live form of
     ``impossible_velocity_events`` (operators/fraud_stats.py::
@@ -2476,7 +2151,7 @@ def stream_impossible_velocity(
     the three fields can never mix sources), one null-safe state join
     resolves each entity's first-in-batch row, then the broadcast
     |floors|-row transition join prices every gap; hits (gap <
-    floor) commit to a versioned hits directory BEFORE the state
+    floor) commit to the store's per-batch output log BEFORE the state
     fold (the replay-skip discipline).
 
     Batch-twin equivalence (shares the batch query's DuckDB oracle):
@@ -2490,12 +2165,14 @@ def stream_impossible_velocity(
     the testdata and of any feed that assigns ids in arrival order;
     the drained-≡-batch pytest and the shared oracle attest it on the
     gate data)."""
-    import shutil
-    import tempfile
+    from pyspark.sql import Window as W
 
     from ..operators.fraud_stats import DEFAULT_VELOCITY_FLOORS_S
+    from ..operators.joins import null_safe_equi_join
 
-    stream = _ordered_events_source(spark, sf_dir, n_files).select(
+    stream = _split_stream(
+        spark, sf_dir, "events", n_files, by="ts", ordered=True
+    ).select(
         "event_id",
         "user_id",
         F.col("event_type"),
@@ -2506,117 +2183,76 @@ def stream_impossible_velocity(
         "f_prev string, f_curr string, floor_s long",
     )
 
-    state = _ParquetFoldState(spark, "velocity", n_buckets=n_buckets)
-    hits_dir = tempfile.mkdtemp(prefix="ifds_velocity_hits_")
-    import atexit
-
-    atexit.register(shutil.rmtree, hits_dir, ignore_errors=True)
-    hit_schema = (
-        "event_id long, user_id long, prev_event_id long, prev_type string, "
-        "curr_type string, prev_s long, epoch_s long, gap_s long, floor_s long"
-    )
+    state = _ParquetFoldState(spark, "velocity")
     last_struct = "struct(epoch_s AS last_s, event_id AS last_eid, event_type AS last_ty)"
     order_struct = "struct(epoch_s, event_id)"
+    last = [
+        F.expr(
+            "max_by(last, struct(last.last_s AS epoch_s, "
+            "last.last_eid AS event_id))"
+        ).alias("last")
+    ]
+
+    def hits(batch_df: DataFrame) -> DataFrame:
+        w = W.partitionBy("user_id").orderBy("epoch_s", "event_id")
+        cur = batch_df.withColumn(
+            "_bprev",
+            F.lag(
+                F.struct(
+                    F.col("epoch_s").alias("last_s"),
+                    F.col("event_id").alias("last_eid"),
+                    F.col("event_type").alias("last_ty"),
+                )
+            ).over(w),
+        )
+        prev = state.read()
+        if prev is not None:
+            cur = null_safe_equi_join(cur, prev, ["user_id"], "left")
+        else:
+            cur = cur.withColumn(
+                "last",
+                F.lit(None).cast(
+                    "struct<last_s: bigint, last_eid: bigint, last_ty: string>"
+                ),
+            )
+        p = F.coalesce(F.col("_bprev"), F.col("last"))
+        priced = (
+            cur.withColumn("_p", p)
+            .join(
+                F.broadcast(floors_df),
+                (F.col("_p.last_ty") == F.col("f_prev"))
+                & (F.col("event_type") == F.col("f_curr")),
+                "left",
+            )
+            .withColumn("floor_s", F.coalesce(F.col("floor_s"), F.lit(1).cast("long")))
+        )
+        gap = F.col("epoch_s") - F.col("_p.last_s")
+        return priced.where(
+            F.col("_p").isNotNull() & (gap < F.col("floor_s"))
+        ).select(
+            "event_id",
+            "user_id",
+            F.col("_p.last_eid").alias("prev_event_id"),
+            F.col("_p.last_ty").alias("prev_type"),
+            F.col("event_type").alias("curr_type"),
+            F.col("_p.last_s").alias("prev_s"),
+            "epoch_s",
+            gap.alias("gap_s"),
+            "floor_s",
+        )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        hits_path = os.path.join(hits_dir, f"v{batch_id}")
-        if not os.path.exists(os.path.join(hits_path, "_SUCCESS")):
-            w = W.partitionBy("user_id").orderBy("epoch_s", "event_id")
-            cur = batch_df.withColumn(
-                "_bprev",
-                F.lag(
-                    F.struct(
-                        F.col("epoch_s").alias("last_s"),
-                        F.col("event_id").alias("last_eid"),
-                        F.col("event_type").alias("last_ty"),
-                    )
-                ).over(w),
-            )
-            prev = state.read()
-            if prev is not None:
-                from ..operators.joins import null_safe_equi_join
-
-                cur = null_safe_equi_join(cur, prev, ["user_id"], "left")
-            else:
-                cur = cur.withColumn(
-                    "last",
-                    F.lit(None).cast(
-                        "struct<last_s: bigint, last_eid: bigint, last_ty: string>"
-                    ),
-                )
-            p = F.coalesce(F.col("_bprev"), F.col("last"))
-            priced = (
-                cur.withColumn("_p", p)
-                .join(
-                    F.broadcast(floors_df),
-                    (F.col("_p.last_ty") == F.col("f_prev"))
-                    & (F.col("event_type") == F.col("f_curr")),
-                    "left",
-                )
-                .withColumn("floor_s", F.coalesce(F.col("floor_s"), F.lit(1).cast("long")))
-            )
-            gap = F.col("epoch_s") - F.col("_p.last_s")
-            hits = priced.where(
-                F.col("_p").isNotNull() & (gap < F.col("floor_s"))
-            ).select(
-                "event_id",
-                "user_id",
-                F.col("_p.last_eid").alias("prev_event_id"),
-                F.col("_p.last_ty").alias("prev_type"),
-                F.col("event_type").alias("curr_type"),
-                F.col("_p.last_s").alias("prev_s"),
-                "epoch_s",
-                gap.alias("gap_s"),
-                "floor_s",
-            )
-            hits.write.mode("overwrite").parquet(hits_path)
+        state.log(batch_id, lambda: hits(batch_df))
         delta = batch_df.groupBy("user_id").agg(
             F.expr(f"max_by({last_struct}, {order_struct})").alias("last")
         )
+        state.apply_delta(delta, batch_id, ["user_id"], last)
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("user_id")
-                .agg(
-                    F.expr(
-                        "max_by(last, struct(last.last_s AS epoch_s, "
-                        "last.last_eid AS event_id))"
-                    ).alias("last")
-                )
-            )
-
-        state.apply_delta(delta, batch_id, ["user_id"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    committed = [
-        os.path.join(hits_dir, v)
-        for v in sorted(os.listdir(hits_dir))
-        if v.startswith("v")
-        and os.path.exists(os.path.join(hits_dir, v, "_SUCCESS"))
-    ]
-    if not committed:
-        return spark.createDataFrame([], hit_schema)
-    return (
-        spark.read.parquet(*committed)
-        .select(
-            "event_id",
-            "user_id",
-            "prev_event_id",
-            "prev_type",
-            "curr_type",
-            "prev_s",
-            "epoch_s",
-            "gap_s",
-            "floor_s",
-        )
-        .orderBy("event_id")
-    )
+    _drain(stream, fold=fold)
+    return state.read_log(
+        "event_id long, user_id long, prev_event_id long, prev_type string, "
+        "curr_type string, prev_s long, epoch_s long, gap_s long, floor_s long"
+    ).orderBy("event_id")
 
 
 def stream_peer_outliers(
@@ -2633,31 +2269,21 @@ def stream_peer_outliers(
     peer_group_outliers' finish, inlined with the identical expression
     tree) run once on the drained state. Drained availableNow ≡ the
     batch ``peer_outlier_customers`` bit-for-bit — attested by the
-    SHARED oracle. State residence (VERDICT r12 item 3): the
+    SHARED oracle. State residence: the
     |entities|-row moment state is a committed parquet snapshot
     (``_ParquetFoldState``) merged by a distributed groupBy — no
     driver collect of per-entity state; the commit marker doubles as
     the exactly-once replay guard."""
     from pyspark.sql import functions as F
 
-    src = _orders_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    stream = _split_stream(spark, sf_dir, "orders", n_files)
     cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
         "c_custkey", "c_nationkey"
     )
-    state = _ParquetFoldState(spark, "peer")
-    schema = (
-        "entity long, peer int, n_e long, s_e decimal(38,0), ss_e decimal(38,0)"
-    )
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cents = F.round(F.col("o_totalprice") * 100).cast("long")
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.join(F.broadcast(cust), batch_df.o_custkey == cust.c_custkey)
             .select(
                 F.col("c_custkey").alias("entity"),
@@ -2677,26 +2303,19 @@ def stream_peer_outliers(
             )
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("entity", "peer")
-                .agg(
-                    F.sum("n_e").cast("long").alias("n_e"),
-                    F.sum("s_e").cast("decimal(38,0)").alias("s_e"),
-                    F.sum("ss_e").cast("decimal(38,0)").alias("ss_e"),
-                )
-            )
-
-        # O(|delta| + touched-buckets), per-bucket replay guard
-        # (VERDICT r13 item 5); bucket key is the full group key
-        state.apply_delta(delta, batch_id, ["entity", "peer"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    per = state.read_or_empty(schema)
+    # the bucket key is the full group key
+    per = _fold_drain(
+        stream,
+        "peer",
+        ["entity", "peer"],
+        [
+            F.sum("n_e").cast("long").alias("n_e"),
+            F.sum("s_e").cast("decimal(38,0)").alias("s_e"),
+            F.sum("ss_e").cast("decimal(38,0)").alias("ss_e"),
+        ],
+        delta,
+        "entity long, peer int, n_e long, s_e decimal(38,0), ss_e decimal(38,0)",
+    )
     # identical finish as peer_group_outliers (min_peers=10, |z| > 3)
     d38 = "decimal(38,0)"
     grp = per.groupBy("peer").agg(
@@ -2731,7 +2350,7 @@ def stream_fraud_risk_report(
     count_threshold: int = 3,
     cents_threshold: int = 200_00,
 ) -> DataFrame:
-    """STREAMING composed fraud-risk report (VERDICT r12 item 4): the
+    """STREAMING composed fraud-risk report: the
     operator a live deployment would actually run — ONE events-ledger
     feed, and per entity a SINGLE ``applyInPandasWithState`` pass
     folds all three screens' sufficient statistics simultaneously:
@@ -2771,7 +2390,9 @@ def stream_fraud_risk_report(
 
     from ..operators.fraud_stats import CHI2_8DF_99, benford_from_counts
 
-    stream = _ordered_events_source(spark, sf_dir, n_files).select(
+    stream = _split_stream(
+        spark, sf_dir, "events", n_files, by="ts", ordered=True
+    ).select(
         "event_id",
         "user_id",
         F.col("ts").cast("long").alias("epoch_s"),
@@ -2827,9 +2448,9 @@ def stream_fraud_risk_report(
             n_gaps = sg = ss = 0
             digs = [0] * 9
         # running window total: O(state) once per batch, O(1) amortized
-        # per event after (the velocity-fold fix — VERDICT carried item)
+        # per event after (the velocity-fold discipline)
         total = sum(cents_tr)
-        # concat the whole iterator before ONE sort (the ADVICE r12
+        # concat the whole iterator before ONE sort (the arrow
         # chunk-boundary contract shared by every stateful walk here)
         chunks = [pdf for pdf in pdf_iter if len(pdf)]
         if not chunks and not state.exists:
@@ -2899,26 +2520,18 @@ def stream_fraud_risk_report(
     emitted = stream.groupBy("user_id").applyInPandasWithState(
         update, out_type, state_type, "update", GroupStateTimeout.NoTimeout
     )
-    name = f"fraud_risk_sink_{next(_sink_ids)}"
-    q = (
-        emitted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     st = (
-        spark.table(name)
+        _drain(emitted, "fraud_risk", "update")
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
     from ..cache import plan_key, swap_cache
 
-    st = swap_cache(plan_key(f"stream_fraud_risk.final:{name}", st), st)
+    # the sink's name is part of the analyzed plan, so each drain keys
+    # its own slot
+    st = swap_cache(plan_key("stream_fraud_risk.final", st), st)
 
     # --- Benford leg: drained digit counts through the SHARED batch
     # tail (benford_from_counts), then the batch query's digit==1 pick
@@ -3000,20 +2613,8 @@ def _stream_daily_totals(
     is never re-scanned. Returns the drained (grp, day, x) frame."""
     from pyspark.sql import functions as F
 
-    from ..sources.readers import normalize_event_ts
-
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, state_key)
-    schema = "grp string, day timestamp, x long"
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.groupBy(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(
             F.col("event_type").alias("grp"),
             F.date_trunc("day", F.col("ts")).alias("day"),
         ).agg(
@@ -3022,20 +2623,14 @@ def _stream_daily_totals(
             .alias("x")
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("grp", "day")
-                .agg(F.sum("x").cast("long").alias("x"))
-            )
-
-        state.apply_delta(delta, batch_id, ["grp", "day"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return state.read_or_empty(schema)
+    return _fold_drain(
+        _split_stream(spark, sf_dir, "events", n_files),
+        state_key,
+        ["grp", "day"],
+        [F.sum("x").cast("long").alias("x")],
+        delta,
+        "grp string, day timestamp, x long",
+    )
 
 
 def stream_pettitt(
@@ -3102,24 +2697,12 @@ def stream_cross_entity_duplicates(
     Drained availableNow ≡ the batch query bit-for-bit, attested by
     the SHARED oracle; exactly-once via the per-bucket commit-marker
     guard."""
-    from ..sources.readers import normalize_event_ts
+    cents = F.round(F.col("value") * 100).cast("long")
+    s = F.floor(F.unix_timestamp(F.col("ts"))).cast("long")
+    keys = ["cents", "win_start_s", "_ent"]
 
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "xent_dup")
-    schema = (
-        "cents long, win_start_s long, _ent long, n long, mn long, mx long"
-    )
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cents = F.round(F.col("value") * 100).cast("long")
-        s = F.floor(F.unix_timestamp(F.col("ts"))).cast("long")
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 cents.alias("cents"),
                 s.alias("_s"),
@@ -3128,7 +2711,7 @@ def stream_cross_entity_duplicates(
             .withColumn(
                 "win_start_s", F.col("_s") - (F.col("_s") % window_s)
             )
-            .groupBy("cents", "win_start_s", "_ent")
+            .groupBy(*keys)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.min("_s").cast("long").alias("mn"),
@@ -3136,26 +2719,18 @@ def stream_cross_entity_duplicates(
             )
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("cents", "win_start_s", "_ent")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.min("mn").cast("long").alias("mn"),
-                    F.max("mx").cast("long").alias("mx"),
-                )
-            )
-
-        state.apply_delta(
-            delta, batch_id, ["cents", "win_start_s", "_ent"], merge
-        )
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    per = state.read_or_empty(schema)
+    per = _fold_drain(
+        _split_stream(spark, sf_dir, "events", n_files),
+        "xent_dup",
+        keys,
+        [
+            F.sum("n").cast("long").alias("n"),
+            F.min("mn").cast("long").alias("mn"),
+            F.max("mx").cast("long").alias("mx"),
+        ],
+        delta,
+        "cents long, win_start_s long, _ent long, n long, mn long, mx long",
+    )
     return (
         per.groupBy("cents", "win_start_s")
         .agg(
@@ -3164,7 +2739,7 @@ def stream_cross_entity_duplicates(
             # count_distinct excludes NULL entities, so a NULL-entity
             # triple must contribute to n_events/first/last but never
             # to the entity count (drained ≡ batch even with null
-            # keys — the code-review r17 finding)
+            # keys)
             F.count(F.col("_ent")).cast("long").alias("n_entities"),
             F.min("mn").cast("long").alias("first_s"),
             F.max("mx").cast("long").alias("last_s"),
@@ -3182,7 +2757,7 @@ def stream_cross_entity_duplicates_offset(
     min_entities: int = 2,
 ) -> DataFrame:
     """Streaming form of the TWO-GRID cross-entity screen
-    (``cross_entity_duplicates_offset_events``, r18): identical fold
+    (``cross_entity_duplicates_offset_events``): identical fold
     to :func:`stream_cross_entity_duplicates` with the grid id joined
     into the state key — each arriving event expands map-side into its
     (grid 0, grid 1) cells before the batch-local aggregation, state
@@ -3190,27 +2765,13 @@ def stream_cross_entity_duplicates_offset(
     entities-per-cell finish runs once on the drained state. Drained
     availableNow ≡ the batch query bit-for-bit (SHARED oracle); 2×
     the state triples of the single-grid form, same plan shape."""
-    from ..sources.readers import normalize_event_ts
-
     half = window_s // 2
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "xent_dup_off")
-    schema = (
-        "grid int, cents long, win_start_s long, _ent long, "
-        "n long, mn long, mx long"
-    )
+    cents = F.round(F.col("value") * 100).cast("long")
+    s = F.floor(F.unix_timestamp(F.col("ts"))).cast("long")
     keys = ["grid", "cents", "win_start_s", "_ent"]
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cents = F.round(F.col("value") * 100).cast("long")
-        s = F.floor(F.unix_timestamp(F.col("ts"))).cast("long")
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 cents.alias("cents"),
                 s.alias("_s"),
@@ -3230,24 +2791,19 @@ def stream_cross_entity_duplicates_offset(
             )
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy(*keys)
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.min("mn").cast("long").alias("mn"),
-                    F.max("mx").cast("long").alias("mx"),
-                )
-            )
-
-        state.apply_delta(delta, batch_id, keys, merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    per = state.read_or_empty(schema)
+    per = _fold_drain(
+        _split_stream(spark, sf_dir, "events", n_files),
+        "xent_dup_off",
+        keys,
+        [
+            F.sum("n").cast("long").alias("n"),
+            F.min("mn").cast("long").alias("mn"),
+            F.max("mx").cast("long").alias("mx"),
+        ],
+        delta,
+        "grid int, cents long, win_start_s long, _ent long, "
+        "n long, mn long, mx long",
+    )
     return (
         per.groupBy("grid", "cents", "win_start_s")
         .agg(
@@ -3278,21 +2834,11 @@ def stream_spending_mix_drift(
     (SHARED oracle). State is |entities|·|weeks|·|categories| rows;
     history is never re-scanned."""
     from ..operators.fraud_stats import mix_drift_from_cells
-    from ..sources.readers import normalize_event_ts
 
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "mixdrift")
-    schema = "_e long, _m timestamp, _c string, _cv long, _cn long"
     keys = ["_e", "_m", "_c"]
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.col("user_id").alias("_e"),
                 F.col("event_type").alias("_c"),
@@ -3311,23 +2857,14 @@ def stream_spending_mix_drift(
             )
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy(*keys)
-                .agg(
-                    F.sum("_cv").cast("long").alias("_cv"),
-                    F.sum("_cn").cast("long").alias("_cn"),
-                )
-            )
-
-        state.apply_delta(delta, batch_id, keys, merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    cells = state.read_or_empty(schema)
+    cells = _fold_drain(
+        _split_stream(spark, sf_dir, "events", n_files),
+        "mixdrift",
+        keys,
+        [F.sum(c).cast("long").alias(c) for c in ("_cv", "_cn")],
+        delta,
+        "_e long, _m timestamp, _c string, _cv long, _cn long",
+    )
     maxm = cells.agg(F.max("_m").alias("_maxm"))
     per = (
         cells.crossJoin(F.broadcast(maxm))
@@ -3362,19 +2899,10 @@ def stream_round_amount_bias(
     commit-marker guard."""
     from ..operators.fraud_stats import round_amount_bias_from_counts
 
-    src = _orders_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "round_bias")
-    schema = "grp string, n long, n_round long"
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        cents = F.round(F.col("o_totalprice") * 100).cast("long")
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 F.col("o_orderpriority").alias("grp"), cents.alias("_c")
             )
@@ -3387,24 +2915,44 @@ def stream_round_amount_bias(
             )
         )
 
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return (
-                prev.unionByName(d)
-                .groupBy("grp")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("n_round").cast("long").alias("n_round"),
-                )
-            )
-
-        state.apply_delta(delta, batch_id, ["grp"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    final = state.read_or_empty(schema)
+    final = _fold_drain(
+        _split_stream(spark, sf_dir, "orders", n_files),
+        "round_bias",
+        ["grp"],
+        [F.sum(c).cast("long").alias(c) for c in ("n", "n_round")],
+        delta,
+        "grp string, n long, n_round long",
+    )
     return round_amount_bias_from_counts(final)
+
+
+def _stream_user_days(
+    spark: SparkSession, sf_dir: str, n_files: int, state_key: str
+) -> DataFrame:
+    """Drain the live event feed into its distinct (user_id, epoch-day
+    ``d``) pair set — the sufficient statistic the rolling-WAU and
+    new-vs-returning screens share: per micro-batch the NEW pairs fold
+    into the bucketed parquet store as a key-set union, so state is
+    |distinct pairs| and history is never re-scanned."""
+
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
+            batch_df.where(F.col("user_id").isNotNull())
+            .select(
+                "user_id",
+                F.unix_date(F.col("ts").cast("date")).cast("long").alias("d"),
+            )
+            .distinct()
+        )
+
+    return _fold_drain(
+        _split_stream(spark, sf_dir, "events", n_files),
+        state_key,
+        ["user_id", "d"],
+        [],
+        delta,
+        "user_id long, d long",
+    )
 
 
 def stream_rolling_wau(
@@ -3422,38 +2970,8 @@ def stream_rolling_wau(
     equals the batch ``rolling_wau_events`` bit-for-bit — which the
     SHARED oracle attests."""
     from ..operators.sequences import trailing_distinct_count
-    from ..sources.readers import normalize_event_ts
 
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "rolling_wau")
-    schema = "user_id long, d long"
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = (
-            batch_df.where(F.col("user_id").isNotNull())
-            .select(
-                "user_id",
-                F.unix_date(F.col("ts").cast("date")).cast("long").alias("d"),
-            )
-            .distinct()
-        )
-
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return prev.unionByName(d).distinct()
-
-        state.apply_delta(delta, batch_id, ["user_id", "d"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    pairs = state.read_or_empty(schema)
+    pairs = _stream_user_days(spark, sf_dir, n_files, "rolling_wau")
     return trailing_distinct_count(pairs, "user_id", "d", window_days=7)
 
 
@@ -3467,38 +2985,7 @@ def stream_new_vs_returning(
     day + day-spine counts) runs once on the drained state. Drained
     availableNow ≡ the batch ``new_vs_returning_events`` bit-for-bit,
     which the SHARED oracle attests."""
-    from ..sources.readers import normalize_event_ts
-
-    src = _events_multifile_dir(spark, sf_dir, n_files)
-    raw_schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    state = _ParquetFoldState(spark, "new_vs_ret")
-    schema = "user_id long, d long"
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        delta = (
-            batch_df.where(F.col("user_id").isNotNull())
-            .select(
-                "user_id",
-                F.unix_date(F.col("ts").cast("date")).cast("long").alias("d"),
-            )
-            .distinct()
-        )
-
-        def merge(prev, d):
-            if prev is None:
-                return d
-            return prev.unionByName(d).distinct()
-
-        state.apply_delta(delta, batch_id, ["user_id", "d"], merge)
-
-    q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
-    q.awaitTermination()
-    pairs = state.read_or_empty(schema)
+    pairs = _stream_user_days(spark, sf_dir, n_files, "new_vs_ret")
     firstd = pairs.groupBy("user_id").agg(F.min("d").alias("fd"))
     bounds = pairs.agg(F.min("d").alias("_mn"), F.max("d").alias("_mx"))
     spine = bounds.select(

@@ -13,6 +13,16 @@ def test_entry_smoke(spark):
     assert {"RuleFraud", "MLFraud", "FraudType"} <= set(df.columns)
 
 
+def test_get_spark_pins_ansi_mode(spark):
+    """Overflow must fail loudly (betweenness_sampled's BIGINT σ/δ
+    counts rely on it), so ANSI mode is pinned, not assumed."""
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark import (
+        get_spark,
+    )
+
+    assert get_spark().conf.get("spark.sql.ansi.enabled") == "true"
+
+
 def test_oracle_keys_subset_of_queries():
     q = entrymod.queries()
     o = entrymod.oracle_sql()

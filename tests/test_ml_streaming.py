@@ -748,16 +748,11 @@ def test_fold_state_stays_off_the_driver(spark, sf_dir, monkeypatch):
     assert mv_state.last_batch() == 1 and attr_state.last_batch() == 1
 
 
-def _fold_sum_merge(prev, d):
+def _sum_n():
+    """``apply_delta`` aggs of the test folds: keyed sum of ``n``."""
     from pyspark.sql import functions as F
 
-    if prev is None:
-        return d
-    return (
-        prev.unionByName(d)
-        .groupBy("k")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    return [F.sum("n").cast("long").alias("n")]
 
 
 def test_fold_state_bucketed_merge_reads_only_touched_buckets(spark):
@@ -793,7 +788,7 @@ def test_fold_state_bucketed_merge_reads_only_touched_buckets(spark):
     all_keys = spark.createDataFrame(
         [(mapping[b], 1) for b in range(n_buckets)], "k long, n long"
     )
-    state.apply_delta(all_keys, 0, ["k"], _fold_sum_merge)
+    state.apply_delta(all_keys, 0, ["k"], _sum_n())
     assert [state._bucket_last(k) for k in range(n_buckets)] == [0] * n_buckets
 
     # poison an untouched bucket's data file
@@ -805,7 +800,7 @@ def test_fold_state_bucketed_merge_reads_only_touched_buckets(spark):
         fh.write(b"not a parquet file")
 
     one_key = spark.createDataFrame([(mapping[0], 1)], "k long, n long")
-    state.apply_delta(one_key, 1, ["k"], _fold_sum_merge)  # must not read victim
+    state.apply_delta(one_key, 1, ["k"], _sum_n())  # must not read victim
     assert state._bucket_last(0) == 1
     assert all(
         state._bucket_last(k) == 0 for k in range(n_buckets) if k != 0
@@ -832,21 +827,21 @@ def test_fold_state_survives_driver_restart_with_stable_path(spark, tmp_path):
     p = str(tmp_path / "fold_state")
     s1 = _ParquetFoldState(spark, "restart", path=p)
     d0 = spark.createDataFrame([(1, 10), (2, 20)], "k long, n long")
-    s1.apply_delta(d0, 0, ["k"], _fold_sum_merge)
+    s1.apply_delta(d0, 0, ["k"], _sum_n())
 
     # "restart": a fresh instance pointed at the same path
     s2 = _ParquetFoldState(spark, "restart", path=p)
     assert s2.last_batch() == 0
     assert {tuple(r) for r in s2.read().collect()} == {(1, 10), (2, 20)}
     # the replay guard survived too: re-applying batch 0 is a no-op
-    s2.apply_delta(d0, 0, ["k"], _fold_sum_merge)
+    s2.apply_delta(d0, 0, ["k"], _sum_n())
     assert {tuple(r) for r in s2.read().collect()} == {(1, 10), (2, 20)}
     # and a new batch folds
     s2.apply_delta(
         spark.createDataFrame([(1, 5)], "k long, n long"),
         1,
         ["k"],
-        _fold_sum_merge,
+        _sum_n(),
     )
     assert {tuple(r) for r in s2.read().collect()} == {(1, 15), (2, 20)}
 
@@ -866,7 +861,7 @@ def test_fold_state_retry_replaces_uncommitted_leftover(spark):
 
     state = _ParquetFoldState(spark, "test_crash_window", n_buckets=2)
     d0 = spark.createDataFrame([(1, 10), (2, 20)], "k long, n long")
-    state.apply_delta(d0, 0, ["k"], _fold_sum_merge)
+    state.apply_delta(d0, 0, ["k"], _sum_n())
 
     # forge the crash window for every bucket of batch 1: v1 moved
     # into place but _SUCCESS not yet touched — which also means the
@@ -881,7 +876,7 @@ def test_fold_state_retry_replaces_uncommitted_leftover(spark):
         if os.path.isdir(v0):
             shutil.copytree(v0, os.path.join(snap, f"b{k}"))
     d1 = spark.createDataFrame([(1, 5), (2, 7)], "k long, n long")
-    state.apply_delta(d1, 1, ["k"], _fold_sum_merge)
+    state.apply_delta(d1, 1, ["k"], _sum_n())
     stale = []
     for k in range(state.n_buckets):
         dest = os.path.join(state._bucket_dir(k), "v1")
@@ -898,7 +893,7 @@ def test_fold_state_retry_replaces_uncommitted_leftover(spark):
     shutil.rmtree(snap, ignore_errors=True)
 
     # the foreachBatch retry re-invokes with the SAME batch id
-    state.apply_delta(d1, 1, ["k"], _fold_sum_merge)
+    state.apply_delta(d1, 1, ["k"], _sum_n())
     assert state.last_batch() == 1
     for dest in stale:
         nested = [n for n in os.listdir(dest) if n.startswith("_kb=")]
@@ -919,11 +914,57 @@ def test_fold_state_null_key_folds_cleanly(spark):
 
     state = _ParquetFoldState(spark, "test_null_key", n_buckets=4)
     d0 = spark.createDataFrame([(None, 3), ("a", 1)], "k string, n long")
-    state.apply_delta(d0, 0, ["k"], _fold_sum_merge)
+    state.apply_delta(d0, 0, ["k"], _sum_n())
     d1 = spark.createDataFrame([(None, 4)], "k string, n long")
-    state.apply_delta(d1, 1, ["k"], _fold_sum_merge)
+    state.apply_delta(d1, 1, ["k"], _sum_n())
     got = {r["k"]: r["n"] for r in state.read().collect()}
     assert got == {None: 7, "a": 1}
+
+    # the key-set state (empty aggs): a distinct union, null included
+    keys = _ParquetFoldState(spark, "test_null_keyset", n_buckets=4)
+    keys.apply_delta(d0.select("k"), 0, ["k"], [])
+    keys.apply_delta(d1.select("k"), 1, ["k"], [])
+    assert {r["k"] for r in keys.read().collect()} == {None, "a"}
+
+
+def test_fold_state_output_log_commits_each_batch_once(spark):
+    """The per-batch output log (the hits of the duplicate-charge and
+    impossible-velocity folds): an empty log reads back as an empty
+    frame with the hit schema; re-committing a committed batch id is a
+    no-op that never builds its rows; a version dir left without
+    _SUCCESS by a crash is invisible to reads, and the same-id retry
+    replaces it instead of nesting inside it."""
+    import os
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.streaming.jobs import (
+        _ParquetFoldState,
+    )
+
+    schema = "event_id long, gap_s long"
+    state = _ParquetFoldState(spark, "test_log")
+    empty = state.read_log(schema)
+    assert empty.count() == 0
+    assert empty.schema == spark.createDataFrame([], schema).schema
+
+    state.log(0, lambda: spark.createDataFrame([(1, 5)], schema))
+
+    def boom():
+        raise AssertionError("a committed batch must not be rebuilt")
+
+    state.log(0, boom)  # replay of a committed batch
+    assert [tuple(r) for r in state.read_log(schema).collect()] == [(1, 5)]
+
+    # crash window: batch 1's files written, _SUCCESS never touched
+    state.log(1, lambda: spark.createDataFrame([(2, 9)], schema))
+    v1 = os.path.join(state._log_path(), "v1")
+    os.remove(os.path.join(v1, "_SUCCESS"))
+    assert [tuple(r) for r in state.read_log(schema).collect()] == [(1, 5)]
+
+    state.log(1, lambda: spark.createDataFrame([(3, 7)], schema))  # retry
+    nested = [n for n in os.listdir(v1) if os.path.isdir(os.path.join(v1, n))]
+    assert nested == [], f"retry nested {nested} inside {v1}"
+    got = sorted(tuple(r) for r in state.read_log(schema).collect())
+    assert got == [(1, 5), (3, 7)]
 
 
 def test_incremental_cc_fold_contract(spark, sf_dir):
