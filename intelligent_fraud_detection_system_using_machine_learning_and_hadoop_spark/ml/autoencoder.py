@@ -18,7 +18,7 @@ environment; the module is dependency-free and deterministic). Training
 runs on driver-collected features — correct at the reference's scale
 (30–10k rows; SURVEY.md §7 step 6) — while **scoring is distributed**:
 weights broadcast to executors, forward pass vectorized per Arrow batch
-via ``mapInPandas`` (the 10-100× path vs row-at-a-time UDFs). For
+in one scalar ``pandas_udf`` (the 10-100× path vs row-at-a-time UDFs). For
 cluster-scale *training*, swap in a data-parallel trainer behind the
 same weight container.
 """
@@ -30,7 +30,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.ml.functions import vector_to_array
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -130,39 +130,43 @@ def train_autoencoder(
     return model
 
 
+def reconstruction_error(features_df: DataFrame, model: NumpyAutoencoder) -> Column:
+    """Per-row MSE reconstruction error of ``features_df``'s ``features``
+    vector, as a column (reference U2). The weight state is broadcast
+    once; one scalar-iterator Arrow ``pandas_udf`` rebuilds the model
+    once per partition and runs the vectorized forward per Arrow batch.
+    Only the feature array crosses into Python: the row's other columns
+    stay in the JVM beside it, so the error lands in the row it was
+    computed from, with no row key and no join."""
+    bc = features_df.sparkSession.sparkContext.broadcast(model.state())
+
+    @F.pandas_udf(T.DoubleType())
+    def mse(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        local = NumpyAutoencoder.from_state(bc.value)
+        for farr in batches:
+            x = np.stack(farr.to_numpy())
+            yield pd.Series(np.mean((x - local.forward(x)) ** 2, axis=1))
+
+    return mse(vector_to_array(F.col("features")))
+
+
 def autoencoder_scores(
     features_df: DataFrame,
     model: NumpyAutoencoder,
     id_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Distributed scoring (reference U2): broadcast the weight state,
-    run the vectorized forward per Arrow batch, emit per-row MSE
-    reconstruction error. Only id + features cross into Python."""
-    spark = features_df.sparkSession
+    """Distributed scoring: ``id_cols`` plus :func:`reconstruction_error`
+    as ``ReconstructionError``. The default id column ``_row_id`` is
+    generated when the input lacks it."""
     id_cols = id_cols or ["_row_id"]
     if id_cols == ["_row_id"] and "_row_id" not in features_df.columns:
         features_df = features_df.withColumn(
             "_row_id", F.monotonically_increasing_id()
         )
-    bc = spark.sparkContext.broadcast(model.state())
-    schema = T.StructType(
-        [features_df.schema[c] for c in id_cols]
-        + [T.StructField("ReconstructionError", T.DoubleType(), False)]
+    return features_df.select(
+        *id_cols,
+        reconstruction_error(features_df, model).alias("ReconstructionError"),
     )
-    arr_df = features_df.select(
-        *id_cols, vector_to_array(F.col("features")).alias("_farr")
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = NumpyAutoencoder.from_state(bc.value)
-        for pdf in batches:
-            x = np.stack(pdf["_farr"].to_numpy())
-            err = np.mean((x - local.forward(x)) ** 2, axis=1)
-            out = pdf[id_cols].copy()
-            out["ReconstructionError"] = err
-            yield out
-
-    return arr_df.mapInPandas(score, schema=schema)
 
 
 def _backprop_sum(model: NumpyAutoencoder, xb: np.ndarray) -> tuple[list, float]:

@@ -18,8 +18,8 @@ Spark-first split of the algorithm:
   forest is a few KB of flattened node arrays, broadcast; scoring maps
   each Arrow batch through a vectorized tree walk (every node level
   advances ALL rows at once — no per-row Python recursion), appending
-  ``iforest_score`` = 2^(−E[h]/c(ψ)). Linear scan, zero shuffles —
-  the same plan shape as autoencoder_scores (ml/autoencoder.py).
+  ``iforest_score`` = 2^(−E[h]/c(ψ)). Linear scan, zero shuffles,
+  like autoencoder_scores (ml/autoencoder.py).
 
 No SQL oracle (randomized model — the driver records a rows-only
 check); determinism, partitioning-invariance, and the planted-outlier

@@ -23,6 +23,8 @@ parity traps") — deliberate, not bugs:
 
 Model persistence is ``PipelineModel.save/load`` (one directory, HDFS/
 object-store ready) instead of the reference's joblib+torch file pairs.
+A load reads every stage's metadata and data through Spark jobs, so
+:func:`load_preprocessor` keeps one loaded model per path.
 """
 
 from __future__ import annotations
@@ -34,8 +36,10 @@ from pyspark.ml.feature import (
     StringIndexer,
     VectorAssembler,
 )
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..cache import dataset_fingerprint
 
 #: Reference feature bindings (``train.py:15``): numeric ClaimAmount +
 #: day-offset Date, categorical SubsidyType.
@@ -107,5 +111,28 @@ def save_preprocessor(model: PipelineModel, path: str) -> None:
     model.write().overwrite().save(path)
 
 
+#: path -> ((content fingerprint, applicationId), loaded model)
+_LOADED: dict[str, tuple[tuple[str, str], PipelineModel]] = {}
+
+
 def load_preprocessor(path: str) -> PipelineModel:
-    return PipelineModel.load(path)
+    """``PipelineModel.load(path)``, memoized per path. The memo is
+    keyed by the directory's content fingerprint (file names, sizes,
+    mtimes) and the running SparkContext's ``applicationId``: retraining
+    into the same directory, or a new session, loads afresh. A path the
+    fingerprint cannot read (a remote URI) is loaded every time. Callers
+    share the returned model, so none may change its params. Two threads
+    missing at once both load; either model is valid."""
+    try:
+        key = (
+            dataset_fingerprint(path),
+            SparkSession.active().sparkContext.applicationId,
+        )
+    except OSError:
+        return PipelineModel.load(path)
+    hit = _LOADED.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    model = PipelineModel.load(path)
+    _LOADED[path] = (key, model)
+    return model

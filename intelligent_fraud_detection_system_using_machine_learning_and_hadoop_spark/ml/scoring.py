@@ -9,7 +9,7 @@ Two scorers over the preprocessed ``features`` vector:
   the normal subspace" semantics as the reference's autoencoder
   (SURVEY.md §7 step 5) with zero Python in the row path.
 * **Autoencoder** (reference parity): see ``autoencoder.py`` — scored
-  through an Arrow-batched ``mapInPandas`` with driver-broadcast
+  through one Arrow-batched scalar ``pandas_udf`` with driver-broadcast
   weights (the reference's U2 torch forward, ``run_pipeline.py:62-64``).
 
 Thresholding preserves the reference's **batch-relative** semantics

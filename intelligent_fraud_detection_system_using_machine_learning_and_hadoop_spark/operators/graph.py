@@ -1968,14 +1968,18 @@ def betweenness_sampled(
     11.86 → 10.06 s, sf1 15.41 → 14.91 s; inside the rejected
     pre-partitioned layout the same swap won all 6. Width bounds,
     both loud-by-construction under ANSI (ARITHMETIC_OVERFLOW raises,
-    never silent corruption — pass ``exact_width="decimal(38,0)"`` to
-    restore the 38-digit ceiling): σ overflows only past 9.2·10¹⁸
+    never silent corruption): σ overflows only past 9.2·10¹⁸
     equal-length shortest paths to one node within ``max_hops``; the
     per-(s,v) δ sum is δ_s(v)·10¹² ≤ |component|·10¹², safe to
     ~9·10⁶-node components. Both are graph-STRUCTURE bounds, not
     data-volume bounds (unlike the r10 spearman overflow, which grew
     with row count and was guaranteed to bite at some SF — the
     disjoint-copy scale model keeps σ/δ per component constant).
+    ``exact_width="decimal(38,0)"`` gives the σ and δ aggregations
+    38-digit headroom, but not the per-term quantization:
+    ``F.floor(contrib·10¹²)`` returns a long before the cast, so each
+    quantized successor term (σ_v/σ_w)·(1 + δ(w))·10¹² stays capped at
+    ~9.2·10¹⁸ in either width.
     The one cross-source reduction Σ_s Σ_levels qd keeps
     decimal(38,0) headroom regardless — it is settled-sized and off
     the hot path.

@@ -369,9 +369,14 @@ class _ParquetFoldState:
         touched.sort()
         todo = [k for k in touched if self._bucket_last(k) < batch_id]
         if todo:
-            delta_todo = self._spark.read.option("basePath", scratch).parquet(
-                *[os.path.join(scratch, f"_kb={k}") for k in todo]
-            ).drop("_kb")
+            # the scratch holds exactly ``delta``'s columns: passing its
+            # schema skips the footer-inference job a bare read launches
+            delta_todo = (
+                self._spark.read.schema(delta.schema)
+                .option("basePath", scratch)
+                .parquet(*[os.path.join(scratch, f"_kb={k}") for k in todo])
+                .drop("_kb")
+            )
             prev_paths = [
                 os.path.join(self._bucket_dir(k), f"v{self._bucket_last(k)}")
                 for k in todo

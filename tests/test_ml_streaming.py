@@ -384,51 +384,88 @@ def test_distributed_training_tree_merge_matches_flat(spark, sf_dir):
         np.testing.assert_allclose(a, b, rtol=1e-7, atol=1e-10)
 
 
+def _jobs_in_group(spark, group: str, fn):
+    """(fn(), number of Spark jobs ``fn`` launched). Counted in a
+    dedicated job group: the global no-group count is unstable late in a
+    long suite (the retained-jobs buffer evicts old IDs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
 def test_score_is_one_lazy_plan_after_model_load(spark, tmp_path):
-    """EP1 laziness (VERDICT r2 item 4): score() must not run any DATA
-    job — the batch-relative threshold stays inside the Catalyst plan as
-    a broadcast 1-row aggregate. The only jobs score() may launch are
-    the ML-persistence metadata reads, measured separately as a bound."""
+    """EP1 laziness: once the model dir is loaded, score() runs no job
+    at all — the batch-relative threshold stays inside the Catalyst plan
+    as a broadcast 1-row aggregate, and the preprocessor comes from
+    load_preprocessor's memo."""
+    import os
+
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml.preprocess import (
         load_preprocessor,
     )
+    from tests.test_plan_shapes import plan_of
 
     claims = claims_fixture(spark, n=60)
     model_dir = str(tmp_path / "model")
     pipeline.train(claims, model_dir)
-
-    import os
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    # Count jobs in DEDICATED job groups: the global no-group count is
-    # unstable late in a long suite (the retained-jobs buffer evicts
-    # old IDs, shrinking the baseline mid-measurement).
-    # cost of loading the persisted PipelineModel alone (metadata reads)
-    sc.setJobGroup("lazy_probe_load", "model load phase")
     load_preprocessor(os.path.join(model_dir, "preprocessor"))
-    load_jobs = len(tracker.getJobIdsForGroup("lazy_probe_load") or [])
 
-    sc.setJobGroup("lazy_probe_score", "score phase")
-    scored = pipeline.score(claims, model_dir=model_dir)
-    score_jobs = len(tracker.getJobIdsForGroup("lazy_probe_score") or [])
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    assert score_jobs <= load_jobs, (
-        f"score() ran {score_jobs - load_jobs} data job(s) beyond model load"
-    )
-    # and the threshold aggregate + broadcast join live in the plan
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        scored.explain("formatted")
-    plan = buf.getvalue()
+    for attempt in ("first", "second"):
+        scored, jobs = _jobs_in_group(
+            spark, f"lazy_probe_score_{attempt}",
+            lambda: pipeline.score(claims, model_dir=model_dir),
+        )
+        assert jobs == 0, f"{attempt} score() ran {jobs} job(s)"
+    plan = plan_of(scored)
     assert "stddev_pop" in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     # the plan still evaluates correctly
     assert scored.count() == 61
+
+
+def test_score_runs_one_model_pass_without_row_key(spark, tmp_path):
+    """The autoencoder error is a column of the scored rows: the
+    physical plan holds ONE Arrow Python node (formatted explain lists
+    each distinct node once, however many branches read the cache), no
+    mapInPandas pass and no row key to join it back by."""
+    import re
+
+    from tests.test_plan_shapes import plan_of
+
+    claims = claims_fixture(spark, n=60)
+    model_dir = str(tmp_path / "model")
+    pipeline.train(claims, model_dir)
+    plan = plan_of(pipeline.score(claims, model_dir=model_dir))
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
+    for absent in ("MapInPandas", "_row_md5", "_row_id"):
+        assert absent not in plan, absent
+
+
+def test_load_preprocessor_memo_reloads_on_retrain(spark, tmp_path):
+    """An unchanged model dir returns the SAME loaded model without a
+    job; retraining into the same dir changes its fingerprint, so the
+    next load is a fresh model."""
+    import os
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml.preprocess import (
+        load_preprocessor,
+    )
+
+    model_dir = str(tmp_path / "model")
+    path = os.path.join(model_dir, "preprocessor")
+    pipeline.train(claims_fixture(spark, n=60), model_dir)
+    first = load_preprocessor(path)
+    again, jobs = _jobs_in_group(spark, "memo_hit", lambda: load_preprocessor(path))
+    assert again is first
+    assert jobs == 0
+    pipeline.train(claims_fixture(spark, n=80, seed=8), model_dir)
+    fresh = load_preprocessor(path)
+    assert fresh is not first
+    assert fresh.stages[-1].mean != first.stages[-1].mean
 
 
 def test_streaming_topk_trending_equals_batch(spark, sf_dir):

@@ -4,8 +4,8 @@
   formatter NFC-normalizes the source file,
 * mapInPandas text ops must derive the id column's type from the input
   schema instead of hard-coding ``long``,
-* ``pipeline.score``'s row key must be content-deterministic — a cache
-  eviction / recompute may never re-align the feature/join-back branches,
+* ``pipeline.score``'s output must not depend on cache residency — a
+  recompute after the caches are dropped yields the same rows,
 * binaryFile asset ids must be wide enough that a billion-file corpus
   doesn't birthday-collide.
 """
@@ -68,11 +68,11 @@ def test_compression_quality_string_doc_ids(spark):
 
 
 def test_score_row_key_survives_recompute(spark, tmp_path):
-    """ADVICE r7 (medium): scoring alignment must not depend on cache
-    residency. Collect the scored frame, forcibly drop every cache (the
-    exact hazard: a second score() call swapping the shared key), and
-    collect the SAME frame again — a content-based row key recomputes
-    identically, so the rows must match exactly."""
+    """Scoring must not depend on cache residency. Collect the scored
+    frame, forcibly drop every cache (as a second score() call swapping
+    the shared cache key would), and collect the SAME frame again: each
+    row's error is a column computed from that row, so the recomputed
+    rows must match exactly."""
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark import (
         pipeline,
     )
