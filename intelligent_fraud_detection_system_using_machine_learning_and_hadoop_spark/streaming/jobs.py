@@ -162,6 +162,20 @@ def _split_stream(
     )
 
 
+def _has_join_or_window(df: DataFrame) -> bool:
+    """Whether ``df``'s optimized plan holds a join or a window: the
+    deltas that are costly to compute twice (a micro-batch against
+    static history), unlike an aggregate over the micro-batch alone."""
+    todo = [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() in ("Join", "Window"):
+            return True
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
 class _ParquetFoldState:
     """Executor/disk-resident state store for the foreachBatch folds.
     The running state is a PARQUET SNAPSHOT, one versioned directory
@@ -190,10 +204,18 @@ class _ParquetFoldState:
     through :meth:`apply_delta`, which hash-buckets the snapshot on the
     fold key so a micro-batch reads and rewrites ONLY the buckets its
     keys land in — O(|delta| + touched-buckets) per batch, not
-    O(|state|). The whole-snapshot :meth:`write` remains for folds
-    whose merge is NOT per-key (the incremental-CC fold: component
-    merging is a global closure over prev ∪ delta, so no key bucketing
-    can confine it).
+    O(|state|): an ``Observation`` names the touched buckets without
+    writing a file, and the merge of their previous state with the
+    delta is the batch's one parquet write. The whole-snapshot
+    :meth:`write` remains for folds whose merge is NOT per-key (the
+    incremental-CC fold: component merging is a global closure over
+    prev ∪ delta, so no key bucketing can confine it). Both layouts
+    remember the schema this instance last committed and read state
+    back with it, so once a store has folded a batch no read of its
+    state runs a footer-inference job. A fresh instance on a stable
+    ``path`` infers the previous run's schema from the files, so a
+    renamed column fails the merge's ``unionByName`` instead of being
+    read back as nulls.
 
     Folds that also EMIT rows per batch (the hits of the duplicate-
     charge and impossible-velocity screens) commit them through the
@@ -232,6 +254,7 @@ class _ParquetFoldState:
         self._spark = spark
         self._prefix = prefix
         self.n_buckets = n_buckets
+        self._schema = None  # the state schema, once this instance commits
         if path is not None:
             os.makedirs(path, exist_ok=True)
             self.dir = path
@@ -280,15 +303,22 @@ class _ParquetFoldState:
         per_bucket = [self._bucket_last(k) for k in range(self.n_buckets)]
         return max([whole[-1] if whole else -1, *per_bucket])
 
+    def _read(self, *paths: str) -> DataFrame:
+        """Committed state dirs as one frame. Once this instance has
+        committed a batch it knows the state schema, and passing it
+        skips the footer-inference job a bare parquet read launches."""
+        reader = self._spark.read
+        if self._schema is not None:
+            reader = reader.schema(self._schema)
+        return reader.parquet(*paths)
+
     def read(self) -> DataFrame | None:
         """Latest committed state, or None before the first commit —
         the whole snapshot for write()-mode folds, the union of every
         bucket's latest committed version for apply_delta()-mode."""
         whole = self._committed()
         if whole:
-            return self._spark.read.parquet(
-                os.path.join(self.dir, f"v{whole[-1]}")
-            )
+            return self._read(os.path.join(self.dir, f"v{whole[-1]}"))
         paths = [
             os.path.join(self._bucket_dir(k), f"v{self._bucket_last(k)}")
             for k in range(self.n_buckets)
@@ -296,7 +326,7 @@ class _ParquetFoldState:
         ]
         if not paths:
             return None
-        return self._spark.read.parquet(*paths)
+        return self._read(*paths)
 
     def write(self, df: DataFrame, batch_id: int) -> None:
         """Commit ``df`` as the post-``batch_id`` WHOLE snapshot, then
@@ -309,10 +339,59 @@ class _ParquetFoldState:
         df.write.mode("overwrite").parquet(
             os.path.join(self.dir, f"v{batch_id}")
         )
+        self._schema = df.schema
         for v in self._committed():
             if v < batch_id:
                 shutil.rmtree(
                     os.path.join(self.dir, f"v{v}"), ignore_errors=True
+                )
+
+    def _touched_buckets(self, delta: DataFrame, kb) -> list[int]:
+        """Sorted bucket ids ``delta``'s keys hash to, learned from an
+        ``Observation`` on a files-free ``noop`` write: at most
+        ``n_buckets`` ints reach the driver, never a delta row.
+
+        Null fold keys are safe by construction: xxhash64 skips null
+        inputs and returns its seed (42), so ``kb`` is never null and
+        a null-keyed row lands in a real bucket (pinned by the null-key
+        fold test in tests/test_ml_streaming.py). ``collect_set`` would
+        silently drop a null id, so nulls are counted beside it and any
+        future violation of that invariant raises here."""
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        delta.select(kb.alias("_kb")).observe(
+            obs,
+            F.sort_array(F.collect_set("_kb")).alias("buckets"),
+            F.count_if(F.col("_kb").isNull()).alias("nulls"),
+        ).write.format("noop").mode("overwrite").save()
+        buckets, nulls = obs.get["buckets"], obs.get["nulls"]
+        if nulls:
+            raise ValueError(
+                f"_ParquetFoldState.apply_delta: {nulls} null bucket id(s) "
+                f"beside {buckets} — the _kb expression must never be null"
+            )
+        return buckets
+
+    @staticmethod
+    def _check_merge_schema(delta: DataFrame, key_cols, aggs) -> None:
+        """Raise unless the keyed merge yields ``delta``'s column names
+        and types, in order: state written by one batch is read back by
+        the next with ``delta.schema``. Analysis only, no job."""
+        if not aggs:
+            return  # distinct() keeps the schema
+        from itertools import zip_longest
+
+        def cols(df):
+            return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+        want, got = cols(delta), cols(delta.groupBy(*key_cols).agg(*aggs))
+        for g, w in zip_longest(got, want):
+            if g != w:
+                raise ValueError(
+                    f"_ParquetFoldState.apply_delta: the merge gives column "
+                    f"{g} where the delta has {w} — the aggs must keep the "
+                    f"delta's column names and types"
                 )
 
     def apply_delta(
@@ -326,94 +405,86 @@ class _ParquetFoldState:
         over ONLY the buckets the delta's keys hash to — per-batch cost
         O(|delta| + touched-buckets), never O(|state|). Group keys never
         span buckets, so the bucket-restricted merge ≡ the global merge
-        restricted to those buckets.
+        restricted to those buckets. The merge must keep the delta's
+        column names and types (checked before any job; ValueError).
 
-        Mechanics: the delta is written hash-partitioned by
-        ``_kb = pmod(xxhash64(keys), n_buckets)`` (one extra O(|delta|)
-        write; its directory listing names the touched buckets WITHOUT
-        any driver collect — the fold spy test stays strict); previous
+        Mechanics: an ``Observation`` on a ``noop`` write names the
+        touched buckets ``_kb = pmod(xxhash64(keys), n_buckets)`` (no
+        files, no collect — the fold spy test stays strict); previous
         state is read from exactly the touched buckets' latest
-        committed dirs; the merged result lands per-bucket as
-        ``b{k}/v{batch_id}`` with its own _SUCCESS marker. Exactly-once
-        under foreachBatch's at-least-once retries is PER BUCKET: a
-        replayed batch skips buckets already committed at ≥ batch_id
-        and redoes only the ones a crash left behind, against their
-        previous committed versions."""
+        committed dirs (with the schema this instance last committed,
+        see :meth:`_read`); the merge is written ONCE partitioned by
+        ``_kb``, and each bucket's part is moved to ``b{k}/v{batch_id}``
+        with its own _SUCCESS marker. The delta thus feeds two jobs: one
+        that joins or windows is cached for them (and released after,
+        unless the caller cached it), any other is computed twice, which
+        measured cheaper than caching it. Exactly-once under
+        foreachBatch's at-least-once retries is PER BUCKET: a replayed
+        batch skips buckets already committed at ≥ batch_id and redoes
+        only the ones a crash left behind, against their previous
+        committed versions."""
+        self._check_merge_schema(delta, key_cols, aggs)
+        cached = not delta.is_cached and _has_join_or_window(delta)
+        if cached:
+            delta = delta.persist()
+        try:
+            self._merge_touched(delta, batch_id, key_cols, aggs)
+        finally:
+            if cached:
+                delta.unpersist()
+
+    def _merge_touched(self, delta: DataFrame, batch_id: int, key_cols, aggs) -> None:
+        """:meth:`apply_delta` after its schema check: observe, merge,
+        write once, publish per bucket."""
         import shutil
 
         kb = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(self.n_buckets)).cast(
             "int"
         )
-        scratch = os.path.join(self.dir, f"_delta_v{batch_id}")
-        delta.withColumn("_kb", kb).write.mode("overwrite").partitionBy(
-            "_kb"
-        ).parquet(scratch)
-        # NULL fold keys are SAFE here, by construction: xxhash64
-        # skips null inputs and returns its seed (42), so _kb is never
-        # null and no __HIVE_DEFAULT_PARTITION__ dir can appear
-        # (pinned by tests/test_ml_streaming.py null-key fold test).
-        # The parse guard below turns any future violation of that
-        # invariant into a named error instead of an opaque int().
-        touched = []
-        for name in os.listdir(scratch):
-            if not name.startswith("_kb="):
+        todo = [
+            k
+            for k in self._touched_buckets(delta, kb)
+            if self._bucket_last(k) < batch_id
+        ]
+        if not todo:
+            return
+        merged = delta.where(kb.isin(todo))
+        prev_paths = [
+            os.path.join(self._bucket_dir(k), f"v{self._bucket_last(k)}")
+            for k in todo
+            if self._bucket_last(k) >= 0
+        ]
+        if prev_paths:
+            both = self._read(*prev_paths).unionByName(merged)
+            merged = both.groupBy(*key_cols).agg(*aggs) if aggs else both.distinct()
+        out = os.path.join(self.dir, f"_merge_v{batch_id}")
+        merged.withColumn("_kb", kb).write.mode("overwrite").partitionBy("_kb").parquet(out)
+        self._schema = delta.schema
+        for k in todo:
+            part = os.path.join(out, f"_kb={k}")
+            if not os.path.isdir(part):
+                # a keyed merge of a non-empty bucket delta can't
+                # produce zero rows; should it ever, leaving the
+                # old version is the additive-identity behavior
                 continue
-            try:
-                touched.append(int(name.split("=")[1]))
-            except ValueError:
-                raise ValueError(
-                    f"_ParquetFoldState.apply_delta: non-integer bucket "
-                    f"partition {name!r} under {scratch} — the _kb "
-                    f"expression must never be null/non-int"
-                ) from None
-        touched.sort()
-        todo = [k for k in touched if self._bucket_last(k) < batch_id]
-        if todo:
-            # the scratch holds exactly ``delta``'s columns: passing its
-            # schema skips the footer-inference job a bare read launches
-            delta_todo = (
-                self._spark.read.schema(delta.schema)
-                .option("basePath", scratch)
-                .parquet(*[os.path.join(scratch, f"_kb={k}") for k in todo])
-                .drop("_kb")
-            )
-            prev_paths = [
-                os.path.join(self._bucket_dir(k), f"v{self._bucket_last(k)}")
-                for k in todo
-                if self._bucket_last(k) >= 0
-            ]
-            merged = delta_todo
-            if prev_paths:
-                both = self._spark.read.parquet(*prev_paths).unionByName(delta_todo)
-                merged = both.groupBy(*key_cols).agg(*aggs) if aggs else both.distinct()
-            out = os.path.join(self.dir, f"_merge_v{batch_id}")
-            merged.withColumn("_kb", kb).write.mode("overwrite").partitionBy("_kb").parquet(out)
-            for k in todo:
-                part = os.path.join(out, f"_kb={k}")
-                if not os.path.isdir(part):
-                    # a keyed merge of a non-empty bucket delta can't
-                    # produce zero rows; should it ever, leaving the
-                    # old version is the additive-identity behavior
-                    continue
-                dest = os.path.join(self._bucket_dir(k), f"v{batch_id}")
-                os.makedirs(self._bucket_dir(k), exist_ok=True)
-                # crash window: a crash BETWEEN the move and the
-                # _SUCCESS touch leaves an uncommitted dest;
-                # _bucket_last ignores it (no marker) so the retry
-                # re-merges — but a bare move would then nest the fresh
-                # files INSIDE the stale dir as a spurious '_kb='
-                # subdir. Replace, never nest.
-                shutil.rmtree(dest, ignore_errors=True)
-                shutil.move(part, dest)
-                open(os.path.join(dest, "_SUCCESS"), "w").close()
-                for v in self._versions(self._bucket_dir(k)):
-                    if v < batch_id:
-                        shutil.rmtree(
-                            os.path.join(self._bucket_dir(k), f"v{v}"),
-                            ignore_errors=True,
-                        )
-            shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(scratch, ignore_errors=True)
+            dest = os.path.join(self._bucket_dir(k), f"v{batch_id}")
+            os.makedirs(self._bucket_dir(k), exist_ok=True)
+            # crash window: a crash BETWEEN the move and the
+            # _SUCCESS touch leaves an uncommitted dest;
+            # _bucket_last ignores it (no marker) so the retry
+            # re-merges — but a bare move would then nest the fresh
+            # files INSIDE the stale dir as a spurious '_kb='
+            # subdir. Replace, never nest.
+            shutil.rmtree(dest, ignore_errors=True)
+            shutil.move(part, dest)
+            open(os.path.join(dest, "_SUCCESS"), "w").close()
+            for v in self._versions(self._bucket_dir(k)):
+                if v < batch_id:
+                    shutil.rmtree(
+                        os.path.join(self._bucket_dir(k), f"v{v}"),
+                        ignore_errors=True,
+                    )
+        shutil.rmtree(out, ignore_errors=True)
 
     def read_or_empty(self, schema: str) -> DataFrame:
         """Latest committed snapshot, or an empty frame with the fold's
@@ -437,14 +508,15 @@ class _ParquetFoldState:
             rows().write.mode("overwrite").parquet(path)
 
     def read_log(self, schema: str) -> DataFrame:
-        """Union of every committed batch output, or an empty frame of
+        """Union of every committed batch output read with ``schema`` (the
+        schema the caller logs; no inference job), or an empty frame of
         ``schema`` when none is committed; uncommitted versions are
         ignored."""
         d = self._log_path()
         paths = [os.path.join(d, f"v{v}") for v in self._versions(d)]
         if not paths:
             return self._spark.createDataFrame([], schema)
-        return self._spark.read.parquet(*paths)
+        return self._spark.read.schema(schema).parquet(*paths)
 
 
 def _fold_drain(

@@ -1004,6 +1004,192 @@ def test_fold_state_output_log_commits_each_batch_once(spark):
     assert got == [(1, 5), (3, 7)]
 
 
+def _parquet_io_spy(monkeypatch):
+    """Record the path of every ``DataFrameWriter.parquet`` call, and
+    for every ``DataFrameReader.parquet`` call whether its reader was
+    given a schema (a schema-less read of existing files launches a
+    footer-inference job)."""
+    from pyspark.sql.readwriter import DataFrameReader, DataFrameWriter
+
+    writes: list[str] = []
+    reads: list[bool] = []
+    write_parquet = DataFrameWriter.parquet
+    read_schema = DataFrameReader.schema
+    read_parquet = DataFrameReader.parquet
+
+    def spy_write(self, path, *a, **k):
+        writes.append(path)
+        return write_parquet(self, path, *a, **k)
+
+    def spy_schema(self, schema):
+        out = read_schema(self, schema)
+        out._spied_schema = True
+        return out
+
+    def spy_read(self, *paths, **k):
+        reads.append(getattr(self, "_spied_schema", False))
+        return read_parquet(self, *paths, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_write)
+    monkeypatch.setattr(DataFrameReader, "schema", spy_schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", spy_read)
+    return writes, reads
+
+
+def test_fold_state_commits_each_batch_in_one_write(spark, monkeypatch):
+    """Each applied batch is ONE parquet write (the bucket-partitioned
+    merge; no ``_delta_v*`` scratch copy of the delta), the previous
+    state is read with the known schema, and once a store has folded a
+    batch its ``read()`` launches no job at all (no footer inference) —
+    for the bucketed and the whole-snapshot layout alike."""
+    import os
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.streaming.jobs import (
+        _ParquetFoldState,
+    )
+
+    writes, reads = _parquet_io_spy(monkeypatch)
+    state = _ParquetFoldState(spark, "test_one_write", n_buckets=4)
+    d0 = spark.createDataFrame([(k, 1) for k in range(20)], "k long, n long")
+    state.apply_delta(d0, 0, ["k"], _sum_n())
+    assert len(writes) == 1
+    d1 = spark.createDataFrame([(k, 2) for k in range(10, 30)], "k long, n long")
+    state.apply_delta(d1, 1, ["k"], _sum_n())
+    assert len(writes) == 2, writes
+    assert not any("_delta_v" in p for p in writes), writes
+    assert reads and all(reads), "a fold-state read ran without a schema"
+    assert not [n for n in os.listdir(state.dir) if n.startswith("_")]
+
+    got, jobs = _jobs_in_group(spark, "fold_state_read", state.read)
+    assert jobs == 0, f"read() of folded state ran {jobs} job(s)"
+    want = {k: (1 if k < 10 else 3 if k < 20 else 2) for k in range(30)}
+    assert {r["k"]: r["n"] for r in got.collect()} == want
+
+    whole = _ParquetFoldState(spark, "test_one_write_whole")
+    whole.write(d0, 0)
+    snap, jobs = _jobs_in_group(spark, "fold_state_read_whole", whole.read)
+    assert jobs == 0, f"read() of a whole snapshot ran {jobs} job(s)"
+    assert snap.count() == 20
+
+
+def test_fold_state_replay_writes_nothing(spark, monkeypatch):
+    """Replaying a committed batch id (foreachBatch's at-least-once
+    retry) writes no parquet and leaves every bucket's committed
+    version and files exactly as they were."""
+    import os
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.streaming.jobs import (
+        _ParquetFoldState,
+    )
+
+    state = _ParquetFoldState(spark, "test_replay_noop", n_buckets=4)
+    d0 = spark.createDataFrame([(k, 1) for k in range(20)], "k long, n long")
+    state.apply_delta(d0, 0, ["k"], _sum_n())
+    state.apply_delta(d0, 1, ["k"], _sum_n())
+
+    def tree():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), state.dir),
+             os.stat(os.path.join(d, f)).st_mtime_ns)
+            for d, _, files in os.walk(state.dir)
+            for f in files
+        )
+
+    before = tree()
+    versions = [state._bucket_last(k) for k in range(state.n_buckets)]
+    writes, _ = _parquet_io_spy(monkeypatch)
+    state.apply_delta(d0, 1, ["k"], _sum_n())
+    assert writes == []
+    assert [state._bucket_last(k) for k in range(state.n_buckets)] == versions
+    assert tree() == before
+    assert {r["n"] for r in state.read().collect()} == {2}
+
+
+def test_fold_state_rejects_type_changing_aggs(spark, monkeypatch):
+    """State written by one batch is read back by the next with the
+    delta's schema, so a merge that changes a column's type (``sum``
+    over an ``int`` gives ``bigint``) must fail by name before anything
+    is written."""
+    import os
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.streaming.jobs import (
+        _ParquetFoldState,
+    )
+
+    writes, _ = _parquet_io_spy(monkeypatch)
+    state = _ParquetFoldState(spark, "test_type_check", n_buckets=2)
+    d0 = spark.createDataFrame([(1, 3), (2, 4)], "k long, n int")
+    with pytest.raises(ValueError, match=r"'n', 'bigint'.*'n', 'int'"):
+        state.apply_delta(d0, 0, ["k"], [F.sum("n").alias("n")])
+    assert writes == []
+    assert os.listdir(state.dir) == []
+    assert state.last_batch() == -1
+
+
+def test_fold_state_computes_a_join_delta_once(spark):
+    """A delta that joins the batch against static history feeds both
+    the bucket observation and the merge write; it is computed once for
+    the two (cached, then released), not once per job. Each row of the
+    static side passes a counting filter, so a second computation shows
+    as a doubled count. A delta its caller cached is left cached."""
+    from pyspark.sql.types import BooleanType
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.streaming.jobs import (
+        _ParquetFoldState,
+    )
+
+    scanned = spark.sparkContext.accumulator(0)
+
+    def counted(_):
+        scanned.add(1)
+        return True
+
+    # nondeterministic: the optimizer must not copy the filter across
+    # the join condition onto the batch side
+    count = F.udf(counted, BooleanType()).asNondeterministic()
+    history = spark.range(40).where(count("id"))
+    batch = spark.createDataFrame([(k, 1) for k in range(0, 40, 2)], "k long, n long")
+    delta = batch.join(history, batch.k == history.id).select("k", "n")
+    state = _ParquetFoldState(spark, "test_join_delta", n_buckets=4)
+    state.apply_delta(delta, 0, ["k"], _sum_n())
+    assert scanned.value == 40
+    assert not delta.is_cached
+    assert {r["k"]: r["n"] for r in state.read().collect()} == {
+        k: 1 for k in range(0, 40, 2)
+    }
+    # a delta its caller cached stays cached
+    delta.persist()
+    state.apply_delta(delta, 1, ["k"], _sum_n())
+    assert delta.is_cached
+    delta.unpersist()
+    assert {r["n"] for r in state.read().collect()} == {2}
+
+
+def test_fold_state_restart_rejects_renamed_column(spark, tmp_path):
+    """A fresh store on a stable path reads the previous run's state
+    with the schema its files carry, not with this run's delta schema:
+    a column renamed between runs fails the merge by name instead of
+    being read back as nulls that ``sum`` would silently drop."""
+    from pyspark.errors import AnalysisException
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.streaming.jobs import (
+        _ParquetFoldState,
+    )
+
+    p = str(tmp_path / "fold_state")
+    d0 = spark.createDataFrame([(1, 10), (2, 20)], "k long, n long")
+    _ParquetFoldState(spark, "renamed", path=p, n_buckets=2).apply_delta(
+        d0, 0, ["k"], _sum_n()
+    )
+
+    s2 = _ParquetFoldState(spark, "renamed", path=p, n_buckets=2)
+    d1 = spark.createDataFrame([(1, 5)], "k long, m long")
+    with pytest.raises(AnalysisException, match='column name "n"'):
+        s2.apply_delta(d1, 1, ["k"], [F.sum("m").cast("long").alias("m")])
+    assert s2.last_batch() == 0
+    assert {tuple(r) for r in s2.read().collect()} == {(1, 10), (2, 20)}
+
+
 def test_incremental_cc_fold_contract(spark, sf_dir):
     """The contracted-graph CC fold: replay of an applied batch is a
     no-op; a crashed batch is retried (last_batch recorded only after
