@@ -490,7 +490,7 @@ def shared_counterparty_pairs_lsh(
     # heap-heavy operator (the `sets` persist already holds the full
     # counterparty arrays) the extra materialization costs more than
     # the recompute it saves — driver bench +15% at sf0.1; sf1
-    # same-session interleaved A/B ×2 (tools/ab_r19.py): persist mins
+    # same-session interleaved A/B ×2 (OPTIMIZATION_r19.md §1): persist mins
     # 47.22 / 25.74 s vs un-persisted 28.78 / 25.77 s, with the persist
     # side swinging 26→60 s (GC pressure) while the un-persisted side
     # held 26–31 s. The dedup.py MinHash twin KEEPS its persist — its

@@ -29,8 +29,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _canonical(e: DataFrame) -> DataFrame:
-    """Undirected canonical edge form: u < v, no self-loops, distinct."""
+def _canonical(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
+    """Undirected canonical edge form of ``(src, dst)`` as long
+    ``(u, v)``: u < v, no self-loops, distinct."""
+    e = edges.select(
+        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+    )
     return (
         e.where(F.col("u") != F.col("v"))
         .select(
@@ -48,13 +52,13 @@ def _canonical(e: DataFrame) -> DataFrame:
 #: optimum 256).
 _CKPT_BYTES_PER_PARTITION = 1 << 20
 
-#: Per-round frontier-broadcast cap for the iterative relaxations
-#: (shortest_paths / temporal_reachability): stricter than Catalyst's
-#: one-shot autoBroadcastJoinThreshold because the broadcast is re-paid
-#: every round. Measured crossover (interleaved min-of-2): 640 KB bound
-#: broadcast 4.26 s vs hash 5.82 s; 6.4 MB bound broadcast 18.5 s vs
-#: hash 12.1 s — 1 MB separates them.
+#: Per-round frontier-broadcast cap of ``_min_relax``: stricter than
+#: Catalyst's one-shot autoBroadcastJoinThreshold because the broadcast
+#: is re-paid every round (measured crossover in ``_min_relax``).
 _FRONTIER_BC_CAP = 1 << 20
+
+#: Fixed-point grid of the sampled centralities' exact sums.
+_Q = 1e12
 
 
 def _sized_partitions_ckpt(df: DataFrame, scale: float = 1.0, cap: int = 2048):
@@ -67,11 +71,10 @@ def _sized_partitions_ckpt(df: DataFrame, scale: float = 1.0, cap: int = 2048):
     scan-derived frames (where the estimate tracks the scan, and the
     sf3 triangle A/B validated the widths it picks). It must never be
     read off iterated checkpoints: across full-outer-join rounds the
-    estimate compounds ~1e6×/round (the shortest_paths auto-frontier
-    bug, fixed r12 — see that docstring), which the ``b >= 1<<40``
-    guard below would only catch two rounds too late. ``scale``
-    adjusts for derived frames (e.g. the bidirected union is 2× the
-    checkpoint).
+    estimate compounds ~1e6×/round (see ``_min_relax``), which the
+    ``b >= 1<<40`` guard below would only catch two rounds too late.
+    ``scale`` adjusts for derived frames (e.g. the bidirected union is
+    2× the checkpoint).
     Returns None — keep the original AQE-coalescible plan — when the
     data doesn't demand more than the session default, when the stat
     is implausible (unknown-stats sentinel), or when the private
@@ -143,6 +146,203 @@ def _edge_signature(e: DataFrame):
     return (row["n"], row["h"])
 
 
+# ---- frontier kit: the BFS and min-relaxation round loops ----------
+#
+# One superstep per round, the Pregel / ``aggregateMessages`` shape of
+# GraphFrames (https://graphframes.github.io): the frontier joins the
+# edge frame, messages combine per target node, the merged state is
+# eagerly checkpointed (lineage truncation; the driver holds O(1)
+# state), the next frontier is read back from that checkpoint (never
+# re-derived from the round's lineage, which would re-run the
+# expansion join), and an empty frontier ends the loop early.
+
+
+def _bidirected(e: DataFrame) -> DataFrame:
+    """Both orientations of every ``(u, v, ...)`` edge; columns after
+    ``v`` ride along unchanged."""
+    return e.union(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"), *e.columns[2:])
+    )
+
+
+def _seed_state(
+    seeds: DataFrame, nodes: DataFrame, key: str, val: str
+) -> DataFrame:
+    """``(key, val=0)`` for every distinct seed (first column of
+    ``seeds``) that is a node of ``nodes`` (``u``): seeds outside the
+    graph emit no rows."""
+    return (
+        seeds.select(F.col(seeds.columns[0]).cast("long").alias(key))
+        .distinct()
+        .join(nodes.select(F.col("u").alias(key)), key, "leftsemi")
+        .select(key, F.lit(0).cast("long").alias(val))
+    )
+
+
+def _hash_sources(nodes: DataFrame, k: int, seed: int) -> DataFrame:
+    """The ``k`` nodes (``u``) with the smallest xxhash64(id, seed), as
+    ``s`` — a reproducible source sample without a collect."""
+    return (
+        nodes.select(F.col("u").alias("s"))
+        .withColumn("_h", F.xxhash64(F.col("s"), F.lit(seed)))
+        .orderBy("_h", "s")
+        .limit(k)
+        .select("s")
+    )
+
+
+def _bfs_levels(
+    both: DataFrame,
+    start: DataFrame,
+    keys: tuple,
+    max_hops: int,
+    carry: tuple = (),
+):
+    """Settle-once multi-source BFS over the bidirected edge frame
+    ``both`` (u, v). State rows are ``(*keys, v, dist[, *carry])``;
+    ``start`` holds the level-0 rows. Each round the level-h frontier
+    walks its edges, and a ``(*keys, v)`` not yet settled settles at
+    h + 1 (first reach IS the min-hop reach, so a node settles once
+    per key and total work is Σ frontier-incident edges ≤ 2|E| per
+    key). A ``carry`` column is summed over the predecessors that
+    reach ``(*keys, v)`` in the same round (betweenness' σ path
+    counts); with no carry the step is a ``distinct()``.
+
+    The frontier is always the explicit broadcast build side:
+    checkpointed frames carry no usable stats, and left to Catalyst
+    the hash relation was built over the EDGE side at sf3 (measured
+    heap OOM). Returns ``(settled, deepest)``, ``deepest`` being the
+    last non-empty level (0 when nothing beyond the start settles)."""
+    keys, carry = list(keys), list(carry)
+    settled = start.localCheckpoint(eager=True)
+    sums = [F.sum(c).cast(settled.schema[c].dataType).alias(c) for c in carry]
+    frontier, deepest = settled, 0
+    for h in range(1, max_hops + 1):
+        # both is (u, v) in both orientations: joining on v walks v's
+        # neighbours u
+        step = (
+            F.broadcast(frontier.select(*keys, "v", *carry))
+            .join(both, "v")
+            .select(*keys, F.col("u").alias("v"), *carry)
+        )
+        if carry:
+            step = step.groupBy(*keys, "v").agg(*sums)
+        else:
+            step = step.distinct()
+        new = step.join(
+            settled.select(*keys, "v"), [*keys, "v"], "left_anti"
+        ).select(*keys, "v", F.lit(h).cast("long").alias("dist"), *carry)
+        settled = settled.union(new).localCheckpoint(eager=True)
+        frontier = settled.where(F.col("dist") == h)
+        if frontier.isEmpty():
+            break
+        deepest = h
+    return settled, deepest
+
+
+def _min_relax(
+    edges_by_u: DataFrame,
+    nodes: DataFrame,
+    start: DataFrame,
+    rounds: int,
+    candidates,
+) -> DataFrame:
+    """Frontier-incremental bounded Bellman-Ford over ``edges_by_u``
+    (u, v, ...) whose endpoints are ``nodes`` (``u``): the state is
+    ``start``'s two columns ``(key, val)`` (a ``_seed_state``).
+    Each round the frontier (the rows whose value improved last round)
+    joins its out-edges on ``u``; ``candidates(joined)`` turns the
+    joined rows into ``(v, cand)`` offers (the caller's weight sum or
+    time gate); the per-node min offer merges into the state by a full
+    outer ``least``, flagging ``_improved`` rows, checkpointed every
+    round. Min-combine makes re-relaxing an unimproved node a no-op,
+    so the delta schedule reaches the same per-round state as the full
+    relaxation, and an empty frontier ends the loop early. Values are
+    exact BIGINTs (2^62 stands in for "unreached").
+
+    The one broadcast decision: ONE exact ``nodes.count()`` before the
+    loop bounds every frontier (frontier ⊆ nodes), and the frontier is
+    the broadcast side iff |V|·32 B ≤ min(autoBroadcastJoinThreshold,
+    ``_FRONTIER_BC_CAP``); 32 B/row over-estimates the two-long rows,
+    so it never mis-broadcasts. The 1 MB cap sits at the measured
+    crossover for this shape — the broadcast is re-paid every round
+    while the hash side shuffles only the small frontier against the
+    pre-laid-out edge frame (interleaved same-session min-of-2 on
+    shortest_paths: |V| = 20k, a 640 KB bound, broadcast 4.26 s vs
+    hash 5.82 s; |V| = 200k, a 6.4 MB bound, broadcast 18.5 s vs hash
+    12.1 s). The size is counted, never read off
+    ``optimizedPlan().stats()`` of the per-round checkpoints: a
+    LogicalRDD carries the ORIGINAL plan's estimate, which compounds
+    ~10⁶× per full-outer round (measured 120 B → 1.5e8 → 1.8e14 →
+    2.1e20) and forced hash everywhere (6.58 s vs 4.29 s at sf0.1).
+    The choice changes only the physical join, never the values.
+    ``autoBroadcastJoinThreshold=-1`` selects the hash side."""
+    key, val = start.columns
+    state = start.localCheckpoint(eager=True)
+    cap = min(_broadcast_threshold_bytes(state.sparkSession), _FRONTIER_BC_CAP)
+    use_broadcast = 0 < nodes.count() * 32 <= cap
+    frontier = state
+    for _ in range(rounds):
+        fr = frontier.withColumnRenamed(key, "u")
+        fr = F.broadcast(fr) if use_broadcast else fr
+        cand = (
+            candidates(edges_by_u.join(fr, "u"))
+            .select(F.col("v").alias(key), "cand")
+            .groupBy(key)
+            .agg(F.min("cand").alias("cand"))
+        )
+        merged = (
+            state.join(cand, key, "full")
+            .select(
+                key,
+                F.least(
+                    F.coalesce(F.col(val), F.lit(2**62)),
+                    F.coalesce(F.col("cand"), F.lit(2**62)),
+                ).alias(val),
+                (F.col(val).isNull() | (F.col("cand") < F.col(val))).alias(
+                    "_improved"
+                ),
+            )
+            .localCheckpoint(eager=True)
+        )
+        frontier = merged.where(F.col("_improved")).select(key, val)
+        state = merged.select(key, val)
+        if frontier.isEmpty():
+            break
+    return state
+
+
+def _sampled_estimate(
+    nodes: DataFrame,
+    srcs: DataFrame,
+    qsums: DataFrame,
+    name: str,
+    halve: bool = False,
+) -> DataFrame:
+    """The n/k finish of the sampled centralities: one row per node of
+    ``nodes`` (``u``), ``(id, name)`` = Σ_s q / _Q (halved when
+    ``halve``) · n/k from ``qsums`` (v, _qsum); unreached nodes carry
+    0. n/k is the unbiased scale under uniform source sampling."""
+    n_nodes = nodes.agg(F.count(F.lit(1)).cast("long").alias("_n"))
+    k_eff = srcs.agg(F.count(F.lit(1)).cast("long").alias("_k"))
+    est = F.coalesce(F.col("_qsum").cast("double"), F.lit(0.0)) / F.lit(_Q)
+    if halve:
+        est = est / F.lit(2.0)
+    return (
+        nodes.select(F.col("u").alias("id"))
+        .join(qsums.select(F.col("v").alias("id"), "_qsum"), "id", "left")
+        .crossJoin(F.broadcast(n_nodes))
+        .crossJoin(F.broadcast(k_eff))
+        .select(
+            "id",
+            (
+                est * (F.col("_n").cast("double") / F.col("_k").cast("double"))
+            ).alias(name),
+        )
+        .orderBy("id")
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -189,11 +389,7 @@ def connected_components(
     Above the threshold the distributed rounds run unchanged; the
     collect is bounded by the threshold constant by construction.
     """
-    e = _canonical(
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-    ).localCheckpoint(eager=True)
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
     sig = _edge_signature(e)
     if sig[0] <= driver_threshold:
         rows = e.collect()  # bounded: sig[0] == |E| <= driver_threshold
@@ -222,7 +418,7 @@ def connected_components(
         )
     for _ in range(max_rounds):
         # ---- large-star ----
-        nbrs = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        nbrs = _bidirected(e)
         mins = (
             nbrs.groupBy("u")
             .agg(F.min("v").alias("_mn"))
@@ -505,11 +701,7 @@ def triangle_stats(
     shuffle) → ONE node-keyed join of the exploded adjacency against
     itself → global sum. No driver loops, no collect.
     """
-    e = _canonical(
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-    )
+    e = _canonical(edges, src, dst)
     # The canonical edge list feeds THREE consumers (degrees, the
     # orientation join, the edge count). A LAZY cache is not enough
     # here: the single final action materializes the tiny agg branches
@@ -526,7 +718,7 @@ def triangle_stats(
     # plan is already wide enough and the original AQE-coalescible
     # exchanges stay (forcing them measured +0.75 s at sf0.1)
     nparts = _sized_partitions_ckpt(e, scale=2.0)
-    both = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    both = _bidirected(e)
     # deg (|V| rows) feeds three consumers — checkpointing it is far
     # cheaper than re-running the 2|E|-row union+groupBy per consumer
     deg = (
@@ -701,16 +893,12 @@ def k_core(
     additionally pinned by the brute-force peeling differential in
     tests/test_graph.py).
     """
-    e = _canonical(
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-    ).localCheckpoint(eager=True)
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
     # deliberately NOT width-sized from the data: every peeling round
     # full-scans e in complete waves, and the sf3 A/B measured a sized
     # re-checkpoint at 25.3 → 40 s (see _sized_partitions_ckpt) — the
     # session width is the right width for per-round iterative state
-    both = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    both = _bidirected(e)
     deg = (
         both.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -792,11 +980,7 @@ def label_propagation(
     costs more than the |V|-row checkpoint — measured on pagerank).
 
     Returns (id, community) for every non-isolated node."""
-    e = _canonical(
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-    )
+    e = _canonical(edges, src, dst)
     # per-round shuffles all reuse this ONE session-width partitioning
     # (hash on u satisfies both groupBys' clustering). Deliberately
     # NOT width-sized from the data: the sf3 A/B measured a sized
@@ -815,9 +999,7 @@ def label_propagation(
     # the pagerank e_aug discipline applied here.
     from ..cache import drop_cache, plan_key, swap_cache
 
-    both_plan = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).repartition("u")
+    both_plan = _bidirected(e).repartition("u")
     both = swap_cache(plan_key("lpa.both", both_plan), both_plan)
     labels = (
         both.select(F.col("u").alias("id"))
@@ -858,7 +1040,6 @@ def bfs_distances(
     max_hops: int = 8,
     src: str = "id_a",
     dst: str = "id_b",
-    broadcast_frontier: bool = True,
 ) -> DataFrame:
     """Multi-source BFS shortest hop-distance on an undirected graph:
     for every node reachable within ``max_hops`` of ANY seed, the
@@ -866,57 +1047,24 @@ def bfs_distances(
     radius of a fraud seed set, k-hop neighborhoods for feature
     engineering, influence frontiers).
 
-    Synchronous frontier expansion (the Pregel BFS): the settled set
-    starts as the seeds at distance 0; each round the frontier's
-    neighbors minus already-settled nodes settle at distance h. A node
-    settles exactly once (BFS invariant: first reach IS the min-hop
-    reach), so total work is Σ frontier-incident edges ≤ 2|E| across
-    ALL rounds combined — strictly less than one round of a
-    full-degree recompute. Early exit on an empty frontier; round
-    count ≤ min(max_hops, graph diameter) — deterministic by
-    construction (no tie-breaks: distance is the only output).
-
-    ``broadcast_frontier=True`` makes the expansion join map-side
-    (right while the frontier is dimension-sized); False keeps
-    hash-partitioned joins for web-scale frontiers. Settled set is
-    checkpointed per round (the iterative-op discipline); driver holds
-    O(1) state.
+    Synchronous frontier expansion (the Pregel BFS, ``_bfs_levels``):
+    the settled set starts as the seeds at distance 0; each round the
+    frontier's neighbors minus already-settled nodes settle at distance
+    h. A node settles exactly once, so total work is Σ
+    frontier-incident edges ≤ 2|E| across ALL rounds combined —
+    strictly less than one round of a full-degree recompute. Early
+    exit on an empty frontier; round count ≤ min(max_hops, graph
+    diameter) — deterministic by construction (no tie-breaks: distance
+    is the only output).
 
     Returns (id, dist) — seeds at 0, unreachable nodes absent. The
     bounded deterministic semantics have an exact recursive-CTE twin
     (UNION-distinct on (node, depth) states, then min per node)."""
-    e = _canonical(
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-    ).localCheckpoint(eager=True)
-    both = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    nodes = both.select("u").distinct()
-    # seeds restricted to graph nodes so absent ids don't emit rows
-    settled = (
-        seeds.select(F.col(seeds.columns[0]).cast("long").alias("id"))
-        .distinct()
-        .join(nodes.select(F.col("u").alias("id")), "id", "leftsemi")
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = settled.select("id")
-    for h in range(1, max_hops + 1):
-        fb = F.broadcast(frontier) if broadcast_frontier else frontier
-        nxt = (
-            both.join(fb.withColumnRenamed("id", "u"), "u", "leftsemi")
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(settled, "id", "left_anti")
-            .select("id", F.lit(h).cast("long").alias("dist"))
-        )
-        settled = settled.union(nxt).localCheckpoint(eager=True)
-        # next frontier read back from the CHECKPOINT (re-deriving it
-        # from nxt's lineage would recompute the expansion join)
-        frontier = settled.where(F.col("dist") == h).select("id")
-        if frontier.isEmpty():
-            break
-    return settled
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
+    both = _bidirected(e)
+    start = _seed_state(seeds, both.select("u").distinct(), "v", "dist")
+    settled, _ = _bfs_levels(both, start, (), max_hops)
+    return settled.withColumnRenamed("v", "id")
 
 
 def shortest_paths(
@@ -926,7 +1074,6 @@ def shortest_paths(
     src: str = "id_a",
     dst: str = "id_b",
     weight: str = "w",
-    broadcast_frontier: bool | None = None,
 ) -> DataFrame:
     """Multi-source WEIGHTED shortest paths (bounded-round
     Bellman-Ford) on an undirected graph with exact non-negative
@@ -957,35 +1104,9 @@ def shortest_paths(
     (weights and ``rounds`` bounded far below 2^63/rounds), so the SQL
     twin matches bit-for-bit.
 
-    ``broadcast_frontier`` broadcasts the frontier into the relax join
-    (right for dimension-sized node sets); False keeps hash joins for
-    web-scale graphs. The default ``None`` AUTO-DECIDES from a
-    MEASURED size (VERDICT r11 residual 2 — the old static True
-    default broadcast a web-scale first improved frontier, which is
-    |V|-sized): ONE exact ``nodes.count()`` before the loop bounds
-    every frontier (a frontier is a subset of the node set), and the
-    decision is broadcast iff |V|·32 B fits
-    min(autoBroadcastJoinThreshold, 1 MB). The 1 MB cap — stricter
-    than Catalyst's one-shot 10 MB bar — is where the MEASURED
-    crossover sits for this shape, because the broadcast is re-paid
-    every round while the hash alternative shuffles only the small
-    frontier against the pre-partitioned edge checkpoint: interleaved
-    same-session min-of-2, |V| = 20k (sf0.1, 640 KB bound) broadcast
-    4.26 s vs hash 5.82 s — broadcast wins; |V| = 200k (sf1, 6.4 MB
-    bound — under Catalyst's bar but over this one) broadcast 18.5 s
-    vs hash 12.1 s — broadcast LOSES. Two r12 rewrites are recorded
-    here deliberately: the first auto read ``optimizedPlan().stats()``
-    of the checkpointed distance table as a "free materialized size",
-    but LogicalRDD carries the ORIGINAL plan's ESTIMATE, which
-    compounds ~10⁶× per full-outer round (measured 120 B → 1.5e8 →
-    1.8e14 → 2.1e20), silently forcing hash everywhere — 6.58 s at
-    sf0.1 vs this version's 4.29 s. The one up-front count costs a
-    single job over the checkpointed edge list and can never
-    mis-broadcast: |V|·32 B over-estimates every frontier the loop
-    can produce. The switch only changes the physical join strategy,
-    never the relaxed values — pinned byte-equal across
-    True/False/None in tests/test_graph.py.
-    Returns (id, dist); unreachable nodes absent, seeds at 0."""
+    The loop, with its broadcast-or-hash choice for the frontier side,
+    is ``_min_relax``. Returns (id, dist); unreachable nodes absent,
+    seeds at 0."""
     raw = edges.select(
         F.col(src).cast("long").alias("u"),
         F.col(dst).cast("long").alias("v"),
@@ -1003,72 +1124,23 @@ def shortest_paths(
         .groupBy("u", "v")
         .agg(F.min("wt").alias("wt"))
     )
-    # PERSIST, not localCheckpoint (r18, the LPA finding): a checkpoint
-    # forgets the repartition("u") partitioning, so the non-broadcast
-    # (web-scale) mode re-exchanged the full bidirected frame every
-    # relax round instead of reusing this one shuffle. The
-    # InMemoryRelation keeps it visible; the up-front nodes.count()
-    # below materializes the cache before the loop.
+    # PERSIST, not localCheckpoint: a checkpoint forgets the
+    # repartition("u") partitioning, so the hash-side relax join would
+    # re-exchange the full bidirected frame every round instead of
+    # reusing this one shuffle. The InMemoryRelation keeps it visible;
+    # the seed-state checkpoint materializes the cache before the loop.
     from ..cache import drop_cache, plan_key, swap_cache
 
-    both_plan = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"), "wt")
-    ).repartition("u")
+    both_plan = _bidirected(e).repartition("u")
     both = swap_cache(plan_key("sssp.both", both_plan), both_plan)
     nodes = both.select("u").distinct()
-    dists = (
-        seeds.select(F.col(seeds.columns[0]).cast("long").alias("id"))
-        .distinct()
-        .join(nodes.select(F.col("u").alias("id")), "id", "leftsemi")
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
+    dists = _min_relax(
+        both,
+        nodes,
+        _seed_state(seeds, nodes, "id", "dist"),
+        rounds,
+        lambda j: j.select("v", (F.col("dist") + F.col("wt")).alias("cand")),
     )
-    bc_cap = min(_broadcast_threshold_bytes(edges.sparkSession), _FRONTIER_BC_CAP)
-    if broadcast_frontier is None:
-        # auto: ONE exact node count bounds every frontier (frontier ⊆
-        # nodes); 32 B/row over-estimates the two-long broadcast rows.
-        # The cap is min(session threshold, 1 MB) — the measured
-        # per-round-broadcast crossover, see docstring. NEVER read
-        # optimizedPlan().stats() of the per-round checkpoints here:
-        # LogicalRDD keeps the original plan's ESTIMATE (not
-        # materialized bytes), which compounds ~1e6× per full-outer
-        # round and silently forces hash everywhere (measured — see
-        # docstring).
-        use_broadcast = 0 < nodes.count() * 32 <= bc_cap
-    else:
-        use_broadcast = bool(broadcast_frontier)
-
-    def _relax_side(fr: DataFrame) -> DataFrame:
-        return F.broadcast(fr) if use_broadcast else fr
-
-    frontier = dists
-    for _ in range(rounds):
-        fb = _relax_side(frontier)
-        cand = (
-            both.join(fb.withColumnRenamed("id", "u"), "u")
-            .select(F.col("v").alias("id"), (F.col("dist") + F.col("wt")).alias("nd"))
-            .groupBy("id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        merged = (
-            dists.join(cand, "id", "full")
-            .select(
-                "id",
-                F.least(
-                    F.coalesce(F.col("dist"), F.lit(2**62)),
-                    F.coalesce(F.col("nd"), F.lit(2**62)),
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("nd") < F.col("dist"))
-                ).alias("_improved"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = merged.where(F.col("_improved")).select("id", "dist")
-        dists = merged.select("id", "dist")
-        if frontier.isEmpty():
-            break
     # loop-scoped cache (ADVICE r18): dists is an eager checkpoint, so
     # the edge cache is dead weight after the last relax round.
     drop_cache(plan_key("sssp.both", both))
@@ -1190,15 +1262,14 @@ def hits_quantized(
     # |E|-scale bytes — on a small graph the map-side partial
     # aggregation collapses it to near-|V| rows and the precache is
     # pure overhead (the r18 driver bench's +24%). Measured sf1/sf0.1
-    # interleaved A/Bs (tools/ab_r19.py, dual-cache + distinct-once
+    # interleaved A/Bs (OPTIMIZATION_r19.md §1b, dual-cache + distinct-once
     # form vs the single-checkpoint form): 0.6M edges / 2.2 MB
     # estimate (sf0.1) — checkpoint wins all 3 pairwise (2.05 vs
     # 2.65 s min); 5.9M edges / 22.8 MB (sf1) — precache wins all 3
     # pairwise (4.14 vs 4.65 s min). The gate reads the FREE Catalyst
-    # size estimate of the edge plan (no job — the shortest_paths
-    # auto-mode precedent); unknown estimate ⇒ precache (the
-    # at-scale-safe branch, and the only failure mode is a slower
-    # plan, never a wrong one).
+    # size estimate of the edge plan (no job); unknown estimate ⇒
+    # precache (the at-scale-safe branch, and the only failure mode is
+    # a slower plan, never a wrong one).
     from ..cache import drop_cache, plan_key, swap_cache
 
     try:
@@ -1634,7 +1705,6 @@ def temporal_reachability(
     src: str = "src",
     dst: str = "dst",
     time_col: str = "t",
-    broadcast_frontier: bool | None = None,
 ) -> DataFrame:
     """TIME-RESPECTING reachability (earliest-arrival search) on a
     directed temporal graph: for every node, the minimum arrival time
@@ -1664,27 +1734,19 @@ def temporal_reachability(
     Per round: one frontier⋈edges join on the reused ``u``
     partitioning with the time gate as the join filter, one map-side-
     combinable min-agg, one full-outer merge into the checkpointed
-    |V|-row arrival table. ``broadcast_frontier`` as in
-    ``shortest_paths`` (None = auto: ONE exact node count before the
-    loop bounds every frontier; broadcast iff |V|·32 B fits
-    min(session threshold, 1 MB) — the measured per-round-broadcast
-    crossover; the checkpoint-stat variant was rewritten in r12
-    because LogicalRDD stats are plan ESTIMATES that compound across
-    rounds — both measurements in shortest_paths' docstring). Returns
-    (node, arrive_t): seeds at 0, unreachable nodes absent."""
-    # CHECKPOINT, not persist — the r18 swap-cache persist REVERTED by
-    # the r19 sf1 interleaved A/B (VERDICT r18 item 1): the persist's
-    # partitioning-reuse rationale never bites on this operator because
-    # the frontier stays runtime-broadcastable (arrival sets are
-    # seed-component-sized — ~20k rows at sf1 — so AQE picks a
-    # broadcast join and the edge side is never exchanged per round in
-    # EITHER form), while the InMemoryRelation's columnar→row scan
-    # penalty is paid every round. Measured same-session at sf1
-    # (tools/ab_r19.py temporal, probes 0.53/0.22): persist reps
-    # [9.05, 9.18, 7.11] vs checkpoint [8.26, 7.86, 7.37] — checkpoint
-    # wins 2 of 3 pairwise; the driver's sf0.1 bench said the same
-    # (+17%, VERDICT r18). For a web-scale frontier that genuinely
-    # defeats broadcast, LPA/sssp keep the persist form to copy.
+    |V|-row arrival table — the ``_min_relax`` loop, which also
+    chooses the frontier's join side. Returns (node, arrive_t): seeds
+    at 0, unreachable nodes absent."""
+    # CHECKPOINT, not persist: the persist's partitioning reuse never
+    # bites here because the frontier stays broadcastable (arrival sets
+    # are seed-component-sized — ~20k rows at sf1 — so the edge side
+    # is never exchanged per round in either form), while the
+    # InMemoryRelation's columnar→row scan penalty is paid every round.
+    # Measured same-session at sf1 (OPTIMIZATION_r19.md §1,
+    # temporal_reach_parts): persist reps [9.05, 9.18, 7.11] vs
+    # checkpoint [8.26, 7.86, 7.37] — checkpoint wins 2 of 3 pairwise;
+    # the sf0.1 bench said the same (+17%). For a web-scale frontier
+    # that defeats broadcast, LPA/sssp keep the persist form to copy.
     e = (
         edges.select(
             F.col(src).cast("long").alias("u"),
@@ -1697,52 +1759,15 @@ def temporal_reachability(
         .localCheckpoint(eager=True)
     )
     nodes = e.select("u").union(e.select(F.col("v").alias("u"))).distinct()
-    arr = (
-        seeds.select(F.col(seeds.columns[0]).cast("long").alias("node"))
-        .distinct()
-        .join(nodes.select(F.col("u").alias("node")), "node", "leftsemi")
-        .select("node", F.lit(0).cast("long").alias("arrive_t"))
-        .localCheckpoint(eager=True)
+    return _min_relax(
+        e,
+        nodes,
+        _seed_state(seeds, nodes, "node", "arrive_t"),
+        rounds,
+        lambda j: j.where(F.col("t") >= F.col("arrive_t")).select(
+            "v", F.col("t").alias("cand")
+        ),
     )
-    bc_cap = min(_broadcast_threshold_bytes(edges.sparkSession), _FRONTIER_BC_CAP)
-    if broadcast_frontier is None:
-        use_broadcast = 0 < nodes.count() * 32 <= bc_cap
-    else:
-        use_broadcast = bool(broadcast_frontier)
-
-    def _relax_side(fr: DataFrame) -> DataFrame:
-        return F.broadcast(fr) if use_broadcast else fr
-
-    frontier = arr
-    for _ in range(rounds):
-        fb = _relax_side(frontier)
-        cand = (
-            e.join(fb.withColumnRenamed("node", "u"), "u")
-            .where(F.col("t") >= F.col("arrive_t"))
-            .select(F.col("v").alias("node"), F.col("t").alias("na"))
-            .groupBy("node")
-            .agg(F.min("na").alias("na"))
-        )
-        merged = (
-            arr.join(cand, "node", "full")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce(F.col("arrive_t"), F.lit(2**62)),
-                    F.coalesce(F.col("na"), F.lit(2**62)),
-                ).alias("arrive_t"),
-                (
-                    F.col("arrive_t").isNull()
-                    | (F.col("na") < F.col("arrive_t"))
-                ).alias("_improved"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = merged.where(F.col("_improved")).select("node", "arrive_t")
-        arr = merged.select("node", "arrive_t")
-        if frontier.isEmpty():
-            break
-    return arr
 
 
 def _edge_supports(cur: DataFrame, deg: DataFrame | None = None) -> DataFrame:
@@ -1773,7 +1798,7 @@ def _edge_supports(cur: DataFrame, deg: DataFrame | None = None) -> DataFrame:
     measured same-session interleaved at sf0.1, min of 2:
     per-round ranking 10.31 s → rank-once 9.37 s (−9%)."""
     if deg is None:
-        both = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        both = _bidirected(cur)
         deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("_d"))
     da = deg.select(F.col("u").alias("_ua"), F.col("_d").alias("_da"))
     db = deg.select(F.col("u").alias("_ub"), F.col("_d").alias("_db"))
@@ -1889,14 +1914,10 @@ def k_truss(
     structure' tests; SCC (directed rings), k-core (dense nodes) and
     k-truss (dense relationships) are the graph-native generalization
     ladder."""
-    cur = _canonical(
-        edges.select(
-            F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-        )
-    ).localCheckpoint(eager=True)
+    cur = _canonical(edges, src, dst).localCheckpoint(eager=True)
     # rank ONCE on the initial graph (any fixed total order is a valid
     # orientation for every later subset — see _edge_supports)
-    both0 = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    both0 = _bidirected(cur)
     deg0 = (
         both0.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("_d"))
@@ -1935,7 +1956,6 @@ def betweenness_sampled(
     src: str = "id_a",
     dst: str = "id_b",
     seed: int = 42,
-    broadcast_frontier: bool = True,
     exact_width: str = "long",
 ) -> DataFrame:
     """Sampled betweenness centrality on the undirected graph —
@@ -1949,7 +1969,8 @@ def betweenness_sampled(
     (eager per-round checkpoints, O(1) driver state, work per round =
     frontier-incident edges × k):
 
-    * FORWARD — multi-source BFS carrying exact path counts: state is
+    * FORWARD — multi-source BFS carrying exact path counts
+      (``_bfs_levels`` keyed by source, carrying σ): state is
       (source, node, dist, σ) with σ the number of shortest s→v
       paths, summed exactly over predecessor contributions.
     * BACKWARD — per level h from the deepest settled level down:
@@ -1961,10 +1982,10 @@ def betweenness_sampled(
       ≤ levels·1e-12·degree, documented, identical on every engine).
 
     ``exact_width`` is the SQL type of the hot σ/δ accumulators —
-    ``"long"`` by default (r19, VERDICT r18 item 4): the per-level
-    decimal(38,0) aggregations were measured as a pure CPU tax with no
-    width benefit at any test scale — same-session interleaved
-    min-of-3 (tools/ab_r19.py), long wins 5/6 pairwise reps: sf0.1
+    ``"long"`` by default: the per-level decimal(38,0) aggregations
+    were measured as a pure CPU tax with no width benefit at any test
+    scale — same-session interleaved min-of-3 (OPTIMIZATION_r19.md
+    §4), long wins 5/6 pairwise reps: sf0.1
     11.86 → 10.06 s, sf1 15.41 → 14.91 s; inside the rejected
     pre-partitioned layout the same swap won all 6. Width bounds,
     both loud-by-construction under ANSI (ARITHMETIC_OVERFLOW raises,
@@ -1991,70 +2012,27 @@ def betweenness_sampled(
     rows-only registration + exact-Brandes differential in pytest
     (k = |V| makes the estimator exact up to the quantization grid).
 
-    ``broadcast_frontier=True`` pins every frontier-sized join side
-    (forward expansion, backward lower/upper levels) as the EXPLICIT
-    broadcast build side — the bfs_distances convention. Checkpointed
-    frames carry no usable stats, so leaving the choice to Catalyst
-    let it build a hash relation over the EDGE side at sf3 (measured
-    heap OOM in the shared scaling session); False keeps
-    hash-partitioned joins for web-scale frontiers."""
-    e = _canonical(
-        edges.select(
-            F.col(src).cast("long").alias("u"),
-            F.col(dst).cast("long").alias("v"),
-        )
-    ).localCheckpoint(eager=True)
-    both = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    Every frontier-sized join side (forward expansion, backward
+    lower/upper levels) is the EXPLICIT broadcast build side, for the
+    reason given in ``_bfs_levels``."""
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
+    both = _bidirected(e)
     nodes = both.select("u").distinct().localCheckpoint(eager=True)
     dec = exact_width
-    srcs = (
-        nodes.select(F.col("u").alias("s"))
-        .withColumn("_h", F.xxhash64(F.col("s"), F.lit(seed)))
-        .orderBy("_h", "s")
-        .limit(k_sources)
-        .select("s")
+    srcs = _hash_sources(nodes, k_sources, seed)
+    start = srcs.select(
+        "s",
+        F.col("s").alias("v"),
+        F.lit(0).cast("long").alias("dist"),
+        F.lit(1).cast(dec).alias("sigma"),
     )
-    settled = (
-        srcs.select(
-            "s",
-            F.col("s").alias("v"),
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(1).cast(dec).alias("sigma"),
-        )
-        .localCheckpoint(eager=True)
+    settled, deepest = _bfs_levels(
+        both, start, ("s",), max_hops, carry=("sigma",)
     )
-    frontier = settled
-    deepest = 0
-    for h in range(1, max_hops + 1):
-        fb = (
-            F.broadcast(frontier.select("s", "v", "sigma"))
-            if broadcast_frontier
-            else frontier.select("s", "v", "sigma")
-        )
-        ex = fb.join(both, "v").select(
-            "s", F.col("v"), F.col("u"), "sigma"
-        )
-        # both is (u, v); joining on v walks v's neighbors u — the
-        # undirected union makes u range over ALL neighbors
-        agg = (
-            ex.select("s", F.col("u").alias("v"), "sigma")
-            .groupBy("s", "v")
-            .agg(F.sum("sigma").cast(dec).alias("sigma"))
-        )
-        new = (
-            agg.join(settled.select("s", "v"), ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(h).cast("long").alias("dist"), "sigma")
-        )
-        settled = settled.union(new).localCheckpoint(eager=True)
-        frontier = settled.where(F.col("dist") == h)
-        if frontier.isEmpty():
-            break
-        deepest = h
     # BACKWARD: level h only ever needs level h+1's delta, so carry
     # ONE level frame (delta_prev) instead of joining an ever-growing
     # union — O(rounds) join work, and each checkpoint holds a single
     # level, not the accumulation.
-    Q = 1e12
     delta_prev = settled.sparkSession.createDataFrame(
         [], f"s long, v long, qd {dec}"
     )
@@ -2073,18 +2051,16 @@ def betweenness_sampled(
         lower = settled.where(F.col("dist") == h).select(
             "s", "v", F.col("sigma").alias("_sv")
         )
-        lb = F.broadcast(lower) if broadcast_frontier else lower
-        ub = F.broadcast(upper) if broadcast_frontier else upper
-        pairs = lb.join(
+        pairs = F.broadcast(lower).join(
             both.select(F.col("u").alias("v"), F.col("v").alias("w")), "v"
-        ).join(ub, ["s", "w"])
+        ).join(F.broadcast(upper), ["s", "w"])
         contrib = (
             F.col("_sv").cast("double") / F.col("_sw").cast("double")
         ) * (
-            F.lit(1.0) + F.col("_qdw").cast("double") / F.lit(Q)
+            F.lit(1.0) + F.col("_qdw").cast("double") / F.lit(_Q)
         )
         d_h = (
-            pairs.withColumn("_q", F.floor(contrib * F.lit(Q)).cast(dec))
+            pairs.withColumn("_q", F.floor(contrib * F.lit(_Q)).cast(dec))
             .groupBy("s", "v")
             .agg(F.sum("_q").cast(dec).alias("qd"))
             .localCheckpoint(eager=True)
@@ -2094,8 +2070,6 @@ def betweenness_sampled(
     delta = delta_prev  # empty-frame fallback when no rounds ran
     for d in level_deltas[:-1]:
         delta = delta.union(d)
-    n_nodes = nodes.agg(F.count(F.lit(1)).cast("long").alias("_n"))
-    k_eff = srcs.agg(F.count(F.lit(1)).cast("long").alias("_k"))
     btw = (
         delta.where(F.col("v") != F.col("s"))
         .groupBy("v")
@@ -2104,24 +2078,7 @@ def betweenness_sampled(
         # the hot per-level qd values are long
         .agg(F.sum(F.col("qd").cast("decimal(38,0)")).alias("_qsum"))
     )
-    return (
-        nodes.select(F.col("u").alias("id"))
-        .join(btw.select(F.col("v").alias("id"), "_qsum"), "id", "left")
-        .crossJoin(F.broadcast(n_nodes))
-        .crossJoin(F.broadcast(k_eff))
-        .select(
-            "id",
-            (
-                F.coalesce(F.col("_qsum").cast("double"), F.lit(0.0))
-                / F.lit(Q)
-                / F.lit(2.0)
-                * (
-                    F.col("_n").cast("double") / F.col("_k").cast("double")
-                )
-            ).alias("betweenness"),
-        )
-        .orderBy("id")
-    )
+    return _sampled_estimate(nodes, srcs, btw, "betweenness", halve=True)
 
 
 def harmonic_closeness_sampled(
@@ -2131,7 +2088,6 @@ def harmonic_closeness_sampled(
     src: str = "id_a",
     dst: str = "id_b",
     seed: int = 42,
-    broadcast_frontier: bool = True,
 ) -> DataFrame:
     """Sampled harmonic closeness centrality: ĥ(v) = (n/k) ·
     Σ_{s ∈ S, s≠v} 1/d(s, v) over a deterministic source sample
@@ -2143,10 +2099,11 @@ def harmonic_closeness_sampled(
     ``betweenness_sampled``.
 
     One bounded forward phase — the multi-source per-source-distance
-    BFS (state (source, node, dist), settled-once invariant, eager
-    per-round checkpoints, work per round = frontier-incident edges ×
-    k). The 1/d reciprocal sum is 1e-12-quantized fixed point summed
-    as decimal(38,0) (order-independent, deterministic run-to-run).
+    BFS (``_bfs_levels`` keyed by source: state (source, node, dist),
+    settled-once invariant, eager per-round checkpoints, work per
+    round = frontier-incident edges × k). The 1/d reciprocal sum is
+    1e-12-quantized fixed point summed as decimal(38,0)
+    (order-independent, deterministic run-to-run).
     Sources are the ``k_sources`` smallest xxhash64(id, seed) nodes —
     the betweenness_sampled sample, so composed screens see one
     consistent panel. Returns one row per node: (id, harmonic) —
@@ -2156,71 +2113,22 @@ def harmonic_closeness_sampled(
     sampled with probability k/n, so E[Σ_S] = (k/n)·h(v)) and matches
     ``betweenness_sampled``'s Brandes–Pich n/k convention; at k = |V|
     it reproduces exact h(v) with no deflation (ADVICE r15 fixed the
-    earlier (n−1)/k scale, which was biased by (n−1)/n).
-    ``broadcast_frontier``
-    as in betweenness_sampled: the frontier side is the explicit
-    broadcast build side (checkpointed frames carry no stats — the
-    sf3 OOM lesson), False for web-scale frontiers."""
-    e = _canonical(
-        edges.select(
-            F.col(src).cast("long").alias("u"),
-            F.col(dst).cast("long").alias("v"),
-        )
-    ).localCheckpoint(eager=True)
-    both = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    earlier (n−1)/k scale, which was biased by (n−1)/n)."""
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
+    both = _bidirected(e)
     nodes = both.select("u").distinct().localCheckpoint(eager=True)
-    srcs = (
-        nodes.select(F.col("u").alias("s"))
-        .withColumn("_h", F.xxhash64(F.col("s"), F.lit(seed)))
-        .orderBy("_h", "s")
-        .limit(k_sources)
-        .select("s")
-    )
-    settled = srcs.select(
+    srcs = _hash_sources(nodes, k_sources, seed)
+    start = srcs.select(
         "s", F.col("s").alias("v"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint(eager=True)
-    frontier = settled
-    for h in range(1, max_hops + 1):
-        fb = (
-            F.broadcast(frontier.select("s", "v"))
-            if broadcast_frontier
-            else frontier.select("s", "v")
-        )
-        nxt = (
-            fb.join(both, "v")
-            .select("s", F.col("u").alias("v"))
-            .distinct()
-            .join(settled.select("s", "v"), ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(h).cast("long").alias("dist"))
-        )
-        settled = settled.union(nxt).localCheckpoint(eager=True)
-        frontier = settled.where(F.col("dist") == h)
-        if frontier.isEmpty():
-            break
-    Q = 1e12
+    )
+    settled, _ = _bfs_levels(both, start, ("s",), max_hops)
     recip = settled.where(F.col("dist") > 0).withColumn(
         "_q",
         F.floor(
-            F.lit(1.0) / F.col("dist").cast("double") * F.lit(Q)
+            F.lit(1.0) / F.col("dist").cast("double") * F.lit(_Q)
         ).cast("decimal(38,0)"),
     )
-    n_nodes = nodes.agg(F.count(F.lit(1)).cast("long").alias("_n"))
-    k_eff = srcs.agg(F.count(F.lit(1)).cast("long").alias("_k"))
     sums = recip.groupBy("v").agg(
         F.sum("_q").cast("decimal(38,0)").alias("_qsum")
     )
-    return (
-        nodes.select(F.col("u").alias("id"))
-        .join(sums.select(F.col("v").alias("id"), "_qsum"), "id", "left")
-        .crossJoin(F.broadcast(n_nodes))
-        .crossJoin(F.broadcast(k_eff))
-        .select(
-            "id",
-            (
-                F.coalesce(F.col("_qsum").cast("double"), F.lit(0.0))
-                / F.lit(Q)
-                * (F.col("_n").cast("double") / F.col("_k").cast("double"))
-            ).alias("harmonic"),
-        )
-        .orderBy("id")
-    )
+    return _sampled_estimate(nodes, srcs, sums, "harmonic")

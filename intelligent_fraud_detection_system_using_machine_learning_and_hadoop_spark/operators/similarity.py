@@ -479,8 +479,9 @@ def pq_cosine_topk(
     exactly).
 
     Spark shape: codebooks train DRIVER-SIDE on a bounded
-    ``n_train``-row sample (deterministic Lloyd, row-order init — the
-    BPE sample-train discipline) and broadcast as literal arrays;
+    ``n_train``-row sample — the smallest xxhash64(vec_id), so it is
+    independent of partitioning and core count (deterministic Lloyd,
+    row-order init — the BPE sample-train discipline) and broadcast as literal arrays;
     ENCODING is one Arrow-batched ``pandas_udf`` (numpy argmin over
     n_centroids per subspace — the documented vectorized-Python
     surface); ADC SCORING is pure JVM column algebra — the per-query
@@ -513,9 +514,11 @@ def pq_cosine_topk(
     v = ensure_min_partitions(norm(vectors, id_col, "vec_id"))
     q = norm(queries, query_id_col, "query_id")
 
-    train = np.asarray(
-        [r["_u"] for r in v.limit(n_train).collect()], dtype=np.float64
-    )
+    # the sample is chosen (and ordered, for the row-order Lloyd init)
+    # by content, never by the partition layout ensure_min_partitions
+    # gave v: the codebooks, hence the output, are the same on any box
+    sample = v.orderBy(F.xxhash64("vec_id", F.lit(42)), "vec_id").limit(n_train)
+    train = np.asarray([r["_u"] for r in sample.collect()], dtype=np.float64)
     if train.size == 0:
         # a (0,)-shaped sample would otherwise IndexError on shape[1]
         raise ValueError(

@@ -126,7 +126,7 @@ def spearman_pairs(df: DataFrame, cols: list[str]) -> DataFrame:
     # chains into one unpivoted (_c, _v) pass — one scan, one distinct
     # shuffle, per-_c bucketing/cumsum/prefix, swap-cached combined
     # rank table — cut the plan from 84 to 56 Exchanges but measured
-    # SLOWER at BOTH scales (tools/ab_r19.py, same-session interleaved,
+    # SLOWER at BOTH scales (OPTIMIZATION_r19.md §6, same-session interleaved,
     # old wins all 6 pairwise reps: sf0.1 min 4.44 s vs 5.10 s folded,
     # sf1 5.06 vs 5.65). The melt triples the rows through the first
     # exchange (3×|rows| (tag, value) pairs vs three parallel columnar

@@ -5291,10 +5291,7 @@ def bfs_distances_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("p_partkey") < 10)
         .select("p_partkey")
     )
-    return bfs_distances(
-        _co_order_edges(spark, sf_dir), seeds, max_hops=3,
-        broadcast_frontier=True,
-    )
+    return bfs_distances(_co_order_edges(spark, sf_dir), seeds, max_hops=3)
 
 
 @query(
@@ -5476,8 +5473,7 @@ def shortest_paths_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p_partkey")
     )
     return shortest_paths(
-        edges, seeds, rounds=6, src="u", dst="v", weight="w",
-        broadcast_frontier=None,  # auto: measured per-round switch
+        edges, seeds, rounds=6, src="u", dst="v", weight="w"
     )
 
 

@@ -508,6 +508,34 @@ def test_pq_topk_recall_vs_exact_and_contract(spark, sf_dir):
     )
 
 
+def test_pq_output_independent_of_corpus_partitioning(spark, sf_dir):
+    """The codebook training sample is picked by content: the corpus
+    arriving in 1 partition or in 5 gives identical PQ output rows."""
+    from pyspark.sql import functions as F
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.similarity import (
+        pq_cosine_topk,
+    )
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    q = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+    def run(corpus):
+        return sorted(
+            tuple(r)
+            for r in pq_cosine_topk(
+                corpus, q, k=3, m=8, n_centroids=16, refine=32
+            ).collect()
+        )
+
+    one = run(emb.coalesce(1))
+    five = run(emb.repartition(5))
+    assert len(one) == 15
+    assert one == five
+
+
 def test_pq_codebooks_deterministic_and_dim_guard(spark):
     import numpy as np
 

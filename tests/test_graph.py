@@ -518,15 +518,6 @@ class TestBfsDistances:
     def test_disconnected_component_absent(self, spark):
         self._run(spark, [(1, 2), (10, 11)], [1], 5)
 
-    def test_hash_join_mode_matches(self, spark):
-        self._run(
-            spark,
-            [(1, 2), (2, 3), (3, 4), (2, 5)],
-            [1],
-            8,
-            broadcast_frontier=False,
-        )
-
 
 class TestShortestPaths:
     """Differential: bounded-round Bellman-Ford vs a brute-force
@@ -992,14 +983,16 @@ class TestStronglyConnectedComponents:
 
 
 class TestShortestPathsFrontierStrategy:
-    def test_all_three_modes_byte_equal(self, spark):
-        """broadcast / hash / auto frontier strategies are physical-
-        plan choices only: relaxed distances must be identical (the
-        hits/LPA both-modes discipline, VERDICT r11 item 7)."""
+    def test_broadcast_and_hash_frontier_byte_equal(self, spark):
+        """The relaxations' frontier join side (broadcast under the
+        default threshold, hash under autoBroadcastJoinThreshold=-1)
+        is a physical-plan choice only: shortest_paths and
+        temporal_reachability must return identical rows either way."""
         import random
 
         from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.graph import (
             shortest_paths,
+            temporal_reachability,
         )
 
         rng = random.Random(7)
@@ -1008,19 +1001,30 @@ class TestShortestPathsFrontierStrategy:
             for _ in range(220)
         ]
         e = spark.createDataFrame(edges, "id_a long, id_b long, w long")
+        te = e.select(
+            F.col("id_a").alias("src"),
+            F.col("id_b").alias("dst"),
+            F.col("w").alias("t"),
+        )
         seeds = spark.createDataFrame([(1,), (2,)], "id long")
-        outs = []
-        for mode in (True, False, None):
-            outs.append(
-                {
-                    r["id"]: r["dist"]
-                    for r in shortest_paths(
-                        e, seeds, rounds=8, broadcast_frontier=mode
-                    ).collect()
-                }
+
+        def run():
+            return (
+                sorted(shortest_paths(e, seeds, rounds=8).collect()),
+                sorted(temporal_reachability(te, seeds, rounds=6).collect()),
             )
-        assert outs[0] == outs[1] == outs[2]
-        assert outs[0][1] == 0  # seed at distance 0
+
+        default = run()
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        try:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            hashed = run()
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert default == hashed
+        sssp, temporal = default
+        assert dict(sssp)[1] == 0 and dict(temporal)[1] == 0  # seeds at 0
+        assert len(sssp) > 2 and len(temporal) > 2
 
     def test_auto_hash_joins_when_broadcast_disabled(self, spark):
         """With autoBroadcastJoinThreshold=-1, auto must resolve to the
@@ -1292,3 +1296,52 @@ class TestGraphRiskProfile:
             )
         # the report covers every part that appears in lineitem
         assert len(prof) >= len(core)
+
+
+def test_frontier_operators_are_partition_count_invariant(spark):
+    """The five frontier-kit operators return byte-equal rows at two
+    shuffle widths in one session: no output depends on how a round's
+    exchange happened to split the state."""
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.graph import (
+        betweenness_sampled,
+        bfs_distances,
+        harmonic_closeness_sampled,
+        shortest_paths,
+        temporal_reachability,
+    )
+
+    rng = random.Random(11)
+    edges = [
+        (rng.randint(1, 80), rng.randint(1, 80), rng.randint(1, 9))
+        for _ in range(260)
+    ]
+    e = spark.createDataFrame(edges, "id_a long, id_b long, w long")
+    te = e.select(
+        F.col("id_a").alias("src"),
+        F.col("id_b").alias("dst"),
+        F.col("w").alias("t"),
+    )
+    seeds = spark.createDataFrame([(1,), (2,), (3,)], "id long")
+
+    def run():
+        return [
+            sorted(df.collect())
+            for df in (
+                bfs_distances(e, seeds, max_hops=4),
+                betweenness_sampled(e, k_sources=6, max_hops=4),
+                harmonic_closeness_sampled(e, k_sources=6, max_hops=4),
+                shortest_paths(e, seeds, rounds=5),
+                temporal_reachability(te, seeds, rounds=4),
+            )
+        ]
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        narrow = run()
+        spark.conf.set("spark.sql.shuffle.partitions", "11")
+        wide = run()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    assert all(len(rows) > 3 for rows in narrow)
+    assert narrow == wide
