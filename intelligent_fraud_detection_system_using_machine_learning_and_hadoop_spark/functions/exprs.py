@@ -82,9 +82,9 @@ def portable_str_id(col: Column | str) -> Column:
 def percentile_scalar_df(
     df: DataFrame, col: str, qs: dict[str, float], exact: bool = True
 ) -> DataFrame:
-    """Lazy 1-row DataFrame of percentile scalars — the declarative
-    scalar-subquery form: ``fact.crossJoin(F.broadcast(this))`` keeps
-    the threshold inside ONE Catalyst plan (no hidden job at
+    """Lazy 1-row DataFrame of percentile scalars, read as a scalar
+    subquery (``.scalar()``) or as a broadcast 1-row ``crossJoin`` side:
+    either keeps the threshold inside ONE Catalyst plan (no job at
     plan-construction time, unlike :func:`exact_percentile`).
 
     ``qs`` maps output column name → quantile. ``exact=False`` swaps in

@@ -17,9 +17,9 @@ parity traps") — deliberate, not bugs:
   std (ddof=0), MLlib by the sample std (ddof=1) — values differ by
   √(n/(n−1)); immaterial for anomaly ranking, called out for anyone
   comparing feature matrices bit-for-bit.
-* **Date feature** (P4): days since the batch-min date, computed with a
-  scalar aggregate broadcast into ``datediff`` — exactly the
-  reference's ``(Date - Date.min()).dt.days`` (``train.py:19``).
+* **Date feature** (P4): days since the batch-min date, a scalar
+  subquery fed to ``datediff`` — exactly the reference's
+  ``(Date - Date.min()).dt.days`` (``train.py:19``).
 
 Model persistence is ``PipelineModel.save/load`` (one directory, HDFS/
 object-store ready) instead of the reference's joblib+torch file pairs.
@@ -53,13 +53,11 @@ def with_date_numeric(
     df: DataFrame, date_col: str = "Date", out_col: str = "DateNumeric"
 ) -> DataFrame:
     """Days since the batch-min date (reference P4/A5). The global min
-    joins in as a broadcast 1-row crossJoin (scalar-subquery shape) so
-    the derivation stays inside one lazy plan — no driver collect."""
-    mins = df.agg(F.min(date_col).alias("__min_date"))
-    return (
-        df.crossJoin(F.broadcast(mins))
-        .withColumn(out_col, F.datediff(F.col(date_col), F.col("__min_date")))
-        .drop("__min_date")
+    is a scalar subquery: the derivation stays inside one lazy plan with
+    no driver collect, and a consumer that never reads ``out_col`` prunes
+    the subquery with it."""
+    return df.withColumn(
+        out_col, F.datediff(F.col(date_col), df.agg(F.min(date_col)).scalar())
     )
 
 
@@ -105,10 +103,6 @@ def fit_preprocessor(
         df = with_date_numeric(df)
     model = build_preprocessor(numeric_cols, categorical_cols).fit(df)
     return model, model.transform(df)
-
-
-def save_preprocessor(model: PipelineModel, path: str) -> None:
-    model.write().overwrite().save(path)
 
 
 #: path -> ((content fingerprint, applicationId), loaded model)

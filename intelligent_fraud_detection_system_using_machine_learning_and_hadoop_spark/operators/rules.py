@@ -29,11 +29,12 @@ Spark-first differences from the reference (SURVEY.md §2.3/§2.5):
   positional-assignment misalignment bug (``run_pipeline.py:82-87``,
   SURVEY.md §2.8) structurally impossible.
 
-At 100 TB: the three shuffles (by id, by name, window by id) are the
-whole cost; rule 3's threshold is a scalar — exact percentile needs a
-global order statistic (use ``exact=False`` for the sketch-based
-single-pass estimate at scale). Per-key state for ``collect_set`` is
-bounded by distinct names per id (small by construction of the domain).
+At 100 TB: the two shuffles (by name, then by id for rule 1 and rule
+4's lag together) are the whole cost; rule 3's threshold is a scalar —
+exact percentile needs a global order statistic (use ``exact=False`` for
+the sketch-based single-pass estimate at scale). Per-key state for
+``collect_set`` is bounded by distinct names per id (small by
+construction of the domain).
 """
 
 from __future__ import annotations
@@ -46,8 +47,6 @@ from pyspark.sql import functions as F
 from ..functions.exprs import (
     assemble_flags,
     combine_fraud,
-    exact_percentile,
-    approx_percentile,
     flag_when,
     percentile_scalar_df,
 )
@@ -103,14 +102,6 @@ def _distinct_gt1_semijoin(df: DataFrame, key: str, of: str, out: str) -> DataFr
     return flagged.withColumn(out, F.coalesce(F.col(out), F.lit(False)))
 
 
-def amount_threshold(df: DataFrame, cfg: RuleConfig) -> float:
-    """Global amount cutoff: exact interpolated percentile (reference
-    parity, ``run_pipeline.py:34``) or mergeable sketch (scale path)."""
-    if cfg.exact:
-        return exact_percentile(df, cfg.amount_col, cfg.amount_quantile)
-    return approx_percentile(df, cfg.amount_col, cfg.amount_quantile)
-
-
 def with_rule_flags(df: DataFrame, cfg: RuleConfig = RuleConfig()) -> DataFrame:
     """Append boolean rule columns + the combined ``RuleFraud`` string.
 
@@ -126,35 +117,35 @@ def with_rule_flags(df: DataFrame, cfg: RuleConfig = RuleConfig()) -> DataFrame:
     file order for a straight single-source read), reproducing the
     reference's tie behavior.
     """
+    src = df
     tiebreaks: tuple[str, ...] = cfg.tiebreak_cols
-    synthesized = False
     if not tiebreaks:
         df = df.withColumn("__ingest_order", F.monotonically_increasing_id())
-        tiebreaks, synthesized = ("__ingest_order",), True
+        tiebreaks = ("__ingest_order",)
 
+    # The name-keyed flag goes first, so the DaysDiff lag and the
+    # id-keyed flag sit next to each other: under the window strategy
+    # both read one hashpartitioning(id) exchange and one sort (the lag's
+    # (id, date, tiebreak) order also serves the unordered window).
     dist = _distinct_gt1_window if cfg.strategy == "window" else _distinct_gt1_semijoin
-    out = dist(df, cfg.id_col, cfg.name_col, "is_dup_id")
-    out = dist(out, cfg.name_col, cfg.id_col, "is_multi_id")
-
-    # Rule 3 stays DECLARATIVE: the percentile is a broadcast 1-row
-    # crossJoin (scalar-subquery shape), not an eager .first() — the
-    # whole rule engine is one Catalyst plan / one job, matching the
-    # reference's single pass (run_pipeline.py:22-43). A null threshold
-    # (empty/all-null input) flags nothing, like pandas' NaN compare.
-    thr = percentile_scalar_df(
-        df, cfg.amount_col, {"__amount_thr": cfg.amount_quantile}, exact=cfg.exact
-    )
-    out = out.crossJoin(F.broadcast(thr)).withColumn(
-        "is_high_amount",
-        F.when(F.col("__amount_thr").isNull(), F.lit(False)).otherwise(
-            F.col(cfg.amount_col) > F.col("__amount_thr")
-        ),
-    ).drop("__amount_thr")
-
+    out = dist(df, cfg.name_col, cfg.id_col, "is_multi_id")
     order = [F.col(cfg.date_col).asc()] + [F.col(c).asc() for c in tiebreaks]
     w = Window.partitionBy(cfg.id_col).orderBy(*order)
     out = out.withColumn(
         "DaysDiff", F.datediff(F.col(cfg.date_col), F.lag(cfg.date_col, 1).over(w))
+    )
+    out = dist(out, cfg.id_col, cfg.name_col, "is_dup_id")
+
+    # Rule 3's threshold is a scalar subquery, not an eager .first(): the
+    # whole rule engine stays one Catalyst plan, matching the reference's
+    # single pass (run_pipeline.py:22-43). A null threshold (empty or
+    # all-null input) flags nothing, like pandas' NaN compare.
+    thr = percentile_scalar_df(
+        src, cfg.amount_col, {"__amount_thr": cfg.amount_quantile}, exact=cfg.exact
+    ).scalar()
+    out = out.withColumn(
+        "is_high_amount",
+        F.when(thr.isNull(), F.lit(False)).otherwise(F.col(cfg.amount_col) > thr),
     )
     # NULL DaysDiff (first claim per id) → null condition → no flag.
     out = out.withColumn(
@@ -172,7 +163,12 @@ def with_rule_flags(df: DataFrame, cfg: RuleConfig = RuleConfig()) -> DataFrame:
             flag_when(F.col("is_frequent"), labels["frequent"]),
         ),
     )
-    return out.drop("__ingest_order") if synthesized else out
+    # Output layout: the input columns, then the flags. Under semi_join
+    # the name and id keys lead, as a using-join on id, then on name, lays
+    # them out.
+    lead = [] if cfg.strategy == "window" else [cfg.name_col, cfg.id_col]
+    flags = ["is_dup_id", "is_multi_id", "is_high_amount", "DaysDiff", "is_frequent"]
+    return out.select(*lead, *(c for c in src.columns if c not in lead), *flags, "RuleFraud")
 
 
 def score_claims(

@@ -11,10 +11,10 @@ Unlike the reference there is no subprocess boundary and no CSV
 exchange between stages — the "plan" is a DataFrame, Catalyst schedules
 it, and the three scalar aggregates the reference materializes eagerly
 (min date, q99, error mean/std — SURVEY.md §3 EP1 note) all stay lazy
-as broadcast 1-row crossJoins inside the plan. The autoencoder runs as
-one Arrow Python pass whose error is a column of the scored rows; the
-frame is cached once after that column, where the threshold aggregate
-and the verdict fan out (see :func:`score`).
+as scalar subqueries inside the plan. The autoencoder runs as one Arrow
+Python pass whose error is a column of the scored rows; the frame is
+cached once after that column, where the threshold subquery and the
+verdict fan out (see :func:`score`).
 """
 
 from __future__ import annotations
@@ -82,7 +82,7 @@ def score(
     ``ReconstructionError`` is a column of the flagged frame itself, so
     each row's error is computed from that row's features, whatever the
     partitioning or a recompute does. The frame is cached once, after
-    that column (``pipeline.score.scored``): the threshold aggregate and
+    that column (``pipeline.score.scored``): the threshold subquery and
     the verdict both read the cache, so the rules and the model pass
     run once per action. The PCA scorer also caches the flagged frame,
     which its fits read. The preprocessor comes from
@@ -92,8 +92,8 @@ def score(
     if scorer == "auto":
         scorer = "autoencoder" if model_dir else "pca"
 
-    # DateNumeric's batch-min aggregate scans the input's Date column,
-    # not a second copy of the rules subtree
+    # DateNumeric's batch-min subquery scans the input's Date column, not
+    # a second copy of the rules subtree
     flagged = with_rule_flags(with_date_numeric(claims), cfg)
     out_cols = [c for c in flagged.columns if c != "DateNumeric"]
     if scorer == "autoencoder":

@@ -397,21 +397,28 @@ def _jobs_in_group(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group) or [])
 
 
-def test_score_is_one_lazy_plan_after_model_load(spark, tmp_path):
+@pytest.fixture(scope="module")
+def model_60(spark, tmp_path_factory):
+    """An autoencoder model dir trained on ``claims_fixture(n=60)``."""
+    model_dir = str(tmp_path_factory.mktemp("claims60") / "model")
+    pipeline.train(claims_fixture(spark, n=60), model_dir)
+    return model_dir
+
+
+def test_score_is_one_lazy_plan_after_model_load(spark, model_60):
     """EP1 laziness: once the model dir is loaded, score() runs no job
     at all — the batch-relative threshold stays inside the Catalyst plan
-    as a broadcast 1-row aggregate, and the preprocessor comes from
-    load_preprocessor's memo."""
+    as a scalar subquery over the error aggregate, and the preprocessor
+    comes from load_preprocessor's memo."""
     import os
 
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.ml.preprocess import (
         load_preprocessor,
     )
-    from tests.test_plan_shapes import plan_of
+    from tests.test_plan_shapes import plan_of, subqueries_of
 
     claims = claims_fixture(spark, n=60)
-    model_dir = str(tmp_path / "model")
-    pipeline.train(claims, model_dir)
+    model_dir = model_60
     load_preprocessor(os.path.join(model_dir, "preprocessor"))
 
     for attempt in ("first", "second"):
@@ -421,13 +428,72 @@ def test_score_is_one_lazy_plan_after_model_load(spark, tmp_path):
         )
         assert jobs == 0, f"{attempt} score() ran {jobs} job(s)"
     plan = plan_of(scored)
-    assert "stddev_pop" in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert "stddev_pop(" in subqueries_of(plan)
+    assert "BroadcastNestedLoopJoin" not in plan
     # the plan still evaluates correctly
     assert scored.count() == 61
 
 
-def test_score_runs_one_model_pass_without_row_key(spark, tmp_path):
+def _score_at_width(spark, claims, width, **kw):
+    """pipeline.score's columns and Name-sorted rows at one
+    ``spark.sql.shuffle.partitions`` width (caches released after)."""
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.cache import (
+        release_caches,
+    )
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    try:
+        scored = pipeline.score(claims, **kw)
+        return scored.columns, sorted(scored.collect(), key=lambda r: r["Name"])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        release_caches()
+
+
+def test_score_is_independent_of_shuffle_width(spark, model_60):
+    """Widths 3 and 11 give the same scored rows. ReconstructionError
+    agrees to 1e-12 relative, not bitwise: the model pass's numpy
+    forward is not bitwise reproducible from run to run."""
+    claims = claims_fixture(spark, n=200)
+    cols, narrow = _score_at_width(spark, claims, 3, model_dir=model_60)
+    cols_wide, wide = _score_at_width(spark, claims, 11, model_dir=model_60)
+    assert cols == cols_wide
+    err = cols.index("ReconstructionError")
+    assert len(narrow) == len(wide) == 201
+    for a, b in zip(narrow, wide):
+        assert a[:err] + a[err + 1 :] == b[:err] + b[err + 1 :]
+        assert a[err] == pytest.approx(b[err], rel=1e-12, abs=0)
+
+
+def test_score_empty_batch_keeps_schema(spark, model_60):
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.schema import (
+        CLAIMS_SCHEMA,
+    )
+
+    empty = pipeline.score(spark.createDataFrame([], CLAIMS_SCHEMA), model_dir=model_60)
+    full = pipeline.score(claims_fixture(spark, n=3), model_dir=model_60)
+    assert empty.schema == full.schema
+    assert empty.count() == 0
+
+
+@pytest.mark.parametrize("n", [60, 80, 200])
+def test_pca_scorer_is_independent_of_shuffle_width(spark, n):
+    """The PCA scorer keeps a residual subspace (k below the feature
+    covariance's rank), so the planted outlier scores highest and the
+    Suspicious set does not depend on the shuffle width."""
+    claims = claims_fixture(spark, n=n)
+    suspicious = []
+    for width in (3, 11):
+        _, rows = _score_at_width(spark, claims, width, scorer="pca")
+        top = max(rows, key=lambda r: r["ReconstructionError"])
+        assert top["Name"] == "Outlier"
+        suspicious.append({r["Name"] for r in rows if r["MLFraud"] == "Suspicious"})
+    assert suspicious[0] == suspicious[1]
+    assert "Outlier" in suspicious[0]
+
+
+def test_score_runs_one_model_pass_without_row_key(spark, model_60):
     """The autoencoder error is a column of the scored rows: the
     physical plan holds ONE Arrow Python node (formatted explain lists
     each distinct node once, however many branches read the cache), no
@@ -437,9 +503,7 @@ def test_score_runs_one_model_pass_without_row_key(spark, tmp_path):
     from tests.test_plan_shapes import plan_of
 
     claims = claims_fixture(spark, n=60)
-    model_dir = str(tmp_path / "model")
-    pipeline.train(claims, model_dir)
-    plan = plan_of(pipeline.score(claims, model_dir=model_dir))
+    plan = plan_of(pipeline.score(claims, model_dir=model_60))
     assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
     for absent in ("MapInPandas", "_row_md5", "_row_id"):
         assert absent not in plan, absent

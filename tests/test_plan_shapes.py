@@ -24,6 +24,12 @@ def plan_of(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def subqueries_of(plan: str) -> str:
+    """The scalar-subquery section of a formatted plan ("" if none)."""
+    _, _, tail = plan.partition("===== Subqueries =====")
+    return tail
+
+
 def test_filters_push_into_parquet_scan(spark, sf_dir):
     plan = plan_of(REGISTRY["shipping_priority"].builder(spark, sf_dir))
     assert "PushedFilters" in plan
@@ -42,9 +48,10 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
 
 def test_rule_plan_is_fully_lazy(spark, sf_dir):
     """The p99 amount threshold must live INSIDE the rule plan (as a
-    broadcast 1-row aggregate), not be eagerly computed into a literal:
-    building the DataFrame must launch zero Spark jobs, and the physical
-    plan must contain the percentile aggregate + its broadcast join."""
+    scalar subquery), not be eagerly computed into a literal: building
+    the DataFrame must launch zero Spark jobs, and the physical plan
+    must hold the percentile aggregate as a scalar subquery, with no
+    broadcast cross join."""
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.rules import (
         with_rule_flags,
     )
@@ -62,8 +69,29 @@ def test_rule_plan_is_fully_lazy(spark, sf_dir):
     jobs_after = len(tracker.getJobIdsForGroup(None) or [])
     assert jobs_after == jobs_before, "rule-plan construction ran a Spark job"
     plan = plan_of(df)
-    assert "percentile" in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert "percentile(" in subqueries_of(plan)
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_rule_windows_share_one_id_exchange(spark):
+    """Window strategy: the id-keyed DaysDiff lag and the id-keyed
+    distinct-name flag read ONE hashpartitioning(id) exchange; with the
+    name-keyed flag that is two shuffles in all."""
+    import datetime as dt
+
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.rules import (
+        with_rule_flags,
+    )
+    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.schema import (
+        CLAIMS_SCHEMA,
+    )
+
+    claims = spark.createDataFrame(
+        [("A", 1, 10, "LPG", dt.date(2024, 1, 1))], CLAIMS_SCHEMA
+    )
+    plan = plan_of(with_rule_flags(claims), "simple")
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert plan.count("Exchange hashpartitioning(Aadhaar") == 1, plan
 
 
 def test_small_dims_broadcast(spark, sf_dir):

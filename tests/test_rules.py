@@ -73,6 +73,16 @@ def test_single_row_no_null_leak(spark):
     assert row["DaysDiff"] is None
 
 
+@pytest.mark.parametrize("strategy", ["window", "semi_join"])
+def test_all_null_amounts_flag_no_high_amount(spark, strategy):
+    # a NULL q99 threshold flags nothing, like pandas' NaN compare
+    df = make_claims(spark, FIXTURE).withColumn("ClaimAmount", F.lit(None).cast("long"))
+    rows = with_rule_flags(df, RuleConfig(strategy=strategy)).collect()
+    assert len(rows) == len(FIXTURE)
+    assert not any(r["is_high_amount"] for r in rows)
+    assert not any("HighClaimAmount" in r["RuleFraud"] for r in rows)
+
+
 def test_semijoin_strategy_matches_window(spark):
     base = make_claims(spark, FIXTURE)
     w = with_rule_flags(base, RuleConfig(strategy="window"))
