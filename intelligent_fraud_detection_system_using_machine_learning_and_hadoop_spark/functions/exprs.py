@@ -79,6 +79,22 @@ def portable_str_id(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product of two double arrays, folded left to right
+    (``((0 + a0·b0) + a1·b1) + …``). The DuckDB oracles spell out the
+    same left-associated chain, so the doubles are bit-identical; do
+    not reassociate."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+    )
+
+
+def _norm_sq(a: Column) -> Column:
+    """Squared L2 norm of a double array, folded left to right like
+    :func:`_dot`."""
+    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
+
+
 def percentile_scalar_df(
     df: DataFrame, col: str, qs: dict[str, float], exact: bool = True
 ) -> DataFrame:

@@ -23,30 +23,35 @@ from __future__ import annotations
 
 from pyspark.ml.feature import PCA, PCAModel
 from pyspark.ml.functions import vector_to_array
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprs import _norm_sq
 
-def _norm_sq(arr_col) -> Column:
-    return F.aggregate(arr_col, F.lit(0.0), lambda a, v: a + v * v)
+
+def _residual_k(k: int, shares, unexplained: float = 0.0) -> int:
+    """k clamped below the covariance rank, so a PCA always keeps a
+    residual subspace: at k ≥ rank the residual is float noise (~1e-14)
+    whose order follows summation order, not the data. ``shares`` are
+    components' shares of the total variance; the rank counts those
+    above 1e-9, plus one when the variance they leave ``unexplained``
+    is above 1e-9. Both PCA scorers use this one rule."""
+    rank = int((shares > 1e-9).sum()) + int(unexplained > 1e-9)
+    return max(1, min(k, rank - 1))
 
 
 def fit_pca(features_df: DataFrame, k: int = 8) -> PCAModel:
-    """Fit top-k PCA with k clamped below the features' covariance rank,
-    so there is always a residual subspace: at k ≥ rank the residual is
-    float noise (~1e-14) whose order follows summation order, not the
-    data. The rank comes from ``explainedVariance`` (each component's
-    share of the total variance), counting shares above 1e-9; one refit
-    runs only when that lowers k."""
+    """Fit top-k PCA with k clamped by :func:`_residual_k`. The shares
+    come from ``explainedVariance``; one refit runs only when the clamp
+    lowers k."""
     dim = features_df.select("features").head()["features"].size
     k = max(1, min(k, dim - 1))
     pca = PCA(k=k, inputCol="features", outputCol="pca_proj")
     model = pca.fit(features_df)
     ev = model.explainedVariance.toArray()
-    # variance the k components leave unexplained means rank > k
-    rank = int((ev > 1e-9).sum()) + int(1.0 - ev.sum() > 1e-9)
-    if max(1, rank - 1) < k:
-        model = pca.setK(max(1, rank - 1)).fit(features_df)
+    k_res = _residual_k(k, ev, 1.0 - ev.sum())
+    if k_res < k:
+        model = pca.setK(k_res).fit(features_df)
     return model
 
 
@@ -167,8 +172,9 @@ def pca_scores_via_moments(
     nz = std > 1e-15
     corr = np.zeros((d, d))
     corr[np.ix_(nz, nz)] = cov[np.ix_(nz, nz)] / np.outer(std[nz], std[nz])
-    k = max(1, min(k, d - 1))
-    _, vecs = np.linalg.eigh(corr)  # ascending; top-k = last k columns
+    vals, vecs = np.linalg.eigh(corr)  # ascending; top-k = last k columns
+    total = vals.sum()  # trace = number of non-constant slots
+    k = _residual_k(min(k, d - 1), vals / total if total > 0 else np.zeros(d))
     W = vecs[:, -k:]
 
     # standardized feature expressions (constant-zero slots drop out)

@@ -18,13 +18,12 @@ corpus is never self-joined; scoring is embarrassingly parallel.
 Weights are QUANTIZED to integer 1e-6 units so the per-document logit
 is an exact BIGINT dot product — order-independent on any partitioning
 and bit-reproducible against a SQL oracle (float dot products are
-neither). The sigmoid probability is one transcendental applied to the
-exact logit, pinned by differential pytest rather than the oracle.
+neither).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .packing import md5_bucket
@@ -41,7 +40,7 @@ def synthetic_quality_weights(
     multiplicative hash of the bucket id mapped to [-1, 1), quantized.
     Engine-portable (plain integer arithmetic — the SQL oracle
     reproduces it exactly); production swaps in a TRAINED table of the
-    same shape, e.g. from :func:`train_quality_weights`."""
+    same (bucket, w_q) shape."""
     h = (F.col("id") + F.lit(seed)) * F.lit(2654435761)
     u = F.pmod(h, F.lit(2**31)).cast("double") / F.lit(float(2**30))
     return spark.range(n_buckets).select(
@@ -106,79 +105,3 @@ def hashed_linear_scores(
         (F.col("logit_q").cast("double") / denom).alias("logit"),
         (F.col("logit_q") > 0).alias("predicted"),
     )
-
-
-def sigmoid_probability(logit: Column) -> Column:
-    """σ(logit) — the calibrated keep-probability. Transcendental, so
-    outside the oracle surface; pinned by differential pytest."""
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))
-
-
-def train_quality_weights(
-    docs: DataFrame,
-    label: Column,
-    n_buckets: int = 1024,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_iter: int = 20,
-    reg_param: float = 0.0,
-) -> tuple[DataFrame, float]:
-    """Fit REAL weights with MLlib LogisticRegression over the same
-    hashed features and export ((bucket, w_q) table, intercept) for the
-    quantized scorer — train once, broadcast everywhere.
-    Engine-specific floats (LBFGS), so attested by pytest (separation /
-    AUC), not a SQL oracle."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import types as T
-
-    db = (
-        docs.select(
-            F.col(id_col).alias("_id"),
-            label.cast("double").alias("_label"),
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("_tok"),
-        )
-        .select(
-            "_id", "_label", md5_bucket(F.col("_tok"), n_buckets).alias("bucket")
-        )
-        .groupBy("_id", "_label", "bucket")
-        .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .groupBy("_id", "_label")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("bucket"), F.col("c")))
-            ).alias("_counts")
-        )
-    )
-    # dense feature assembly stays JVM-side (no Python UDF): index the
-    # bucket→count map over 0..n_buckets-1 and lift to an ML vector
-    dense = F.transform(
-        F.sequence(F.lit(0), F.lit(n_buckets - 1)),
-        lambda i: F.coalesce(
-            F.element_at(F.col("_counts"), i.cast("long")), F.lit(0.0)
-        ),
-    )
-    feats = db.select(
-        "_id", "_label", array_to_vector(dense).alias("features")
-    )
-    lr = LogisticRegression(
-        featuresCol="features",
-        labelCol="_label",
-        maxIter=max_iter,
-        regParam=reg_param,
-    )
-    m = lr.fit(feats)
-    coeffs = m.coefficients.toArray()
-    spark = docs.sparkSession
-    rows = [
-        (int(b), int(round(float(w) * WEIGHT_Q)))
-        for b, w in enumerate(coeffs)
-        if w != 0.0
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("bucket", T.LongType(), False),
-            T.StructField("w_q", T.LongType(), False),
-        ]
-    )
-    return spark.createDataFrame(rows, schema), float(m.intercept)

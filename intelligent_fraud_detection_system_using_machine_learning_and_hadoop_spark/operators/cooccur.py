@@ -136,8 +136,7 @@ def counterparty_hub_report(
 ) -> DataFrame:
     """The EXPLICIT truncation-report companion to
     :func:`shared_counterparty_pairs` /
-    :func:`shared_counterparty_rings` run with the same cap (the
-    ``minhash_bucket_report`` discipline, operators/dedup.py:349): the
+    :func:`shared_counterparty_rings` run with the same cap: the
     top-``top_k`` counterparties by entity degree with, per
     counterparty, the pair fan-out it contributes
     (``n_pairs_witnessed`` = C(d,2) — its share of the Σdeg² cost

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprs import _dot, _norm_sq
+
 
 def dedup_exact(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", normalize: bool = True
@@ -189,25 +191,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """Per-doc MinHash signature: k independent min-hashes of the
-    shingle set, each ``xxhash64(md5₆₀(shingle), seed)`` over portable
-    shingle ids (same family as the registered LSH query so signatures
-    compose with its oracle)."""
-    return _signatures_from_shingled(
-        _shingled(df, id_col, text_col, n),
-        num_hashes,
-        out_id=id_col,
-        portable_ids=True,
-    )
-
-
 def _signatures_from_shingled(
     s: DataFrame,
     num_hashes: int,
@@ -323,8 +306,7 @@ def minhash_near_dup_pairs(
       pairs (deterministic truncation; a size-m bucket emits
       C(cap,2) instead of C(m,2) candidates). Bounds candidate AND
       true-pair output; costs recall only on pairs whose every shared
-      band is oversubscribed. Audit what was dropped with
-      :func:`minhash_bucket_report`.
+      band is oversubscribed.
     * ``max_shingle_df`` — document-frequency ceiling on shingles:
       shingles appearing in more than this many docs are removed from
       every shingle set before signatures AND exact verify (Jaccard is
@@ -386,125 +368,6 @@ def minhash_near_dup_pairs(
         )
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
-def minhash_bucket_report(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket_size: int | None = None,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """The EXPLICIT truncation report companion to
-    :func:`minhash_near_dup_pairs` run with the same parameters: one
-    row per (band, bucket) with ``n_docs``, ``truncated`` (would the
-    ``max_bucket_size`` ceiling bite), ``n_docs_dropped`` and
-    ``n_pairs_dropped`` (C(m,2) − C(cap,2)). A silent cap reads as
-    "covered everything" when it didn't — run this next to any capped
-    dedup pass and publish the totals. One keyed count over the bucket
-    membership rows; no pair expansion."""
-    rows_per_band = num_hashes // bands
-    s = _shingled_cached(df, id_col, text_col, n)
-    if max_shingle_df is not None:
-        s = _drop_hot_shingles(s, max_shingle_df)
-    sig = _signatures_from_shingled(s, num_hashes, portable_ids=True)
-    counts = (
-        _lsh_buckets(sig, bands, rows_per_band)
-        .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-    cap = F.lit(max_bucket_size).cast("long") if max_bucket_size is not None else None
-    if cap is None:
-        return counts.select(
-            "band",
-            "bucket",
-            "n_docs",
-            F.lit(False).alias("truncated"),
-            F.lit(0).cast("long").alias("n_docs_dropped"),
-            F.lit(0).cast("long").alias("n_pairs_dropped"),
-        )
-    kept = F.least(F.col("n_docs"), cap)
-    pairs = lambda m: (m * (m - F.lit(1).cast("long"))) / F.lit(2)  # noqa: E731
-    return counts.select(
-        "band",
-        "bucket",
-        "n_docs",
-        (F.col("n_docs") > cap).alias("truncated"),
-        F.greatest(F.col("n_docs") - cap, F.lit(0).cast("long")).alias(
-            "n_docs_dropped"
-        ),
-        (pairs(F.col("n_docs")) - pairs(kept)).cast("long").alias(
-            "n_pairs_dropped"
-        ),
-    )
-
-
-def token_hashes_expr(text_col: str = "text"):
-    """Per-token 64-bit hash array: ``xxhash64(md5₆₀(token))`` over the
-    whitespace token stream (multiplicity preserved — SimHash weights
-    by occurrence). The md5-prefix id (functions/exprs.py::
-    portable_str_id) makes the stream bit-reproducible in DuckDB, so
-    the SimHash pipeline carries a full value oracle (r18 promotion);
-    hashing each token ONCE here also removes the old 64×-per-bit
-    rehash from the majority fold."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), x -> x != '')"
-    return F.expr(
-        f"transform({toks}, t -> "
-        f"xxhash64(CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)))"
-    )
-
-
-def simhash_from_hashes(hash_col: str = "_th", bits: int = 64):
-    """64-bit SimHash from a precomputed token-hash array: bitwise
-    majority, folded as a zero-shuffle per-row expression. For each
-    bit, count tokens with the bit set minus tokens without; bit in
-    result = 1 iff the sum is positive (ties → 0, incl. the empty
-    doc). NOTE (r18): this nested-lambda fold runs INTERPRETED — 64 ×
-    |tokens| ops per row — so the hot path
-    (``simhash_near_dup_pairs``) uses the exploded codegen'd
-    aggregate (:func:`_simhash_signatures_exploded`, identical
-    values) instead; this expression form remains for single-pass /
-    no-shuffle contexts where the array is short."""
-    return F.expr(
-        f"""
-        aggregate(
-          sequence(0, {bits - 1}),
-          0L,
-          (acc, bit) -> acc | IF(
-            aggregate({hash_col}, 0L,
-              (s, h) -> s + IF(((h >> bit) & 1L) = 1L, 1L, -1L)) > 0L,
-            shiftleft(1L, bit), 0L)
-        )
-        """
-    )
-
-
-def simhash_expr(text_col: str = "text", bits: int = 64):
-    """One-shot convenience composition of :func:`token_hashes_expr`
-    and :func:`simhash_from_hashes` (the token hashes inline, so the
-    optimizer may recompute them per bit — hot paths use the exploded
-    codegen'd aggregate in ``simhash_near_dup_pairs`` instead; see
-    the r18 note on :func:`simhash_from_hashes`)."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), x -> x != '')"
-    hashes = (
-        f"transform({toks}, t -> "
-        f"xxhash64(CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)))"
-    )
-    return F.expr(
-        f"""
-        aggregate(
-          sequence(0, {bits - 1}),
-          0L,
-          (acc, bit) -> acc | IF(
-            aggregate({hashes}, 0L,
-              (s, h) -> s + IF(((h >> bit) & 1L) = 1L, 1L, -1L)) > 0L,
-            shiftleft(1L, bit), 0L)
-        )
-        """
     )
 
 
@@ -631,7 +494,6 @@ def embedding_cosine_dup_pairs(
     cross-engine reproducibility (same convention as similarity.py).
     """
     from ..sources.readers import ensure_min_partitions
-    from .similarity import _dot, _norm_sq
 
     v = ensure_min_partitions(
         vectors.select(
@@ -672,7 +534,7 @@ def embedding_lsh_dup_pairs(
     never self-joins in full.
     """
     from ..sources.readers import ensure_min_partitions
-    from .similarity import _dot, _norm_sq, hyperplane_tables_df, with_lsh_buckets
+    from .similarity import hyperplane_tables_df, with_lsh_buckets
 
     tables_df = hyperplane_tables_df(
         vectors.sparkSession, dim, n_planes, n_tables, seed
@@ -1022,19 +884,9 @@ def semantic_dedup(
     cell's self-join is partition-local. Rows-only correctness (k-means
     cell boundaries are engine-specific); the keep-rule itself is
     pinned by differential pytest."""
-    import numpy as np  # noqa: F401 — parity with similarity.py deps
-    from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    def _norm_sq(col):
-        return F.aggregate(
-            col, F.lit(0.0), lambda acc, x: acc + x * x
-        )
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
+    from .similarity import fit_kmeans
 
     v = vectors.select(
         F.col(id_col).alias("_id"),
@@ -1044,8 +896,7 @@ def semantic_dedup(
         ).alias("_u"),
     )
     with_vec = v.withColumn("_fv", array_to_vector(F.col("_u")))
-    km = KMeans(k=n_clusters, seed=seed, featuresCol="_fv", predictionCol="cell")
-    model = km.fit(with_vec)
+    model = fit_kmeans(with_vec, "_id", n_clusters, seed, prediction_col="cell")
     assigned = model.transform(with_vec).select("_id", "_u", "cell")
 
     from ..cache import swap_cache

@@ -483,10 +483,8 @@ def pagerank_quantized(
     damp_den: int = 100,
     src: str = "src",
     dst: str = "dst",
-    broadcast_ranks: bool = False,
     assume_distinct: bool = False,
     seed_nodes: DataFrame | None = None,
-    eager_round_checkpoints: bool = False,
 ) -> DataFrame:
     """All-integer PageRank: power iteration in fixed-point arithmetic
     so every engine computes bit-identical ranks (float PageRank is
@@ -524,16 +522,15 @@ def pagerank_quantized(
     self-loops unioned so sink coverage needs no outer join — is
     cached pre-partitioned ONCE, and every round joins the N-row rank
     vector against it and folds into a destination-keyed aggregation.
-    Driver holds only the node COUNT. With ``broadcast_ranks=True``
-    (right when the node set is dimension-sized — e.g. a supplier/part
+    Driver holds only the node COUNT. The rank vector is always
+    broadcast (the node set is dimension-sized — e.g. a supplier/part
     graph whose nodes number ~√|edges| — while the EDGE list is the
-    big side) the rank vector broadcasts and the cache is partitioned
-    by DESTINATION, so the per-round groupBy reuses the cached
-    partitioning and a round runs with NO shuffle at all (measured
-    1.8× at sf0.1 vs re-shuffling each round). With ``False`` (nodes
-    web-scale, rank vector too big to broadcast) the cache partitions
-    by SOURCE so the rank⋈edge join co-locates every round and only
-    the destination aggregation shuffles — the classic Pregel cost.
+    big side), and the cache is partitioned by DESTINATION, so the
+    per-round groupBy reuses the cached partitioning and a round runs
+    with NO shuffle at all (measured 1.8× at sf0.1 vs re-shuffling each
+    round). A node set too big to broadcast would need a size gate like
+    ``_min_relax``'s and a source-partitioned cache; no registered
+    query has one.
 
     ``assume_distinct=True`` skips the defensive edge dedup when the
     caller's construction already guarantees distinct edges (e.g. a
@@ -584,9 +581,8 @@ def pagerank_quantized(
     # at the session width: per-round work full-scans this frame in
     # complete waves, so data-derived widening only adds overhead —
     # the measured iterative-op rule in _sized_partitions_ckpt.
-    part_col = "_dst" if broadcast_ranks else "_src"
     e_aug = swap_cache(
-        plan_key(f"pagerank.edges_aug.{part_col}", e),
+        plan_key("pagerank.edges_aug._dst", e),
         e.join(deg, "_src")
         .select("_src", "_dst", F.lit(1).alias("_w"), "_deg")
         .union(
@@ -597,7 +593,7 @@ def pagerank_quantized(
                 F.col("_deg"),
             )
         )
-        .repartition(F.col(part_col)),
+        .repartition(F.col("_dst")),
     )
     if seeds is None:
         r = deg.select(
@@ -624,8 +620,7 @@ def pagerank_quantized(
             F.lit(0)
         )
     for _ in range(iters):
-        rr = F.broadcast(r) if broadcast_ranks else r
-        flows = rr.join(e_aug, F.col("node") == F.col("_src")).select(
+        flows = F.broadcast(r).join(e_aug, F.col("node") == F.col("_src")).select(
             "_dst", (F.col("_w") * F.expr("r_q div _deg")).alias("_c")
         )
         agg = flows.groupBy("_dst").agg(
@@ -643,18 +638,13 @@ def pagerank_quantized(
         # dominates (plan audit: 108 exchanges printed for 5 rounds).
         # The rank vector is N rows — the checkpoint is tiny.
         #
-        # LAZY by default (r19, VERDICT r18 item 5): localCheckpoint
-        # truncates the LOGICAL plan to a LogicalRDD immediately either
-        # way — eager only adds a blocking count() job per round. The
-        # loop has no per-round driver decision (fixed ``iters``, no
-        # isEmpty), so materialization can ride inside the next
-        # consumer's job: in broadcast mode each round's broadcast
-        # collect computes-and-pins the checkpoint RDD; in hash mode
-        # all rounds fuse into one job DAG. Same values (pinned by the
-        # eager/lazy byte-equality pytest); measured A/B in
-        # OPTIMIZATION_r19.md §5. ``eager_round_checkpoints=True``
-        # restores the r18 form (and is the A/B lever).
-        r = r.localCheckpoint(eager=eager_round_checkpoints)
+        # LAZY: localCheckpoint truncates the LOGICAL plan to a
+        # LogicalRDD immediately either way — eager only adds a blocking
+        # count() job per round. The loop has no per-round driver
+        # decision (fixed ``iters``, no isEmpty), so each round's
+        # broadcast collect computes-and-pins the checkpoint RDD
+        # (eager vs lazy A/B: OPTIMIZATION_r19.md §5).
+        r = r.localCheckpoint(eager=False)
     return r.select(
         "node", "r_q", (F.col("r_q").cast("double") / F.lit(float(q))).alias("rank")
     )
@@ -664,7 +654,6 @@ def triangle_stats(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    broadcast_degrees: bool = False,
 ) -> DataFrame:
     """Global triangle census of an undirected graph: one row with
     ``(n_nodes, n_edges, n_wedges, n_triangles, global_clustering)``
@@ -695,11 +684,11 @@ def triangle_stats(
     |E| = 10¹², acceptable and standard for this algorithm family).
 
     Plan shape: degree agg (one shuffle) → orientation joins against
-    the |V|-row degree table (broadcast when ``broadcast_degrees`` —
-    set it when |V| is dimension-sized; leave False for web-scale node
-    sets, where both sides hash-partition) → adjacency groupBy (one
-    shuffle) → ONE node-keyed join of the exploded adjacency against
-    itself → global sum. No driver loops, no collect.
+    the |V|-row degree table (always broadcast: |V| is dimension-sized
+    here; a web-scale node set would need a size gate like
+    ``_min_relax``'s) → adjacency groupBy (one shuffle) → ONE
+    node-keyed join of the exploded adjacency against itself → global
+    sum. No driver loops, no collect.
     """
     e = _canonical(edges, src, dst)
     # The canonical edge list feeds THREE consumers (degrees, the
@@ -729,9 +718,7 @@ def triangle_stats(
     # rank = (deg, id); orient a -> b iff rank(a) < rank(b)
     da = deg.select(F.col("u").alias("u"), F.col("deg").alias("_dega"))
     db = deg.select(F.col("u").alias("v"), F.col("deg").alias("_degb"))
-    if broadcast_degrees:
-        da, db = F.broadcast(da), F.broadcast(db)
-    ranked = e.join(da, "u").join(db, "v")
+    ranked = e.join(F.broadcast(da), "u").join(F.broadcast(db), "v")
     oriented = ranked.select(
         F.when(
             (F.col("_dega") < F.col("_degb"))
@@ -840,7 +827,6 @@ def k_core(
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 64,
-    broadcast_nodes: bool = False,
     rounds: int | None = None,
 ) -> DataFrame:
     """The k-core of an undirected graph: the maximal subgraph in which
@@ -869,10 +855,9 @@ def k_core(
     practice, ≤ n worst case (a path peels one layer per round;
     ``max_rounds`` guards).
 
-    ``broadcast_nodes=True`` broadcasts the frontier so the
-    delta/prune joins are map-side — right when the node set is
-    dimension-sized; leave False for web-scale node sets (then all
-    joins hash-partition, still frontier-proportional).
+    The frontier is always broadcast, so the delta/prune joins are
+    map-side (the node set is dimension-sized; a web-scale one would
+    need a size gate like ``_min_relax``'s).
 
     Returns (id, core_degree) for every node of the k-core, with its
     degree INSIDE the core.
@@ -910,7 +895,7 @@ def k_core(
         if frontier.isEmpty():
             converged = True
             break
-        fb = F.broadcast(frontier) if broadcast_nodes else frontier
+        fb = F.broadcast(frontier)
         # per node: how many of its edges end in THIS round's frontier.
         # Deltas are computed against the ORIGINAL edge list — never
         # pruned, never re-checkpointed — which is exact because a node
@@ -953,7 +938,6 @@ def label_propagation(
     rounds: int = 4,
     src: str = "id_a",
     dst: str = "id_b",
-    broadcast_labels: bool = False,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (Raghavan,
     Albert, Kumara 2007), made fully deterministic: every node starts
@@ -969,9 +953,9 @@ def label_propagation(
 
     Scale shape (the PageRank discipline): the bidirected edge list is
     built once, pre-partitioned by the aggregation key ``u`` and
-    checkpointed; per round the |V|-row label table joins in
-    (broadcast when ``broadcast_labels`` — right for dimension-sized
-    node sets; hash join otherwise) followed by two keyed aggregations
+    checkpointed; per round the |V|-row label table joins in (always
+    broadcast: the node set is dimension-sized) followed by two keyed
+    aggregations
     whose first key is ``u``. The per-node argmax is
     ``max(struct(cnt, -label))`` — one aggregate, no window, no
     per-node neighbor array ever materialized (a celebrity node's
@@ -1008,7 +992,7 @@ def label_propagation(
         .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
-        lb = F.broadcast(labels) if broadcast_labels else labels
+        lb = F.broadcast(labels)
         nbr = both.join(lb, both["v"] == lb["id"]).select(both["u"], lb["label"])
         counts = nbr.groupBy("u", "label").agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
@@ -1197,7 +1181,6 @@ def hits_quantized(
     q: int = 10**6,
     src: str = "src",
     dst: str = "dst",
-    broadcast_scores: bool = False,
     assume_distinct: bool = False,
     precache_min_bytes: int = 8 << 20,
 ) -> DataFrame:
@@ -1229,10 +1212,10 @@ def hits_quantized(
     is eagerly checkpointed ONCE and every half-step is one join of
     the |V|-row score table against it plus one keyed agg; score
     tables are |V| rows, checkpointed per half-step to truncate
-    lineage. ``broadcast_scores=True`` broadcasts the score table into
-    the edge join (right when nodes are dimension-sized, e.g. a
-    supplier/part graph with |V| ≈ √|E|), so the only shuffle per
-    half-step is the keyed aggregation.
+    lineage. The score table is always broadcast into the edge join
+    (nodes are dimension-sized, e.g. a supplier/part graph with
+    |V| ≈ √|E|), so the only shuffle per half-step is the keyed
+    aggregation.
 
     Returns one row per node and role it holds edges for:
     (node, kind 'hub'|'authority', score_q, score = score_q/Q).
@@ -1251,10 +1234,9 @@ def hits_quantized(
     # (r18, the LPA partitioning finding — a localCheckpoint would
     # FORGET the partitioning): with broadcast scores the only shuffle
     # per half-step was the |E|-row aggregation exchange, and hash(out)
-    # from the cache satisfies its clustering, so both pushes now run
-    # exchange-free; in hash mode the copies co-locate the score join
-    # instead (partition by the JOIN key), leaving only the agg
-    # exchange — the pagerank part_col rule, applied per direction.
+    # from the cache satisfies its clustering, so both pushes run
+    # exchange-free — pagerank's destination-partitioned cache, applied
+    # per direction.
     #
     # SIZE-GATED (r19, VERDICT r18 item 1): the two up-front |E|-row
     # materializations amortize over the 2·iters exchange-free pushes
@@ -1307,11 +1289,9 @@ def hits_quantized(
         )
 
     def _push(scores: DataFrame, key: str, out: str) -> DataFrame:
-        s = F.broadcast(scores) if broadcast_scores else scores
-        part_col = out if broadcast_scores else key
-        ec = e_by_src if part_col == "_src" else e_by_dst
+        ec = e_by_src if out == "_src" else e_by_dst
         return (
-            s.join(ec, F.col("node") == F.col(key))
+            F.broadcast(scores).join(ec, F.col("node") == F.col(key))
             .groupBy(F.col(out).alias("node"))
             .agg(F.sum("score_q").cast("long").alias("raw"))
         )
@@ -1349,7 +1329,6 @@ def strongly_connected_components(
     dst: str = "dst",
     max_outer: int = 32,
     max_inner: int = 256,
-    broadcast_nodes: bool = False,
     driver_threshold: int = 100_000,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -1422,9 +1401,9 @@ def strongly_connected_components(
     iterative-op discipline — deliberately NOT width-sized, see
     _sized_partitions_ckpt's negative A/B). The per-outer-round edge
     restriction is two semijoins against the surviving node set.
-    ``broadcast_nodes=True`` broadcasts node/frontier tables into the
-    edge joins — right for dimension-sized graphs; leave False for
-    web-scale node sets.
+    Node/frontier tables are always broadcast into the edge joins (the
+    node set is dimension-sized; a web-scale one would need a size gate
+    like ``_min_relax``'s).
 
     Self-loops and parallel edges are dropped (neither affects SCC
     membership). Nodes are the edge list's endpoints — isolated nodes
@@ -1527,8 +1506,6 @@ def strongly_connected_components(
     active = nodes
     eact = e0
 
-    def _bc(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_nodes else df
 
     def _min_fixpoint(edge_from: str, edge_to: str) -> DataFrame:
         """Min-label propagation to the fixed point over ``eact``:
@@ -1544,7 +1521,7 @@ def strongly_connected_components(
         for _ in range(max_inner):
             cand = (
                 eact.join(
-                    _bc(frontier.withColumnRenamed("node", edge_from)),
+                    F.broadcast(frontier.withColumnRenamed("node", edge_from)),
                     edge_from,
                 )
                 .select(F.col(edge_to).alias("node"), "lbl")
@@ -1585,8 +1562,8 @@ def strongly_connected_components(
             F.col("node").alias(edge_to), F.col("lbl").alias("_lt")
         )
         ef = (
-            eact.join(_bc(lu), edge_from)
-            .join(_bc(lv), edge_to)
+            eact.join(F.broadcast(lu), edge_from)
+            .join(F.broadcast(lv), edge_to)
             .where(F.col("_lf") == F.col("_lt"))
             .select(
                 F.col(edge_from).alias("_from"),
@@ -1603,12 +1580,12 @@ def strongly_connected_components(
         for _ in range(max_inner):
             nxt = (
                 ef.join(
-                    _bc(frontier.select(F.col("node").alias("_from"))),
+                    F.broadcast(frontier.select(F.col("node").alias("_from"))),
                     "_from",
                 )
                 .select(F.col("_to").alias("node"), "lbl")
                 .distinct()
-                .join(_bc(marked.select("node")), "node", "left_anti")
+                .join(F.broadcast(marked.select("node")), "node", "left_anti")
                 .localCheckpoint(eager=True)
             )
             if nxt.isEmpty():
@@ -1625,11 +1602,11 @@ def strongly_connected_components(
             has_out = eact.select(F.col("u").alias("node")).distinct()
             has_in = eact.select(F.col("v").alias("node")).distinct()
             keep = (
-                active.join(_bc(has_out), "node", "leftsemi")
-                .join(_bc(has_in), "node", "leftsemi")
+                active.join(F.broadcast(has_out), "node", "leftsemi")
+                .join(F.broadcast(has_in), "node", "leftsemi")
                 .localCheckpoint(eager=True)
             )
-            trimmed = active.join(_bc(keep), "node", "left_anti")
+            trimmed = active.join(F.broadcast(keep), "node", "left_anti")
             if trimmed.isEmpty():
                 break
             assigned = assigned.union(
@@ -1638,10 +1615,10 @@ def strongly_connected_components(
             active = keep
             eact = (
                 eact.join(
-                    _bc(active.withColumnRenamed("node", "u")), "u", "leftsemi"
+                    F.broadcast(active.withColumnRenamed("node", "u")), "u", "leftsemi"
                 )
                 .join(
-                    _bc(active.withColumnRenamed("node", "v")), "v", "leftsemi"
+                    F.broadcast(active.withColumnRenamed("node", "v")), "v", "leftsemi"
                 )
                 .localCheckpoint(eager=True)
             )
@@ -1670,7 +1647,7 @@ def strongly_connected_components(
             .select("node", F.col("lbl").alias("scc_id"))
             .localCheckpoint(eager=True)
         )
-        residual = active.join(_bc(fb_done.select("node")), "node", "left_anti")
+        residual = active.join(F.broadcast(fb_done.select("node")), "node", "left_anti")
         if residual.isEmpty():
             done = fb_done
         else:
@@ -1682,7 +1659,7 @@ def strongly_connected_components(
                 .distinct()
             )
         assigned = assigned.union(done).localCheckpoint(eager=True)
-        active = active.join(_bc(done.select("node")), "node", "left_anti")
+        active = active.join(F.broadcast(done.select("node")), "node", "left_anti")
         active = active.localCheckpoint(eager=True)
         if active.isEmpty():
             if stats is not None:
@@ -1690,9 +1667,9 @@ def strongly_connected_components(
             return assigned
         eact = (
             eact.join(
-                _bc(active.withColumnRenamed("node", "u")), "u", "leftsemi"
+                F.broadcast(active.withColumnRenamed("node", "u")), "u", "leftsemi"
             )
-            .join(_bc(active.withColumnRenamed("node", "v")), "v", "leftsemi")
+            .join(F.broadcast(active.withColumnRenamed("node", "v")), "v", "leftsemi")
             .localCheckpoint(eager=True)
         )
     raise RuntimeError(f"scc did not converge in {max_outer} outer rounds")

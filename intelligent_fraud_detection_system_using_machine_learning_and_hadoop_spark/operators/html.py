@@ -44,16 +44,6 @@ BLOCK_TAG_SPLIT = (
 STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "for", "on", "with"]
 
 
-def strip_tags(col: Column) -> Column:
-    """Remove script/style elements (with their content) then all
-    remaining tags; collapse whitespace. Two single-element passes —
-    RE2 (the oracle engine) has no backreferences for `</\\1>`."""
-    c = F.regexp_replace(col, r"(?is)<script[^>]*>.*?</script>", " ")
-    c = F.regexp_replace(c, r"(?is)<style[^>]*>.*?</style>", " ")
-    c = F.regexp_replace(c, r"<[^>]*>", " ")
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
-
-
 def wrap_documents_html(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -14,15 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def _norm_sq(a):
-    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
+from ..functions.exprs import _dot, _norm_sq
 
 
 def cosine_topk(
@@ -239,6 +231,36 @@ def lsh_cosine_topk(
     return _topk_per_query(scored.select("query_id", "vec_id", "cos_sim"), k)
 
 
+# fixed, not the session's parallelism: k-means|| draws its samples per
+# partition index, so the fit's partition count is part of the model
+_KMEANS_FIT_PARTITIONS = 4
+
+
+def fit_kmeans(
+    frame: DataFrame,
+    id_col: str,
+    k: int,
+    seed: int,
+    prediction_col: str,
+):
+    """MLlib ``KMeans`` fitted on the vector column ``_fv`` of ``frame``,
+    with rows placed by content: hash-partitioned on ``xxhash64(id,
+    seed)`` into a fixed number of partitions and sorted within each,
+    so the model does not depend on how ``frame`` arrives. k-means||
+    seeds its sampling per partition, so the same rows in 1, 5 or 16
+    partitions would otherwise fit three different clusterings. The fit
+    stays parallel across those partitions; callers ``transform`` the
+    wide frame."""
+    from pyspark.ml.clustering import KMeans
+
+    h = F.xxhash64(F.col(id_col), F.lit(seed))
+    placed = frame.repartition(_KMEANS_FIT_PARTITIONS, h).sortWithinPartitions(
+        h, F.col(id_col)
+    )
+    km = KMeans(k=k, seed=seed, featuresCol="_fv", predictionCol=prediction_col)
+    return km.fit(placed)
+
+
 def ivf_cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -261,8 +283,7 @@ def ivf_cosine_topk(
     read of ~1/n_clusters of the data instead of a full scan. Centroids
     (n_clusters × dim floats) broadcast to everyone.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     norm = lambda df, idc, out: df.select(  # noqa: E731
         F.col(idc).alias(out),
@@ -277,8 +298,7 @@ def ivf_cosine_topk(
     q = norm(queries, query_id_col, "query_id")
 
     with_vec = v.withColumn("_fv", array_to_vector(F.col("_u")))
-    km = KMeans(k=n_clusters, seed=seed, featuresCol="_fv", predictionCol="_cell")
-    model = km.fit(with_vec)
+    model = fit_kmeans(with_vec, "vec_id", n_clusters, seed, prediction_col="_cell")
     assigned = model.transform(with_vec).select("vec_id", "_u", "_cell")
 
     centroids = [np.asarray(c).tolist() for c in model.clusterCenters()]
@@ -306,112 +326,6 @@ def ivf_cosine_topk(
     )
     scored = candidates.withColumn(
         "cos_sim", F.round(_dot(F.col("_u"), F.col("_qu")), 6)
-    )
-    return _topk_per_query(scored.select("query_id", "vec_id", "cos_sim"), k)
-
-
-def build_ivf_index(
-    vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    seed: int = 42,
-) -> None:
-    """Materialize a PERSISTENT IVF index: the build-once/query-forever
-    lifecycle ``ivf_cosine_topk`` computes inline. Two parquet
-    artifacts under ``path``:
-
-    * ``centroids/`` — (cell, centroid) — n_clusters rows;
-    * ``assignments/`` — (vec_id, unit vector, cell), PARTITIONED BY
-      cell — so a query that probes ``n_probe`` cells reads
-      ~n_probe/n_clusters of the corpus via plain partition pruning
-      (the directory layout IS the index; no server, no custom format).
-
-    At 100 TB this is the difference between an ANN query costing a
-    full corpus scan and costing a pruned read of a few partitions."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from ..sources.readers import ensure_min_partitions
-
-    v = ensure_min_partitions(
-        vectors.select(
-            F.col(id_col).alias("vec_id"),
-            F.transform(
-                F.col(vec_col).cast("array<double>"),
-                lambda x: x
-                / F.sqrt(_norm_sq(F.col(vec_col).cast("array<double>"))),
-            ).alias("u"),
-        )
-    )
-    with_vec = v.withColumn("_fv", array_to_vector(F.col("u")))
-    model = KMeans(
-        k=n_clusters, seed=seed, featuresCol="_fv", predictionCol="cell"
-    ).fit(with_vec)
-    assigned = model.transform(with_vec).select("vec_id", "u", "cell")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/assignments"
-    )
-    cent_rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    vectors.sparkSession.createDataFrame(
-        cent_rows, "cell int, centroid array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_query_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Query a persisted IVF index (:func:`build_ivf_index`): score the
-    broadcast centroid table, keep each query's ``n_probe`` cells, and
-    push ``cell IN (...)`` into the partitioned assignments scan —
-    Catalyst partition-prunes the directories, so only the probed
-    cells' files are read. Exact rerank on the candidates; same
-    deterministic (sim desc, id asc) top-k as the inline paths."""
-    from pyspark.sql import Window
-
-    cent = spark.read.parquet(f"{path}/centroids")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.transform(
-            F.col(vec_col).cast("array<double>"),
-            lambda x: x / F.sqrt(_norm_sq(F.col(vec_col).cast("array<double>"))),
-        ).alias("_qu"),
-    )
-    probed = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("_sim", _dot(F.col("_qu"), F.col("centroid")))
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("_sim").desc(), F.col("cell").asc()
-                )
-            ),
-        )
-        .where(F.col("_rn") <= n_probe)
-        .select("query_id", "_qu", "cell")
-    )
-    # the probed cell set is tiny — collect it so the IN-list lands in
-    # the scan as a partition filter (a join would prune at runtime
-    # only via DPP; the explicit literal prunes at planning time)
-    cells = sorted({r["cell"] for r in probed.select("cell").distinct().collect()})
-    assigned = spark.read.parquet(f"{path}/assignments").where(
-        F.col("cell").isin(cells)
-    )
-    candidates = assigned.join(F.broadcast(probed), "cell").where(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = candidates.withColumn(
-        "cos_sim", F.round(_dot(F.col("u"), F.col("_qu")), 6)
     )
     return _topk_per_query(scored.select("query_id", "vec_id", "cos_sim"), k)
 

@@ -1,13 +1,9 @@
-"""Skew mitigation: salted joins, two-phase aggregation, hash-sharded
-exact distinct counting, and the skew probe.
+"""Skew mitigation: hash-sharded exact distinct counting.
 
 AQE's skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`, on by
-default in session.py) handles most sort-merge skew at runtime; these
-explicit forms cover what AQE can't: broadcast-ineligible dimension
-joins against a hot fact key, single-hot-group aggregations where the
-partial-agg map side is itself the bottleneck, and exact
-COUNT(DISTINCT) whose per-key value set lands on one reducer no matter
-how the partials combine.
+default in session.py) handles most sort-merge skew at runtime; the
+form here covers what AQE can't: exact COUNT(DISTINCT) whose per-key
+value set lands on one reducer no matter how the partials combine.
 """
 
 from __future__ import annotations
@@ -16,71 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "__salt"
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | list[str],
-    how: str = "inner",
-    salt: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Equi-join where ``left`` has hot keys: left rows get a random
-    salt in [0, salt); ``right`` is replicated ``salt`` times; the join
-    runs on (key…, salt), spreading each hot key over ``salt`` reducers.
-
-    Result is row-identical to the plain join (salt is dropped).
-    Replication multiplies the right side — use when right is much
-    smaller than the skew damage but too big (or too mid-plan) to
-    broadcast. Supports inner and left joins (right/full would need
-    right-side salting instead). The salt comes from ``rand(seed)`` —
-    Spark seeds it per partition, so task retries replay the same
-    values and the join is exactly-once correct; any salt assignment
-    yields the same join result (pinned by pytest).
-    """
-    if how not in ("inner", "left", "left_outer"):
-        raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    keys = [on] if isinstance(on, str) else list(on)
-    l_salted = left.withColumn(
-        _SALT, F.floor(F.rand(seed) * salt).cast("int")
-    )
-    r_salted = right.withColumn(
-        _SALT, F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    ).withColumn(_SALT, F.col(_SALT).cast("int"))
-    return l_salted.join(r_salted, keys + [_SALT], how).drop(_SALT)
-
-
-def two_phase_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, str],
-    salt: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Aggregation for a single dominant group: phase 1 aggregates on
-    (keys…, salt) spreading the hot group across reducers, phase 2
-    merges the ≤``salt`` partials per group. ``aggs`` maps column →
-    one of sum/count/min/max (the re-aggregatable algebra; avg = sum
-    + count composed by the caller).
-
-    Spark's hash partial aggregation already combines map-side, so this
-    only wins when the *reduce* side of one group overwhelms a task —
-    the classic null-key/default-key pileup.
-    """
-    merge = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    phase1_exprs = []
-    phase2_exprs = []
-    for col, fn in aggs.items():
-        out = f"{fn}_{col}"
-        if fn not in merge:
-            raise ValueError(f"unsupported agg {fn!r} (need sum/count/min/max)")
-        phase1 = F.count(F.lit(1)) if fn == "count" else getattr(F, fn)(col)
-        phase1_exprs.append(phase1.alias(out))
-        phase2_exprs.append(merge[fn](out).alias(out))
-    salted = df.withColumn(_SALT, F.floor(F.rand(seed) * salt).cast("int"))
-    partial = salted.groupBy(*keys, _SALT).agg(*phase1_exprs)
-    return partial.groupBy(*keys).agg(*phase2_exprs)
 
 
 def salted_distinct_count(
@@ -94,14 +25,14 @@ def salted_distinct_count(
     shard by ``hash(value) % n_salts`` first, count distinct within
     each (key, shard), then SUM the shard counts per key.
 
-    Unlike :func:`two_phase_agg`'s random salt (valid only for
-    re-aggregatable algebra — distinct counts are NOT: the same value
-    could land in two shards and be counted twice), the shard here is a
-    function of the VALUE, so every distinct value maps to exactly ONE
-    shard: per-shard distinct sets partition the per-key distinct set
-    and their cardinalities add up exactly. The hot key's value set is
-    spread over ``n_salts`` tasks instead of one, and stage 2 only sums
-    ``n_salts`` small longs per key.
+    A random salt would be valid only for re-aggregatable algebra —
+    distinct counts are NOT: the same value could land in two shards
+    and be counted twice. The shard here is a function of the VALUE, so
+    every distinct value maps to exactly ONE shard: per-shard distinct
+    sets partition the per-key distinct set and their cardinalities add
+    up exactly. The hot key's value set is spread over ``n_salts`` tasks
+    instead of one, and stage 2 only sums ``n_salts`` small longs per
+    key.
 
     Equivalent result to ``groupBy(keys).agg(countDistinct(value))``
     (pinned by pytest and by the oracle twin of the registered query);
@@ -115,13 +46,3 @@ def salted_distinct_count(
     return per_shard.groupBy(*key_cols).agg(
         F.sum("_d").cast("long").alias(out_col)
     )
-
-
-def top_keys(
-    df: DataFrame, key_cols: list[str], k: int = 20
-) -> DataFrame:
-    """Per-key row counts for the k heaviest keys — the skew probe you
-    run BEFORE reaching for salting (map-side partial count + a
-    TakeOrderedAndProject top-k, so the probe itself cannot skew)."""
-    counts = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n_rows"))
-    return counts.orderBy(F.col("n_rows").desc(), *key_cols).limit(k)

@@ -54,31 +54,3 @@ def group_centroids_long(
             / (F.col("n_vectors").cast("double") * F.lit(float(_Q)))
         ).alias("mean_component"),
     ).orderBy(group_col, "pos")
-
-
-def group_centroids(
-    df: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-    normalize: bool = False,
-) -> DataFrame:
-    """Wide-form centroids: (group, n_vectors, centroid array<double>),
-    optionally L2-normalized — the frame IVF/SemDeDup/nearest-centroid
-    consumers broadcast. Reassembles the long form with a sort-by-dim
-    collect (per-group output is one dim-length array — bounded)."""
-    long = group_centroids_long(df, group_col, vec_col)
-    asm = long.groupBy(group_col).agg(
-        F.first("n_vectors").alias("n_vectors"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "mean_component"))),
-            lambda s: s["mean_component"],
-        ).alias("centroid"),
-    )
-    if not normalize:
-        return asm
-    norm = F.sqrt(
-        F.aggregate(F.col("centroid"), F.lit(0.0), lambda a, x: a + x * x)
-    )
-    return asm.withColumn(
-        "centroid", F.transform(F.col("centroid"), lambda x: x / norm)
-    )

@@ -85,9 +85,11 @@ def score(
     that column (``pipeline.score.scored``): the threshold subquery and
     the verdict both read the cache, so the rules and the model pass
     run once per action. The PCA scorer also caches the flagged frame,
-    which its fits read. The preprocessor comes from
-    ``load_preprocessor``'s memo: a repeated call with an unchanged
-    model dir in one session runs no job until the caller's action.
+    which its fits read; an empty batch has nothing to fit, so it gets
+    a null error column and 0 rows with the autoencoder's schema. The
+    preprocessor comes from ``load_preprocessor``'s memo: a repeated
+    call with an unchanged model dir in one session runs no job until
+    the caller's action.
     """
     if scorer == "auto":
         scorer = "autoencoder" if model_dir else "pca"
@@ -106,8 +108,14 @@ def score(
         )
     else:
         flagged = swap_cache("pipeline.score.flagged", flagged)
-        _, feats = fit_preprocessor(flagged)
-        scored = pca_reconstruction_scores(feats).select(*out_cols, "ReconstructionError")
+        if flagged.isEmpty():
+            err = F.lit(None).cast("double")
+            scored = flagged.select(*out_cols, err.alias("ReconstructionError"))
+        else:
+            _, feats = fit_preprocessor(flagged)
+            scored = pca_reconstruction_scores(feats).select(
+                *out_cols, "ReconstructionError"
+            )
     scored = with_ml_verdict(swap_cache("pipeline.score.scored", scored))
     return scored.withColumn(
         "FraudType", combine_fraud(F.col("RuleFraud"), F.col("MLFraud"))

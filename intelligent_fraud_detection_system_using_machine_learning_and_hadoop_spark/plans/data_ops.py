@@ -935,7 +935,7 @@ def _multimodal_feature_search_oracle(n_bins: int = 16, k: int = 3) -> str:
     printable-ASCII at every gate scale, so byte k ≡ character k and
     bin = codepoint // 16), each embedding component the single IEEE
     division count/len, and the cosine reproduced with the SAME
-    left-associated 16-term fold chains as similarity._dot/_norm_sq —
+    left-associated 16-term fold chains as functions.exprs._dot/_norm_sq —
     bit-identical doubles, then the shared round(…, 6) and the
     (cos DESC, vec_id ASC) row_number ranking."""
     dot = "0.0"
@@ -3006,9 +3006,7 @@ def pagerank_supplier_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the forward list is distinct and its reverses are disjoint
     # (src < 1e6 vs src > 1e6) — the union is distinct by construction
-    return pagerank_quantized(
-        edges, iters=5, broadcast_ranks=True, assume_distinct=True
-    )
+    return pagerank_quantized(edges, iters=5, assume_distinct=True)
 
 
 @query("bpe_tokenize_documents")
@@ -4068,7 +4066,7 @@ def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~√|E|."""
     from ..operators.graph import triangle_stats
 
-    return triangle_stats(_co_order_edges(spark, sf_dir), broadcast_degrees=True)
+    return triangle_stats(_co_order_edges(spark, sf_dir))
 
 
 @query(
@@ -4543,10 +4541,9 @@ def collusion_hub_report_customers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Truncation-report twin of the capped collusion screens
-    (operators/cooccur.py::counterparty_hub_report — the
-    minhash_bucket_report discipline, VERDICT r12 item 1): the top-100
-    supplier counterparties by customer degree, each with its share of
-    the Σdeg² pair fan-out (C(d,2)) and whether the registered
+    (operators/cooccur.py::counterparty_hub_report, VERDICT r12 item 1):
+    the top-100 supplier counterparties by customer degree, each with
+    its share of the Σdeg² pair fan-out (C(d,2)) and whether the registered
     screens' ``max_counterparty_degree=2000`` cap drops it, with the
     pairs avoided when it does. On the hub-free driver data every row
     reads dropped=false / avoided=0 — the HONEST report that the cap
@@ -4973,9 +4970,7 @@ def k_core_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge frame (``_co_order_edges``)."""
     from ..operators.graph import k_core
 
-    return k_core(
-        _co_order_edges(spark, sf_dir), 80, broadcast_nodes=True, rounds=10
-    )
+    return k_core(_co_order_edges(spark, sf_dir), 80, rounds=10)
 
 
 def _k_truss_oracle_sql(k: int, rounds: int) -> str:
@@ -5173,12 +5168,7 @@ def graph_risk_profile_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = li.select(F.col("l_partkey").alias("node")).distinct()
 
     scc = _scc_labels(spark, sf_dir).select("node", "scc_size")
-    core = k_core(
-        _co_order_edges(spark, sf_dir, cache=True),
-        80,
-        broadcast_nodes=True,
-        rounds=10,
-    )
+    core = k_core(_co_order_edges(spark, sf_dir, cache=True), 80, rounds=10)
     core = core.select(F.col("id").alias("node"), F.col("core_degree"))
     truss = k_truss(_co_order_edges(spark, sf_dir, cache=True), 12, rounds=7)
     truss_nodes = (
@@ -5254,9 +5244,7 @@ def label_propagation_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 chained CTEs — per-node community ids must match exactly."""
     from ..operators.graph import label_propagation
 
-    return label_propagation(
-        _co_order_edges(spark, sf_dir), rounds=4, broadcast_labels=True
-    )
+    return label_propagation(_co_order_edges(spark, sf_dir), rounds=4)
 
 
 @query(
@@ -5379,7 +5367,7 @@ def _scc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_partkey").alias("src"), F.col("_nxt").alias("dst"))
         .distinct()
     )
-    labels = strongly_connected_components(e, broadcast_nodes=True)
+    labels = strongly_connected_components(e)
     sizes = labels.groupBy("scc_id").agg(
         F.count(F.lit(1)).cast("long").alias("scc_size")
     )
@@ -8089,9 +8077,7 @@ def hits_supplier_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("src"),
         (F.col("l_partkey") + 1000000).alias("dst"),
     ).distinct()
-    return hits_quantized(
-        edges, iters=2, broadcast_scores=True, assume_distinct=True
-    )
+    return hits_quantized(edges, iters=2, assume_distinct=True)
 
 
 def _acf_oracle(lags: tuple[int, ...] = (1, 2, 3)) -> str:
@@ -8374,7 +8360,6 @@ def ppr_supplier_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_quantized(
         edges,
         iters=5,
-        broadcast_ranks=True,
         assume_distinct=True,
         seed_nodes=seeds,
     )

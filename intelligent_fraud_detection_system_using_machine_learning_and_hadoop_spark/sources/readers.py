@@ -107,113 +107,3 @@ def ensure_min_partitions(df: DataFrame, parallelism: int | None = None) -> Data
     if df.rdd.getNumPartitions() < max(2, p // 2):
         return df.repartition(p)
     return df
-
-
-def read_claims_json(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = CLAIMS_SCHEMA,
-) -> DataFrame:
-    """JSON-lines scan of a claims table (same schema contract as the
-    CSV reader; schema-declared so no inference pass — on JSON an
-    inference pass is a full extra read of the data)."""
-    return spark.read.schema(schema).option("dateFormat", "yyyy-MM-dd").json(path)
-
-
-def read_binary_assets(spark: SparkSession, path: str, glob: str | None = None):
-    """Directory of raw files → asset frame via Spark's built-in
-    ``binaryFile`` source: one row per file with the bytes as a
-    ``binary`` column — the standard ingestion path for image/audio/
-    video corpora (multimodal columns are opaque bytes + typed
-    metadata; SURVEY §2 multimodal family). Emits
-    (asset_id, uri, modality, content, mime):
-
-    * asset_id — first 15 md5 hex chars of the uri as a BIGINT (60
-      bits: birthday-collision odds stay below ~0.05% at a billion
-      files, vs ~50% at 77k files for the old 32-bit prefix — ADVICE
-      r7; ``uri`` remains the true primary key),
-    * modality/mime — guessed from the file extension (opaque bytes
-      otherwise),
-    * content — the raw bytes, ready for
-      operators/multimodal.decode_assets / with_binary_meta.
-
-    Scale: binaryFile is a real FileFormat — partition planning,
-    ``pathGlobFilter`` pruning and ``maxPartitionBytes`` packing all
-    apply, so a billion-file corpus scans like any other source (the
-    driver never lists bytes; executors read their own splits).
-    """
-    from pyspark.sql import functions as F
-
-    r = spark.read.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    df = r.load(path)
-    ext = F.lower(F.regexp_extract(F.col("path"), r"\.([A-Za-z0-9]+)$", 1))
-    modality = (
-        F.when(ext.isin("png", "gif", "jpg", "jpeg", "bmp"), "image")
-        .when(ext.isin("wav", "mp3", "flac", "ogg"), "audio")
-        .when(ext.isin("mp4", "avi", "mkv", "webm"), "video")
-        .otherwise("binary")
-    )
-    mime = (
-        F.when(ext == "png", "image/png")
-        .when(ext.isin("jpg", "jpeg"), "image/jpeg")
-        .when(ext == "gif", "image/gif")
-        .when(ext == "bmp", "image/bmp")
-        .when(ext == "wav", "audio/wav")
-        .when(ext == "mp4", "video/mp4")
-        .otherwise("application/octet-stream")
-    )
-    return df.select(
-        F.conv(F.substring(F.md5(F.col("path")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("asset_id"),
-        F.col("path").alias("uri"),
-        modality.alias("modality"),
-        F.col("content"),
-        mime.alias("mime"),
-    )
-
-
-def read_claims_csv_audited(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = CLAIMS_SCHEMA,
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
-    """Malformed-input-aware claims CSV scan: the production ingest
-    variant of :func:`read_claims_csv`. The reference would crash (or
-    silently coerce) on a bad row inside ``pd.read_csv``
-    (ref scripts/run_pipeline.py:17); a pipeline fed by uploads needs
-    the three standard dispositions, all native Spark CSV-source
-    behavior (JVM-side, no Python in the scan):
-
-    * ``PERMISSIVE`` (default): bad rows yield nulls for unparseable
-      fields and the ORIGINAL line is captured in ``_corrupt_record``
-      for quarantine — select ``WHERE _corrupt_record IS NOT NULL``
-      into a dead-letter sink, everything else flows on;
-    * ``DROPMALFORMED``: bad rows vanish (lossy, auditable only by
-      count delta);
-    * ``FAILFAST``: the scan throws on first corruption (CI gates).
-
-    The corrupt-record column rides the normal scan — one pass, no
-    pre-validation job over the file. (It is only declared under
-    PERMISSIVE: Spark's CSV source treats a declared corrupt-record
-    column as "schema matches" under the other modes, which would
-    defeat the drop/fail semantics.)"""
-    reader = (
-        spark.read.option("header", True)
-        .option("dateFormat", "yyyy-MM-dd")
-        .option("mode", mode)
-    )
-    if mode.upper() == "PERMISSIVE":
-        s = T.StructType(
-            list(schema.fields)
-            + [T.StructField("_corrupt_record", T.StringType())]
-        )
-        reader = reader.option(
-            "columnNameOfCorruptRecord", "_corrupt_record"
-        ).schema(s)
-    else:
-        reader = reader.schema(schema)
-    return reader.csv(path)

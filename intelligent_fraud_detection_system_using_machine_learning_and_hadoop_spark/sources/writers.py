@@ -8,8 +8,6 @@ scale path (partitioned columnar, predicate-pushdown-able on re-read).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
@@ -39,193 +37,3 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 16,
-    path: str | None = None,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed (hash-pre-partitioned) table: joins and aggregations on
-    the bucket columns between tables with matching bucketing read
-    straight into sort-merge join with NO exchange — the shuffle is
-    paid once at write time, amortized over every subsequent query.
-    The at-scale answer to "this join runs every hour on the same keys".
-
-    Registers ``table`` in the session catalog; ``path`` makes it an
-    external table (data outlives the catalog entry).
-    """
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path:
-        writer = writer.option("path", path)
-    writer.format("parquet").saveAsTable(table)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (interchange format; parquet remains the scale
-    path — JSON pays ~10× on size and parse)."""
-    df.write.mode(mode).option("dateFormat", "yyyy-MM-dd").json(path)
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_mb: int = 512,
-    sort_within_by: list[str] | None = None,
-) -> int:
-    """Compact a small-file parquet dataset in place: size-based
-    repartition to ~``target_file_mb`` output files (the metadata/task
-    overhead killer on object stores is file COUNT, not bytes), with
-    optional within-file sort so min/max row-group stats support data
-    skipping on the sort keys. Returns the new file count.
-
-    Writes to a sibling temp dir then swaps, so a failed compaction
-    never destroys the source.
-    """
-    import shutil
-
-    df = spark.read.parquet(path)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet") or f.startswith("part-")
-    )
-    n_files = max(1, int(total_bytes / (target_file_mb * 1024 * 1024)) + 1)
-    out = df.repartition(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    tmp = path.rstrip("/") + "__compact_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
-    return sum(1 for f in os.listdir(path) if f.startswith("part-"))
-
-
-def write_jsonl_sharded(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    max_records_per_shard: int = 100_000,
-    compression: str | None = "gzip",
-) -> None:
-    """JSONL training-export sink: one JSON object per line, sharded by
-    record count — the interchange format trainer dataloaders consume.
-
-    ``maxRecordsPerFile`` caps shard size WITHOUT a repartition (each
-    writer task rolls to a new file at the cap), so the export adds
-    zero shuffles on top of the upstream plan; gzip per shard keeps the
-    artifacts object-store friendly. Schema nuance: Spark's JSON writer
-    drops null-valued fields per record (standard JSONL-export
-    behavior) — readers that need null keys should read with an
-    explicit schema, as ``read_jsonl`` here does.
-    """
-    writer = (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", max_records_per_shard)
-        .option("dateFormat", "yyyy-MM-dd")
-    )
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
-
-
-def read_jsonl(spark, path: str, schema) -> DataFrame:
-    """Schema-declared JSONL scan (no inference pass; handles gzip
-    shards transparently)."""
-    return spark.read.schema(schema).option("dateFormat", "yyyy-MM-dd").json(path)
-
-
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    """Columnar ORC sink (zlib-compressed by default; Spark's native
-    writer). ORC carries the same pushdown/pruning contract as parquet
-    — min/max stripe statistics serve predicate pushdown, and column
-    projection never reads dropped columns — so warehouse consumers on
-    ORC-first stacks (Hive/Trino) read the export directly."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_orc(spark, path: str) -> DataFrame:
-    """ORC scan through the native vectorized reader (same codepath
-    family as the parquet scans in readers.py — filter pushdown and
-    column pruning verified by tests/test_sources_orc.py)."""
-    return spark.read.orc(path)
-
-
-def overwrite_partitions_dynamic(
-    df: DataFrame, path: str, partition_by: list[str]
-) -> None:
-    """INSERT OVERWRITE with DYNAMIC partition semantics: replace ONLY
-    the partitions present in ``df``, leave every other partition of
-    the target untouched — the idempotent nightly-reprocess write (a
-    static ``mode("overwrite")`` would truncate the whole table; a
-    late-arriving day's recompute must not).
-
-    Implemented with the native
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` session
-    override, scoped to this one write and restored afterwards, so the
-    session's global write behavior is unchanged. File-level semantics
-    only — no table format required (with a catalog table the
-    equivalent is ``INSERT OVERWRITE`` / ``writeTo().overwritePartitions()``)."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set(key, prev)
-
-
-def avro_available(spark) -> bool:
-    """True iff the spark-avro connector is on the classpath. Spark
-    ships Avro CORE jars (avro-*.jar, used internally for shuffle
-    metadata) but the ``avro`` DATA SOURCE lives in the separate
-    spark-avro module that clusters add with --packages; resolving the
-    format against an empty temp read is offline-safe and touches no
-    files. This sandbox does not carry the module, so the probe gates
-    the round-trip test exactly like the Kafka connector probe
-    (streaming/jobs.py::kafka_available)."""
-    try:
-        spark.read.format("avro").load("/nonexistent/__avro_probe__")
-        return True
-    except Exception as e:
-        # connector present but path missing -> AnalysisException about
-        # the PATH; connector absent -> FAILED_TO_FIND_DATA_SOURCE
-        msg = str(e)
-        return "DATA_SOURCE" not in msg.upper().replace(" ", "_") and (
-            "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-        )
-
-
-def write_avro(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Row-oriented Avro sink (the Kafka-ecosystem interchange format;
-    schema travels in the file header). Requires the spark-avro
-    connector — absent here, the write raises Spark's
-    FAILED_TO_FIND_DATA_SOURCE with the module coordinates, which the
-    gated test pins so a deployment knows exactly what to add. Same
-    partitioning contract as the parquet/ORC sinks."""
-    w = df.write.mode(mode).format("avro")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(path)
-
-
-def read_avro(spark, path: str) -> DataFrame:
-    """Avro scan via the spark-avro connector (gated, see
-    :func:`avro_available`)."""
-    return spark.read.format("avro").load(path)

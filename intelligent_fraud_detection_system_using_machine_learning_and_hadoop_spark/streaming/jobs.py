@@ -1068,7 +1068,7 @@ def read_rate_events(
     the global row index, and the batch timestamp advances
     ``advance_ms`` per batch from epoch 0. The projection shapes it to
     (event_id, user_id, ts, value) so every downstream streaming job is
-    source-agnostic (swap in the file or Kafka reader unchanged).
+    source-agnostic (swap in the file reader unchanged).
 
     ``limit_rows`` bounds the *logical* input (event_id < limit) so a
     finite prefix of the unbounded source has a closed-form batch twin
@@ -1120,18 +1120,24 @@ def stream_rate_minutely(
     rows_per_batch: int = 250,
     advance_ms: int = 60_000,
     users: int = 7,
-    timeout_sec: float = 120.0,
 ) -> DataFrame:
     """Per-user 1-minute windowed aggregation over the RATE source: the
     streaming plan is identical to the file-source jobs (watermark +
     window + agg) — only the reader differs, which is the point of the
-    source abstraction. The query stops once the deterministic finite
-    prefix has been committed; later batches are filtered out upstream,
-    so the complete-mode snapshot equals the batch twin's aggregation
+    source abstraction. The query ingests exactly the deterministic
+    finite prefix; rows past ``n_rows`` are filtered out upstream, so
+    the complete-mode snapshot equals the batch twin's aggregation
     exactly (pinned by pytest). Sums accumulate in integer deci-units
-    (exact, order-independent)."""
+    (exact, order-independent).
+
+    Under an availableNow trigger the rate-micro-batch source serves
+    one batch (``rows_per_batch`` rows) per run, so the prefix is
+    ingested by ``ceil(n_rows / rows_per_batch)`` runs that resume from
+    one checkpoint. Each run ends by itself on a batch boundary: no
+    query is ever stopped mid-batch, and there is no wall-clock poll."""
     import math
-    import time as _time
+    import shutil
+    import tempfile
 
     ev = read_rate_events(spark, rows_per_batch, advance_ms, users, limit_rows=n_rows)
     agg = (
@@ -1143,81 +1149,23 @@ def stream_rate_minutely(
         )
     )
     name = f"rate_minutely_sink_{next(_sink_ids)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    needed = math.ceil(n_rows / rows_per_batch) * rows_per_batch
-    deadline = _time.time() + timeout_sec
-    while _time.time() < deadline:
-        ingested = sum(p["numInputRows"] for p in q.recentProgress)
-        if ingested >= needed:
-            break
-        _time.sleep(0.2)
-    q.stop()
-    q.awaitTermination()
+    checkpoint = tempfile.mkdtemp(prefix="ifds_rate_minutely_")
+    try:
+        for _ in range(math.ceil(n_rows / rows_per_batch)):
+            (
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.table(name).select(
         F.col("w.start").alias("minute_ts"), "user_id", "n", "decivalue_sum"
     )
-
-
-def kafka_available(spark: SparkSession) -> bool:
-    """True iff the Kafka connector (spark-sql-kafka-0-10) is on the
-    classpath. ``load()`` resolves the data source without contacting
-    any broker, so this probe is offline-safe."""
-    try:
-        (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", "localhost:9092")
-            .option("subscribe", "__probe__")
-            .load()
-        )
-        return True
-    except Exception:
-        return False
-
-
-def read_kafka_json_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    schema,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """Kafka source (§2.9, the production non-file source): standard
-    ``format("kafka")`` reader with the value bytes parsed as JSON into
-    ``schema`` — the same (event columns + kafka_ts) shape the file and
-    rate readers emit, so every downstream job composes unchanged.
-
-    The connector jar is not bundled in this environment; construction
-    is lazy and ``load()`` raises Spark's standard missing-data-source
-    error when absent — probe with :func:`kafka_available` first. At
-    cluster scale add ``maxOffsetsPerTrigger`` to bound batch size and
-    ``minPartitions`` to fan partitions wider than the topic's.
-
-    PERMANENT environment blocker (VERDICT r16 item 8, closed r17):
-    vendoring ``spark-sql-kafka`` offline was attempted and the
-    sandbox has NO network egress at all (DNS resolution fails for
-    repo1.maven.org — verified with both curl and urllib on
-    2026-08-16), so an embedded-broker round-trip can never run here.
-    The probe-gated skip is the end state for this harness; a real
-    deployment drops the jar on the classpath and this reader works
-    unchanged. This item should not reappear in nice-to-have lists.
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return raw.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("j"),
-        F.col("timestamp").alias("kafka_ts"),
-    ).select("j.*", "kafka_ts")
 
 
 def stream_stream_click_purchase(
@@ -1699,26 +1647,6 @@ def stream_attribution(
             "credited_conversions"
         ),
     )
-
-
-def transform_with_state_available() -> bool:
-    """Probe for Spark 4's ``transformWithStateInPandas`` runtime
-    dependency (the TWS driver worker speaks protobuf to the JVM;
-    without the ``google.protobuf`` package the worker crashes at
-    init — verified empirically in this container). The engine's
-    custom stateful operators therefore ship on
-    ``applyInPandasWithState`` (stream_user_stats_stateful,
-    stream_rolling_anomaly), which has no such dependency; a
-    deployment with protobuf installed can port them to the TWS API
-    (ValueState/ListState/MapState + timers) without changing their
-    state algebra — the per-key fold is API-agnostic. Mirror of the
-    ``kafka_available`` connector-gate discipline."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def stream_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:

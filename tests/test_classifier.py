@@ -2,26 +2,11 @@
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.classifier import (
     WEIGHT_Q,
     hashed_linear_scores,
-    sigmoid_probability,
     synthetic_quality_weights,
-    train_quality_weights,
 )
-
-
-def _labeled_docs(spark, n=40):
-    """Separable fixture: 'good' docs use curated-ish vocab, 'bad' docs
-    use spammy vocab; no overlap so a linear model must separate."""
-    good = "the study presents careful analysis of results and methods"
-    bad = "click here win free money casino jackpot buy now offer"
-    rows = [(i, good + f" v{i % 5}", 1.0) for i in range(n)]
-    rows += [(n + i, bad + f" z{i % 5}", 0.0) for i in range(n)]
-    return spark.createDataFrame(rows, "doc_id long, text string, label double")
 
 
 def test_synthetic_weights_shape_and_range(spark):
@@ -59,37 +44,3 @@ def test_logit_is_exact_integer_dot_product(spark):
         assert out[doc_id]["logit_q"] == expect
         assert out[doc_id]["n_tokens"] == len(toks)
         assert out[doc_id]["logit"] == expect / (len(toks) * WEIGHT_Q)
-
-
-def test_trained_weights_separate_labeled_corpus(spark):
-    """End-to-end real-model path: MLlib LR on hashed features, weights
-    exported to the (bucket, w_q) broadcast shape, scored by the same
-    quantized operator — must separate the fixture perfectly."""
-    docs = _labeled_docs(spark)
-    weights, intercept = train_quality_weights(
-        docs, F.col("label") == 1.0, n_buckets=256
-    )
-    scored = hashed_linear_scores(
-        docs,
-        weights,
-        n_buckets=256,
-        bias_q=int(round(intercept * WEIGHT_Q)),
-        normalize_by_length=False,
-    )
-    joined = scored.join(docs.select("doc_id", "label"), "doc_id").collect()
-    for r in joined:
-        assert (r["logit_q"] > 0) == (r["label"] == 1.0), r
-
-
-def test_sigmoid_probability_matches_python(spark):
-    import math
-
-    df = spark.range(1).select(
-        *[
-            sigmoid_probability(F.lit(x)).alias(f"p{i}")
-            for i, x in enumerate([-3.0, -0.5, 0.0, 0.5, 3.0])
-        ]
-    )
-    row = df.collect()[0]
-    for i, x in enumerate([-3.0, -0.5, 0.0, 0.5, 3.0]):
-        assert row[f"p{i}"] == pytest.approx(1.0 / (1.0 + math.exp(-x)), abs=1e-12)

@@ -85,51 +85,6 @@ def test_multimodal_resize_and_frames_shapes(spark, sf_dir):
     assert bad == 0
 
 
-def test_claims_json_round_trip(spark, tmp_path):
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.readers import (
-        read_claims_csv,
-        read_claims_json,
-    )
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.writers import (
-        write_json,
-    )
-
-    csv_path = str(tmp_path / "claims.csv")
-    with open(csv_path, "w") as fh:
-        fh.write(
-            "Name,Aadhaar,ClaimAmount,SubsidyType,Date\n"
-            "Asha,100000000001,5000,LPG,2025-07-01\n"
-            "Ravi,100000000002,99999,Education,2025-07-02\n"
-        )
-    claims = read_claims_csv(spark, csv_path)
-    out = str(tmp_path / "claims_json")
-    write_json(claims, out)
-    back = read_claims_json(spark, out)
-    assert back.schema == claims.schema
-    key = lambda r: (r["Name"], r["Aadhaar"], r["ClaimAmount"], str(r["Date"]))  # noqa: E731
-    assert sorted(map(key, back.collect())) == sorted(map(key, claims.collect()))
-
-
-def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path):
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.readers import (
-        read_table,
-    )
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.writers import (
-        compact_parquet,
-    )
-    import os
-
-    o = read_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "fragmented")
-    o.repartition(40).write.parquet(path)  # simulate small-file buildup
-    before = sum(1 for f in os.listdir(path) if f.startswith("part-"))
-    assert before == 40
-    n = o.count()
-    after = compact_parquet(spark, path, target_file_mb=512, sort_within_by=["o_orderkey"])
-    assert after < before
-    assert spark.read.parquet(path).count() == n
-
-
 def _tiny_png(width: int, height: int) -> bytes:
     """A fully valid PNG built with stdlib only (signature + IHDR +
     IDAT + IEND), grayscale, all-zero pixels."""
@@ -229,39 +184,3 @@ def test_real_codec_requires_pil_when_absent():
         pytest.skip("PIL installed — gate is exercised by the PIL test")
     with pytest.raises(NotImplementedError):
         decode_assets(None, real_codec=True)
-
-
-def test_binary_file_source_feeds_multimodal_decode(spark, tmp_path):
-    """Directory-of-files ingestion: the binaryFile source reads raw
-    image/text files as binary rows, and the multimodal decode path
-    recovers REAL dims from the PNG header while text bytes fall back
-    to the deterministic stub — end-to-end from filesystem to typed
-    metadata."""
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.multimodal import (
-        decode_assets,
-        decode_image_stub,
-    )
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.readers import (
-        read_binary_assets,
-    )
-
-    png = _tiny_png(21, 13)
-    (tmp_path / "img.png").write_bytes(png)
-    (tmp_path / "note.txt").write_text("just text")
-    assets = read_binary_assets(spark, str(tmp_path))
-    rows = {r["uri"].rsplit("/", 1)[-1]: r for r in assets.collect()}
-    assert rows["img.png"]["modality"] == "image"
-    assert rows["img.png"]["mime"] == "image/png"
-    assert rows["note.txt"]["modality"] == "binary"
-    assert len(set(r["asset_id"] for r in rows.values())) == 2
-
-    decoded = {
-        r["asset_id"]: (r["width"], r["height"])
-        for r in decode_assets(assets).collect()
-    }
-    assert decoded[rows["img.png"]["asset_id"]] == (21, 13)
-    assert decoded[rows["note.txt"]["asset_id"]] == decode_image_stub(b"just text")
-
-    # pathGlobFilter prunes at planning time
-    only_png = read_binary_assets(spark, str(tmp_path), glob="*.png")
-    assert only_png.count() == 1

@@ -452,8 +452,7 @@ class TestSharedCounterpartyPairs:
 
 class TestCollusionCapAndReport:
     """VERDICT r12 item 1: the stop-counterparty cap ships ON in the
-    registered screens, with the hub-report truncation twin (the
-    minhash_bucket_report discipline)."""
+    registered screens, with the hub-report truncation twin."""
 
     # one hub (999) every entity pays, plus honest pairwise structure:
     # (1,2) share {10,11}; (5,6) share ONLY {999, 50} so the pair

@@ -135,58 +135,22 @@ def test_hits_precache_gate_is_byte_equal(spark):
     """r19: hits_quantized picks its edge layout (dual pre-partitioned
     caches vs one checkpoint) from a free Catalyst size estimate. The
     gate changes the physical layout only — both branches must be
-    byte-equal in both score modes."""
+    byte-equal."""
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.graph import (
         hits_quantized,
     )
 
     raw = [(1, 10), (1, 11), (2, 10), (2, 12), (3, 11), (3, 12)]
     edges = spark.createDataFrame(raw, "src long, dst long")
-    for bc in (False, True):
-        pre = sorted(
-            (r["node"], r["kind"], r["score_q"])
-            for r in hits_quantized(
-                edges, iters=2, broadcast_scores=bc, precache_min_bytes=0
-            ).collect()
-        )
-        ckpt = sorted(
-            (r["node"], r["kind"], r["score_q"])
-            for r in hits_quantized(
-                edges, iters=2, broadcast_scores=bc,
-                precache_min_bytes=1 << 60,
-            ).collect()
-        )
-        assert pre == ckpt
-
-
-def test_pagerank_round_checkpoint_mode_is_byte_equal(spark):
-    """r19 (VERDICT r18 item 5): the per-round localCheckpoint went
-    LAZY — materialization rides inside the next consumer's job instead
-    of a blocking count() per round. The flag changes job scheduling
-    only, never the ranks: eager and lazy must be byte-equal in both
-    broadcast and hash modes."""
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.graph import (
-        pagerank_quantized,
+    pre = sorted(
+        (r["node"], r["kind"], r["score_q"])
+        for r in hits_quantized(edges, iters=2, precache_min_bytes=0).collect()
     )
-
-    raw = [(1, 2), (2, 1), (2, 3), (3, 1), (3, 4), (4, 3), (4, 1), (1, 4)]
-    edges = spark.createDataFrame(raw, "src long, dst long")
-    for bc in (False, True):
-        lazy = {
-            r["node"]: r["r_q"]
-            for r in pagerank_quantized(
-                edges, iters=4, broadcast_ranks=bc,
-                eager_round_checkpoints=False,
-            ).collect()
-        }
-        eager = {
-            r["node"]: r["r_q"]
-            for r in pagerank_quantized(
-                edges, iters=4, broadcast_ranks=bc,
-                eager_round_checkpoints=True,
-            ).collect()
-        }
-        assert lazy == eager
+    ckpt = sorted(
+        (r["node"], r["kind"], r["score_q"])
+        for r in hits_quantized(edges, iters=2, precache_min_bytes=1 << 60).collect()
+    )
+    assert pre == ckpt
 
 
 class TestTriangleStats:
@@ -455,17 +419,6 @@ class TestLabelPropagation:
         # duplicates/reversed forms must not double-count neighbors
         self._run(spark, [(1, 2), (2, 1), (1, 2), (2, 3), (3, 1)], 4)
 
-    def test_broadcast_matches_hash_join(self, spark):
-        from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.graph import (
-            label_propagation,
-        )
-
-        edges = [(1, 2), (2, 3), (3, 4), (4, 1), (10, 11), (11, 12)]
-        df = spark.createDataFrame(edges, "id_a long, id_b long")
-        a = sorted(map(tuple, label_propagation(df, 3, broadcast_labels=True).collect()))
-        b = sorted(map(tuple, label_propagation(df, 3, broadcast_labels=False).collect()))
-        assert a == b
-
 
 class TestBfsDistances:
     @staticmethod
@@ -660,18 +613,15 @@ class TestHits:
         )
         hub, auth = self._python_hits_q(edges)
         df = spark.createDataFrame(edges, "src long, dst long")
-        for bc in (True, False):
-            rows = hits_quantized(df, iters=2, broadcast_scores=bc).collect()
-            got_h = {r["node"]: r["score_q"] for r in rows if r["kind"] == "hub"}
-            got_a = {
-                r["node"]: r["score_q"] for r in rows if r["kind"] == "authority"
-            }
-            assert got_h == hub
-            assert got_a == auth
-            # max-normalization pins the top node at exactly Q
-            assert max(got_h.values()) == 10**6 == max(got_a.values())
-            for r in rows:  # the double is the one pinned division
-                assert r["score"] == r["score_q"] / 1e6
+        rows = hits_quantized(df, iters=2).collect()
+        got_h = {r["node"]: r["score_q"] for r in rows if r["kind"] == "hub"}
+        got_a = {r["node"]: r["score_q"] for r in rows if r["kind"] == "authority"}
+        assert got_h == hub
+        assert got_a == auth
+        # max-normalization pins the top node at exactly Q
+        assert max(got_h.values()) == 10**6 == max(got_a.values())
+        for r in rows:  # the double is the one pinned division
+            assert r["score"] == r["score_q"] / 1e6
 
     def test_follows_the_float_direction(self, spark):
         """Quantized scores rank like textbook float HITS (L2-normed)."""
@@ -709,9 +659,7 @@ class TestPersonalizedPagerank:
         seeds = spark.createDataFrame([(1,), (99,)], "node long")  # 99 absent
         got = {
             r["node"]: r["r_q"]
-            for r in pagerank_quantized(
-                e, iters=5, seed_nodes=seeds, broadcast_ranks=True
-            ).collect()
+            for r in pagerank_quantized(e, iters=5, seed_nodes=seeds).collect()
         }
         # integer replica (the oracle arithmetic)
         q = 10**12
@@ -846,9 +794,7 @@ class TestStronglyConnectedComponents:
         }
         dist = {
             r["node"]: r["scc_id"]
-            for r in strongly_connected_components(
-                df, broadcast_nodes=True, driver_threshold=0
-            ).collect()
+            for r in strongly_connected_components(df, driver_threshold=0).collect()
         }
         assert fast == want
         assert dist == want
@@ -948,7 +894,7 @@ class TestStronglyConnectedComponents:
             got = {
                 r["node"]: r["scc_id"]
                 for r in strongly_connected_components(
-                    df, broadcast_nodes=True, driver_threshold=0, stats=stats
+                    df, driver_threshold=0, stats=stats
                 ).collect()
             }
             assert got == want
@@ -975,7 +921,7 @@ class TestStronglyConnectedComponents:
         got = {
             r["node"]: r["scc_id"]
             for r in strongly_connected_components(
-                df, broadcast_nodes=True, driver_threshold=0, stats=stats
+                df, driver_threshold=0, stats=stats
             ).collect()
         }
         assert got == {1: 1, 2: 1, 3: 1}

@@ -1,31 +1,12 @@
 """HTML main-content extraction (operators/html.py): hand-built pages
-with known block structure, boilerplate classification edges, and the
-tag-stripping scalar."""
+with known block structure and boilerplate classification edges."""
 
 from __future__ import annotations
 
 from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.html import (
     html_main_content,
-    strip_tags,
     wrap_documents_html,
 )
-
-
-def test_strip_tags(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [
-            (
-                "<html><head><script>var a = '<p>';</script>"
-                "<style>p { color: red }</style></head>"
-                "<body><p>Hello   <b>world</b></p></body></html>",
-            )
-        ],
-        "h string",
-    )
-    out = df.select(strip_tags(F.col("h")).alias("t")).first()
-    assert out["t"] == "Hello world"
 
 
 def _extract(spark, html):

@@ -220,31 +220,6 @@ def test_unigram_fluency_matches_naive_recompute(spark, sf_dir):
     assert all(0.0 < s <= 1.0 for s in scores)
 
 
-def test_jsonl_sharded_round_trip(spark, sf_dir, tmp_path):
-    """JSONL export must shard at the record cap without shuffling and
-    round-trip every row and value under the declared schema."""
-    import glob
-
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.readers import (
-        read_table,
-    )
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.writers import (
-        read_jsonl,
-        write_jsonl_sharded,
-    )
-
-    d = read_table(spark, sf_dir, "documents").repartition(2)
-    out = str(tmp_path / "export")
-    write_jsonl_sharded(d, out, max_records_per_shard=100)
-    shards = glob.glob(out + "/part-*.json.gz")
-    # 500 docs / 2 tasks -> 250 per task -> 3 files per task at cap 100
-    assert len(shards) >= 5
-    back = read_jsonl(spark, out, d.schema)
-    a = {tuple(r) for r in d.collect()}
-    b = {tuple(r) for r in back.collect()}
-    assert a == b and back.schema == d.schema
-
-
 def test_bigram_fluency_matches_python_and_orders_sequences(spark):
     """Differential: Spark bigram fluency == plain-Python reference on a
     fixture; and a doc whose bigrams the corpus has seen outranks a doc

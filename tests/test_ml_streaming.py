@@ -466,12 +466,16 @@ def test_score_is_independent_of_shuffle_width(spark, model_60):
         assert a[err] == pytest.approx(b[err], rel=1e-12, abs=0)
 
 
-def test_score_empty_batch_keeps_schema(spark, model_60):
+@pytest.mark.parametrize("scorer", ["autoencoder", "pca"])
+def test_score_empty_batch_keeps_schema(spark, model_60, scorer):
+    """Both scorers return 0 rows with the autoencoder's schema."""
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.schema import (
         CLAIMS_SCHEMA,
     )
 
-    empty = pipeline.score(spark.createDataFrame([], CLAIMS_SCHEMA), model_dir=model_60)
+    empty = pipeline.score(
+        spark.createDataFrame([], CLAIMS_SCHEMA), model_dir=model_60, scorer=scorer
+    )
     full = pipeline.score(claims_fixture(spark, n=3), model_dir=model_60)
     assert empty.schema == full.schema
     assert empty.count() == 0
@@ -561,28 +565,6 @@ def test_streaming_topk_trending_equals_batch(spark, sf_dir):
     got = to_set(stream_topk_trending(spark, sf_dir))
     want = to_set(batch)
     assert got == want and len(got) > 0
-
-
-def test_transform_with_state_gate(spark):
-    """transformWithStateInPandas (Spark 4's newest stateful API) is
-    protobuf-gated: the API surface must exist on GroupedData, the
-    probe must answer honestly, and — when the dependency is absent —
-    the engine's stateful operators run on applyInPandasWithState
-    instead (attested by the stateful tests above)."""
-    from pyspark.sql.group import GroupedData
-
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.streaming.jobs import (
-        transform_with_state_available,
-    )
-
-    assert hasattr(GroupedData, "transformWithStateInPandas")
-    avail = transform_with_state_available()
-    try:
-        import google.protobuf  # noqa: F401
-
-        assert avail
-    except ImportError:
-        assert not avail
 
 
 def test_drop_duplicates_within_watermark_bounded_state(spark, tmp_path):

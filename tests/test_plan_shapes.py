@@ -151,87 +151,6 @@ def test_sessionize_single_shuffle(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_salted_join_matches_plain_join(spark):
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.skew import (
-        salted_join,
-        two_phase_agg,
-    )
-
-    # hot key: 900 of 1000 rows share key 7
-    left = spark.range(1000).select(
-        F.when(F.col("id") < 900, F.lit(7)).otherwise(F.col("id")).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    right = spark.createDataFrame(
-        [(7, "hot"), (950, "cold"), (999, "cold2"), (12345, "unmatched")],
-        "k long, tag string",
-    )
-    plain = {
-        (r["k"], r["payload"], r["tag"])
-        for r in left.join(right, "k", "left").collect()
-    }
-    salted = {
-        (r["k"], r["payload"], r["tag"])
-        for r in salted_join(left, right, "k", how="left", salt=8).collect()
-    }
-    assert salted == plain
-
-    got = {
-        (r["k"]): (r["count_payload"], r["sum_payload"])
-        for r in two_phase_agg(
-            left, ["k"], {"payload": "sum"} | {}, salt=8
-        ).join(
-            two_phase_agg(left, ["k"], {"payload": "count"}, salt=8), "k"
-        ).collect()
-    }
-    want = {
-        r["k"]: (r["count_payload"], r["sum_payload"])
-        for r in left.groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("count_payload"),
-            F.sum("payload").alias("sum_payload"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.readers import (
-        read_table,
-    )
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.writers import (
-        write_bucketed_table,
-    )
-
-    o = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    write_bucketed_table(
-        o, "t_orders_b", ["o_custkey"], 8, path=str(tmp_path / "ob"),
-        sort_cols=["o_custkey"],
-    )
-    write_bucketed_table(
-        c.withColumnRenamed("c_custkey", "o_custkey"),
-        "t_cust_b", ["o_custkey"], 8, path=str(tmp_path / "cb"),
-        sort_cols=["o_custkey"],
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("t_orders_b").join(spark.table("t_cust_b"), "o_custkey")
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucketing pre-paid the shuffle
-        # and the result is still correct
-        assert joined.count() == o.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_cust_b")
-
-
 def test_partitioned_write_prunes_on_read(spark, sf_dir, tmp_path):
     from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.readers import (
         read_table,

@@ -90,28 +90,6 @@ def test_score_row_key_survives_recompute(spark, tmp_path):
     assert first == second
 
 
-def test_binary_asset_id_width(spark, tmp_path):
-    """ADVICE r7: asset_id is a 60-bit md5 prefix, not 32-bit — distinct
-    paths must be able to produce ids above 2^32, and ids must match the
-    first 15 md5 hex chars of the uri."""
-    import hashlib
-
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.sources.readers import (
-        read_binary_assets,
-    )
-
-    d = tmp_path / "assets"
-    d.mkdir()
-    for i in range(8):
-        (d / f"file_{i}.png").write_bytes(b"\x89PNG\r\n\x1a\n" + bytes([i]))
-    rows = read_binary_assets(spark, str(d)).select("asset_id", "uri").collect()
-    assert len(rows) == 8
-    for r in rows:
-        expect = int(hashlib.md5(r["uri"].encode()).hexdigest()[:15], 16)
-        assert r["asset_id"] == expect
-    assert max(abs(r["asset_id"]) for r in rows) > 2**32
-
-
 def test_bm25_cache_keys_distinct_per_query_terms():
     """ADVICE r7: two bm25 invocations with different terms must not
     share (and therefore evict) one cache slot."""
@@ -339,34 +317,6 @@ def test_expectations_detect_planted_violations(spark):
     for name, n in expect.items():
         assert out[name]["n_violations"] == n, name
         assert out[name]["passed"] is False
-
-
-def test_group_centroids_wide_matches_numpy(spark):
-    import numpy as np
-
-    from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.vectors import (
-        group_centroids,
-    )
-
-    rng = np.random.RandomState(3)
-    rows = [
-        (int(i % 3), [float(x) for x in rng.standard_normal(8)]) for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, "label long, embedding array<float>")
-    out = {r["label"]: r for r in group_centroids(df).collect()}
-    for g in (0, 1, 2):
-        # the column is array<float>: components round-trip float32
-        vs = np.array(
-            [np.array(v, dtype=np.float32) for lbl, v in rows if lbl == g]
-        ).astype(np.float64)
-        # quantized mean: floor each float32-as-double component * 1e6
-        q = np.floor(vs * 1e6).sum(axis=0) / (len(vs) * 1e6)
-        got = np.array(out[g]["centroid"])
-        assert out[g]["n_vectors"] == len(vs)
-        np.testing.assert_allclose(got, q, rtol=0, atol=1e-9)
-    n = group_centroids(df, normalize=True).collect()
-    for r in n:
-        assert abs(sum(x * x for x in r["centroid"]) - 1.0) < 1e-9
 
 
 def test_incremental_agg_merge_equals_full(spark):

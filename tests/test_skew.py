@@ -1,5 +1,5 @@
-"""Skew operators (operators/skew.py): salted decompositions must be
-EXACTLY equivalent to their plain forms on skewed fixtures."""
+"""Skew operators (operators/skew.py): the hash-sharded distinct count
+must be EXACTLY equivalent to the plain form on a skewed fixture."""
 
 from __future__ import annotations
 
@@ -7,8 +7,6 @@ from pyspark.sql import functions as F
 
 from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.operators.skew import (
     salted_distinct_count,
-    salted_join,
-    top_keys,
 )
 
 
@@ -32,26 +30,3 @@ def test_salted_distinct_count_matches_plain(spark):
         }
         assert salted == plain
     assert plain[0] == 700
-
-
-def test_salted_join_matches_plain_on_skewed_fixture(spark):
-    left = _skewed_fixture(spark).withColumnRenamed("v", "payload")
-    right = spark.createDataFrame(
-        [(k, f"dim{k}") for k in range(0, 15)], "k long, name string"
-    )
-    for how in ("inner", "left"):
-        plain = sorted(
-            (r["k"], r["payload"], r["name"])
-            for r in left.join(right, "k", how).collect()
-        )
-        salted = sorted(
-            (r["k"], r["payload"], r["name"])
-            for r in salted_join(left, right, "k", how=how, salt=8).collect()
-        )
-        assert salted == plain
-
-
-def test_top_keys_finds_the_hot_key(spark):
-    df = _skewed_fixture(spark)
-    top = top_keys(df, ["k"], k=3).collect()
-    assert top[0]["k"] == 0 and top[0]["n_rows"] == 5000

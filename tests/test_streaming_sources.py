@@ -1,17 +1,12 @@
 """Non-file streaming sources (SURVEY.md §2.9 source surface): the
-deterministic rate-micro-batch path equals its closed-form batch twin;
-the Kafka-shaped reader fails with the documented error when the
-connector is absent."""
+deterministic rate-micro-batch path equals its closed-form batch twin."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from intelligent_fraud_detection_system_using_machine_learning_and_hadoop_spark.streaming.jobs import (
-    kafka_available,
     rate_events_batch_twin,
-    read_kafka_json_stream,
     stream_rate_minutely,
 )
 
@@ -36,20 +31,6 @@ def test_rate_stream_equals_batch_twin(spark):
     }
     assert streamed == batch
     assert sum(n for n, _ in streamed.values()) == n_rows
-
-
-def test_kafka_reader_absent_connector(spark):
-    """The Kafka connector jar isn't bundled here: the probe must say
-    so, and the reader must raise Spark's missing-data-source error at
-    load() (construction itself is lazy and valid)."""
-    if kafka_available(spark):
-        pytest.skip("kafka connector present in this environment")
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("event_id", T.LongType())])
-    with pytest.raises(Exception) as exc:
-        read_kafka_json_stream(spark, "localhost:9092", "events", schema)
-    assert "kafka" in str(exc.value).lower()
 
 
 def test_stream_stream_join_equals_batch(spark, sf_dir):
